@@ -97,7 +97,7 @@ def _engine(ctx, store, pages_path: str, size: Size) -> CrawlEngine:
     )
 
 
-def measure(ctx, prepared: dict, cycle: int) -> dict:
+def measure(ctx, prepared: dict) -> dict:
     """Seed and the first epoch on engine A, then the resumed epoch on a
     fresh engine B. The crawl wall time sums the seed, the epochs and
     engine B's construction; the traced run's bloom probe between the
@@ -106,7 +106,7 @@ def measure(ctx, prepared: dict, cycle: int) -> dict:
     spark, tracer = ctx.spark, ctx.tracer
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     seeds = [M.listing_url(p) for p in range(1, size.n_pages + 1)]
-    store = SnapshotStore(ctx.work / f"state{cycle}", spark)
+    store = SnapshotStore(ctx.work / "state", spark)
     stats, epoch_s, pending_before, probes = [], [], [], []
     wall = 0.0
     done = 0
@@ -238,21 +238,17 @@ def check(ctx, prepared: dict, run: dict) -> list[tuple[str, bool, str]]:
     ]
 
 
-def detail(ctx, prepared: dict, runs: list[dict]) -> dict:
-    """The workload's own numbers (medians
-    over cycles; the epoch list holds every epoch)."""
-    ep = [d for r in runs for d in r["op_s"]]
-    resumed = [r["op_s"][1] for r in runs if len(r["op_s"]) > 1]
+def detail(ctx, prepared: dict, run: dict) -> dict:
+    """The workload's own numbers."""
+    ep = run["op_s"]
     return {
-        "crawl_wall_s": statistics.median(r["wall_s"] for r in runs),
-        "crawl_urls_per_s": statistics.median(
-            r["items"] / r["wall_s"] if r["wall_s"] else 0.0 for r in runs
-        ),
-        "urls_fetched": [r["items"] for r in runs],
+        "crawl_wall_s": run["wall_s"],
+        "crawl_urls_per_s": run["items"] / run["wall_s"] if run["wall_s"] else 0.0,
+        "urls_fetched": run["items"],
         "epoch_p50_s": statistics.median(ep) if ep else 0.0,
         "epoch_max_s": max(ep) if ep else 0.0,
         "epoch_samples": len(ep),
-        "resume_s": statistics.median(resumed) if resumed else 0.0,
+        "resume_s": ep[1] if len(ep) > 1 else 0.0,
         "epochs": [
             {
                 "epoch": s.epoch,
@@ -263,13 +259,12 @@ def detail(ctx, prepared: dict, runs: list[dict]) -> dict:
                 "pending_after": s.pending_after,
                 "politeness.deferred_ratio": (before - s.selected) / before if before else 0.0,
             }
-            for r in runs
-            for s, w, before in zip(r["stats"], r["op_s"], r["pending_before"])
+            for s, w, before in zip(run["stats"], ep, run["pending_before"])
         ],
     }
 
 
-def layers(ctx, runs: list[dict], log: dict | None) -> dict:
+def layers(ctx, run: dict, log: dict | None) -> dict:
     """Per-layer numbers from the spans and, on a traced run, from the
     event log. Each epoch splits at its ``SnapshotStore.commit`` call:
     select/fetch before it, the commit itself, and the bookkeeping after
@@ -293,10 +288,8 @@ def layers(ctx, runs: list[dict], log: dict | None) -> dict:
     }
     out["op.before_write_s"] = out["engine.select_fetch_s"]
     out["op.write_s"] = out["snapshots.commit_s"]
-    for r in runs:
-        for k, v in _written(r["store"].root).items():
-            out[k] = out.get(k, 0) + v
-    for p in (p for r in runs for p in r["probes"]):
+    out.update(_written(run["store"].root))
+    for p in run["probes"]:
         out["bloom.maybe_seen_ratio"] = p["maybe_seen_ratio"]
         out["bloom.exact_seen_ratio"] = p["exact_seen_ratio"]
     if log is not None:

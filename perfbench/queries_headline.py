@@ -2,24 +2,27 @@
 
 Same list, order, warm-up query and per-query clean-up as ``bench.py``
 (``HEADLINE`` and ``run_query`` are imported from it), over a table set
-generated from the workload seed (``tables.py``). Each query is split
-into construction (the builder call, including any eager jobs it runs),
-planning (the physical plan of the returned DataFrame) and execution
-(the ``noop`` write that ``run_query`` times). Outside the timed window
-every result is collected and compared with its DuckDB twin
-(``__spark_entry__.oracle_sql``) by row count and the order-insensitive
-hash of ``tools/check_oracle.py``.
+generated from the workload seed (``tables.py``). Each timed query is
+exactly ``run_query`` on the DataFrame the builder returns. Spans split
+it into construction (the builder call, including any eager jobs it
+runs) and execution (the ``noop`` write's ``save`` call); a traced run
+also plans the built DataFrame between the two.
+
+Outside the timed window, the queries this run checks (two, chosen by
+the seed, so that any eight consecutive seeds check all 15) are built
+and run again, collected and compared with their DuckDB twins
+(``__spark_entry__.oracle_sql``) by columns, row count and the
+order-insensitive hash of ``tools/check_oracle.py``.
 """
 
 from __future__ import annotations
 
-import gc
 import statistics
 import time
 import traceback
-from contextlib import ExitStack
 
 import duckdb
+from pyspark.sql.readwriter import DataFrameWriter
 
 import __spark_entry__ as entry
 from bench import HEADLINE, run_query
@@ -30,10 +33,24 @@ from .harness import per_name_totals, spark_totals
 
 WARMUP = "per_group_rollup"
 OP_PREFIXES = ("query:",)
+CHECKED_PER_RUN = 2
 SIZES = {"full": None, "tiny": {
     "customer": 150, "supplier": 10, "part": 200, "orders": 1500,
     "lineitem": 6000, "events": 1000, "documents": 60, "embeddings": 60,
 }}
+
+
+def instrument(tracer) -> None:
+    """A span around every ``DataFrameWriter.save`` call: the ``noop``
+    write ``run_query`` times."""
+    tracer.wrap(DataFrameWriter, "save", "exec")
+
+
+def checked(seed: int) -> list[str]:
+    """The headline queries a run with ``seed`` checks: consecutive ones
+    in ``HEADLINE`` order, starting at a position the seed sets."""
+    start = seed * CHECKED_PER_RUN
+    return [HEADLINE[(start + i) % len(HEADLINE)] for i in range(CHECKED_PER_RUN)]
 
 
 def setup(ctx) -> dict:
@@ -48,61 +65,44 @@ def setup(ctx) -> dict:
         sf_dir = tables.write(tbls, ctx.work / f"tables{rep}")
         persist_s.append(time.perf_counter() - t1)
         gen_s.append(t1 - t0)
-    queries = entry.queries()
     with ctx.tracer.span("warmup") as sp:
-        run_query(ctx.spark, queries[WARMUP], sf_dir)
+        run_query(ctx.spark, entry.queries()[WARMUP], sf_dir)
     return {"sf_dir": sf_dir, "gen_s": gen_s, "persist_s": persist_s, "warmup_s": sp["dur"]}
 
 
-def measure(ctx, prepared: dict, cycle: int) -> dict:
-    """``run_query`` per headline query; the builder passed to it times
-    construction and planning and opens the span the write runs in.
-    Each result is collected from the cache the timed write filled,
-    outside the timed window, before the next query starts."""
+def measure(ctx, prepared: dict) -> dict:
+    """``run_query`` per headline query, in ``HEADLINE`` order. Each
+    query's phases are the spans its builder and its write ran in."""
     spark, tracer, sf_dir = ctx.spark, ctx.tracer, prepared["sf_dir"]
     queries = entry.queries()
-    per_query, results = {}, {}
+    per_query = {}
     raised = 0
     for name in HEADLINE:
-        parts: dict = {}
-        with ExitStack() as stack:
-            stack.enter_context(tracer.span(f"query:{name}"))
 
-            def build(spark_, sf, name=name):
-                with tracer.span("construct") as sp:
-                    df = queries[name](spark_, sf)
-                parts["construct_s"] = sp["dur"]
-                with tracer.span("plan") as sp:
+        def build(spark_, sf, name=name):
+            with tracer.span("construct"):
+                df = queries[name](spark_, sf)
+            if ctx.trace:
+                with tracer.span("plan"):
                     df._jdf.queryExecution().executedPlan()
-                parts["plan_s"] = sp["dur"]
-                stack.enter_context(tracer.span("exec"))
-                # the noop write fills this cache, so the check below
-                # reads the timed execution's rows instead of running
-                # the query again
-                parts["df"] = df.persist()
-                return parts["df"]
+            return df
 
+        with tracer.span(f"query:{name}") as q:
             try:
                 wall = run_query(spark, build, sf_dir)
             except Exception:  # noqa: BLE001 - a raised query is counted, not fatal
                 traceback.print_exc()
                 raised += 1
                 continue
-        parts["wall_s"] = wall
-        parts["exec_s"] = wall - parts["construct_s"] - parts["plan_s"]
-        df = parts.pop("df")
-        with tracer.span(f"collect:{name}"):
-            results[name] = (df.columns, [tuple(r) for r in df.collect()])
-        df.unpersist()
-        del df
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        parts = {"wall_s": wall, "construct_s": 0.0, "plan_s": 0.0, "exec_s": 0.0}
+        for k in tracer.spans[q["id"] + 1:]:
+            if k["parent"] == q["id"]:
+                parts[f"{k['name']}_s"] += k["dur"]
         per_query[name] = parts
 
     walls = [p["wall_s"] for p in per_query.values()]
     return {
         "per_query": per_query,
-        "results": results,
         "wall_s": sum(walls),
         "op_s": walls,
         "items": len(walls),
@@ -112,35 +112,51 @@ def measure(ctx, prepared: dict, cycle: int) -> dict:
 
 
 def corrupt(ctx, run: dict) -> None:
-    """Fault injection for the benchmark's own tests: alter one value of
-    one query's result."""
-    cols, rows = run["results"]["pricing_summary"]
-    first = list(rows[0])
-    first[cols.index("count_order")] += 1
-    rows[0] = tuple(first)
+    """Fault injection for the benchmark's own tests: alter one row of
+    the first checked query's result."""
+    run["corrupt"] = checked(ctx.seed)[0]
+
+
+def _altered(rows: list[tuple], width: int) -> list[tuple]:
+    if not rows:
+        return [("~",) * width]
+    first, cell = list(rows[0]), rows[0][0]
+    if isinstance(cell, (int, float)) and not isinstance(cell, bool):
+        first[0] = cell + 1
+    elif isinstance(cell, str):
+        first[0] = cell + "~"
+    else:
+        first[0] = "~"
+    return [tuple(first)] + rows[1:]
 
 
 def check(ctx, prepared: dict, run: dict) -> list[tuple[str, bool, str]]:
-    """Every collected result against its DuckDB twin: same columns, row
-    count and order-insensitive hash."""
+    """The checked queries, run again and collected, against their
+    DuckDB twins: same columns, row count and order-insensitive hash."""
     sf_dir = prepared["sf_dir"]
-    oracles = entry.oracle_sql()
+    queries, oracles = entry.queries(), entry.oracle_sql()
     con = duckdb.connect()
     try:
         for t in tables.TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         out = []
-        for name in HEADLINE:
-            if name not in run["results"]:
-                out.append((f"{name} equals its DuckDB twin", False, "query raised"))
+        for name in checked(ctx.seed):
+            label = f"{name} equals its DuckDB twin"
+            try:
+                with ctx.tracer.span(f"check:{name}"):
+                    df = queries[name](ctx.spark, sf_dir)
+                    cols, rows = df.columns, [tuple(r) for r in df.collect()]
+            except Exception as e:  # noqa: BLE001 - a query that raises fails its check
+                traceback.print_exc()
+                out.append((label, False, f"raised {e!r}"))
                 continue
-            cols, rows = run["results"][name]
+            if run.get("corrupt") == name:
+                rows = _altered(rows, len(cols))
             cur = con.execute(oracles[name])
             dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
-            got, want = table_hash(rows, cols), table_hash(drows, dcols)
+            got, want = table_hash(rows, cols), table_hash(cur.fetchall(), dcols)
             out.append((
-                f"{name} equals its DuckDB twin",
+                label,
                 sorted(cols) == sorted(dcols) and got == want,
                 f"{got[0]} vs {want[0]} rows",
             ))
@@ -149,49 +165,48 @@ def check(ctx, prepared: dict, run: dict) -> list[tuple[str, bool, str]]:
         con.close()
 
 
-def detail(ctx, prepared: dict, runs: list[dict]) -> dict:
-    """The workload's own numbers (medians
-    over cycles)."""
-    walls = [d for r in runs for d in r["op_s"]]
+def detail(ctx, prepared: dict, run: dict) -> dict:
+    """The workload's own numbers."""
+    walls = run["op_s"]
     return {
-        "queries_total_s": statistics.median(r["wall_s"] for r in runs),
+        "queries_total_s": run["wall_s"],
         "query_p50_s": statistics.median(walls) if walls else 0.0,
         "query_max_s": max(walls) if walls else 0.0,
         "warmup_s": prepared["warmup_s"],
+        "checked": checked(ctx.seed),
     }
 
 
-def layers(ctx, runs: list[dict], log: dict | None) -> dict:
-    """Construction, planning and execution per query and in total
-    (medians over cycles); on a traced run also the jobs each phase ran
-    (totals over cycles)."""
-    pq = {
-        name: {k: statistics.median(r["per_query"][name][k] for r in runs) for k in parts}
-        for name, parts in runs[0]["per_query"].items()
-        if all(name in r["per_query"] for r in runs)
-    }
+def layers(ctx, run: dict, log: dict | None) -> dict:
+    """Construction, planning and execution per query and in total; the
+    largest gap between a query's wall time and the sum of its three
+    phases; on a traced run also the jobs each phase ran."""
+    pq = run["per_query"]
     out = {
         "query.construct_s": sum(p["construct_s"] for p in pq.values()),
         "query.plan_s": sum(p["plan_s"] for p in pq.values()),
         "query.exec_s": sum(p["exec_s"] for p in pq.values()),
+        "query.phase_gap_max": max(
+            (abs(1.0 - (p["construct_s"] + p["plan_s"] + p["exec_s"]) / p["wall_s"])
+             for p in pq.values()),
+            default=0.0,
+        ),
     }
     out["op.before_write_s"] = out["query.construct_s"] + out["query.plan_s"]
     out["op.write_s"] = out["query.exec_s"]
     for name, p in pq.items():
-        out[f"query.{name}.wall_s"] = p["wall_s"]
-        out[f"query.{name}.construct_s"] = p["construct_s"]
-        out[f"query.{name}.plan_s"] = p["plan_s"]
-        out[f"query.{name}.exec_s"] = p["exec_s"]
+        for k, v in p.items():
+            out[f"query.{name}.{k}"] = v
     if log is not None:
-        out["query.construct_jobs"] = spark_totals(log, tuple(
-            f"query:{n}/construct" for n in pq))["jobs"]
-        out["query.plan_jobs"] = spark_totals(log, tuple(f"query:{n}/plan" for n in pq))["jobs"]
-        out["query.exec_jobs"] = spark_totals(log, tuple(f"query:{n}/exec" for n in pq))["jobs"]
-        out["op.before_write_jobs"] = out["query.construct_jobs"] + out["query.plan_jobs"]
-        out["op.write_jobs"] = out["query.exec_jobs"]
+        phase_jobs = {
+            ph: spark_totals(log, tuple(f"query:{n}/{ph}" for n in pq))["jobs"]
+            for ph in ("construct", "plan", "exec")
+        }
+        out.update({f"query.{ph}_jobs": n for ph, n in phase_jobs.items()})
+        out["op.before_write_jobs"] = phase_jobs["construct"] + phase_jobs["plan"]
+        out["op.write_jobs"] = phase_jobs["exec"]
         for name in pq:
-            out[f"query.{name}.construct_jobs"] = spark_totals(
-                log, (f"query:{name}/construct",))["jobs"]
-            out[f"query.{name}.exec_jobs"] = spark_totals(log, (f"query:{name}/exec",))["jobs"]
+            for ph in ("construct", "exec"):
+                out[f"query.{name}.{ph}_jobs"] = spark_totals(log, (f"query:{name}/{ph}",))["jobs"]
         out["spark.per_call"] = per_name_totals(log, ["construct", "plan", "exec"])
     return out

@@ -12,7 +12,7 @@ Workloads (see perfbench/README.md for why each exists):
 Each run starts one Spark session on ``local[nproc]`` with bench.py's
 settings (64 shuffle partitions), sets its inputs up from the seed,
 runs the workload's operations one at a time (a closed loop with one
-client), checks every output outside the timed windows, and prints the
+client), checks its outputs outside the timed windows, and prints the
 result as the last line of standard output:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
@@ -51,10 +51,6 @@ REQUIRED = [
     "bench.py",
     "tools/check_oracle.py",
 ]
-# measured seconds of one cycle of each workload on the reference host
-# (4 cores); --seconds buys round(seconds / cycle) cycles, at least one,
-# so a run does the same work on a fast or a slow host
-CYCLE_S = {"crawl_polite": 45.0, "queries_headline": 30.0}
 SETUP_REPEATS = 3
 
 END_TO_END = {
@@ -116,6 +112,9 @@ def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True, choices=WORKLOADS)
     p.add_argument("--seed", required=True, type=int)
+    # part of the command's interface, and ignored: a run is one fixed
+    # unit of work (one crawl, one pass over the queries), so a change is
+    # compared with its parent on the same work on any host
     p.add_argument("--seconds", required=True, type=int)
     p.add_argument("--trace", required=True, type=int, choices=[0, 1])
     # for the benchmark's own tests: a tiny input, and a corrupted output
@@ -171,6 +170,9 @@ def run(ctx, args, harness, sampler, load_before, cpu_before) -> dict:
     from webscrape_neko_jirushi_spark.session import get_spark
 
     mod = importlib.import_module(f"perfbench.{ctx.workload}")
+    # bench.py puts spark.local.dir and its crawl state on /dev/shm; a run
+    # of this benchmark keeps every file inside its checkout instead
+    # (perfbench/README.md gives the cost on the crawl)
     conf = {
         "spark.local.dir": str(ctx.work / "spark-local"),
         "spark.sql.warehouse.dir": str(ctx.work / "warehouse"),
@@ -191,20 +193,17 @@ def run(ctx, args, harness, sampler, load_before, cpu_before) -> dict:
         setup_reps = [g + p for g, p in zip(prepared["gen_s"], prepared["persist_s"])]
         setup_s = session_s + statistics.median(setup_reps) + prepared.get("warmup_s", 0.0)
 
-        cycles = max(1, round(args.seconds / CYCLE_S[ctx.workload]))
-        runs = [mod.measure(ctx, prepared, c) for c in range(cycles)]
+        measured = mod.measure(ctx, prepared)
         peak_rss_mb = sampler.stop()
 
         t_check = time.perf_counter()
-        checks = []
-        for r in runs:
-            if args.inject_fault:
-                mod.corrupt(ctx, r)
-            try:
-                checks.extend(mod.check(ctx, prepared, r))
-            except Exception as e:  # noqa: BLE001 - a check that raises is a failed check
-                traceback.print_exc()
-                checks.append(("check raised", False, repr(e)))
+        if args.inject_fault:
+            mod.corrupt(ctx, measured)
+        try:
+            checks = mod.check(ctx, prepared, measured)
+        except Exception as e:  # noqa: BLE001 - a check that raises is a failed check
+            traceback.print_exc()
+            checks = [("check raised", False, repr(e))]
         check_s = time.perf_counter() - t_check
         for name, ok, note in checks:
             print(f"perfbench: {'ok  ' if ok else 'FAIL'} {name} ({note})", file=sys.stderr)
@@ -217,19 +216,17 @@ def run(ctx, args, harness, sampler, load_before, cpu_before) -> dict:
             print("perfbench: child processes still running after Spark stopped", file=sys.stderr)
 
     log = harness.read_event_log(ctx.work / "eventlog") if ctx.trace else None
-    ops = [d for r in runs for d in r["op_s"]]
-    wall = statistics.median(r["wall_s"] for r in runs)
-    items = statistics.median(r["items"] / r["wall_s"] if r["wall_s"] else 0.0 for r in runs)
-    attempted = sum(r["attempted"] for r in runs) + len(checks)
-    failed = sum(r["raised"] for r in runs) + sum(1 for _, ok, _ in checks if not ok)
+    ops, wall = measured["op_s"], measured["wall_s"]
+    attempted = measured["attempted"] + len(checks)
+    failed = measured["raised"] + sum(1 for _, ok, _ in checks if not ok)
 
     end_to_end = {
         "setup_s": setup_s,
         "wall_s": wall,
         "op_p50_s": statistics.median(ops) if ops else 0.0,
-        "items_per_s": items,
+        "items_per_s": measured["items"] / wall if wall else 0.0,
     }
-    layer = mod.layers(ctx, runs, log)
+    layer = mod.layers(ctx, measured, log)
     generic = {
         "session.start_s": session_s,
         "inputs.gen_s": statistics.median(prepared["gen_s"]),
@@ -255,11 +252,10 @@ def run(ctx, args, harness, sampler, load_before, cpu_before) -> dict:
         "metrics": {k: {"value": values[k], "unit": u} for k, u in declared.items()},
     }
     detail = {
-        **mod.detail(ctx, prepared, runs),
+        **mod.detail(ctx, prepared, measured),
         "end_to_end": end_to_end,
         "peak_rss_mb": peak_rss_mb,
         "error_rate": failed / attempted,
-        "cycles": cycles,
         "check_s": check_s,
         "run_s": _process_age_s(),
         "setup_repeats_s": setup_reps,

@@ -7,10 +7,11 @@ and ``embeddings``): the same columns and types, uniform keys, a
 ``dup``, and unit-length 64-dimension embeddings. Every value is a
 function of the seed, so one seed always gives the same files.
 
-Row counts are those of the ``sf0.01`` tier, except that ``documents``
-and ``embeddings`` are smaller: the DuckDB twins of the near-duplicate
-queries are quadratic in the document count, and they run on every
-benchmark run as the correctness check.
+Row counts are those of the ``sf0.01`` tier (500 documents), except
+that ``embeddings`` has the 2,000 vectors of ``sf0.1``. More documents
+do not fit a run: the DuckDB twin of ``simhash_near_dups``, which a run
+may have to check, takes 9 s at 500 documents, 39 s at 2,000 and 92 s
+at 5,000 on four cores (perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -45,8 +46,8 @@ SIZES = {
     "orders": 15000,
     "lineitem": 60000,
     "events": 10000,
-    "documents": 100,
-    "embeddings": 100,
+    "documents": 500,
+    "embeddings": 2000,
 }
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
