@@ -1480,10 +1480,12 @@ def q_sessionize_events(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ in the driver parquet; route through ltz
-    # (session tz pinned UTC) to get epoch seconds
-    secs = F.col("ts").cast("timestamp_ltz").cast("long")
-    gap = secs - F.lag(secs).over(w)
-    new_session = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+    # (session tz pinned UTC) to get epoch microseconds. The gap is
+    # compared exactly, as the twin's interval comparison does: whole
+    # seconds would drop the fraction of an 1800.5 s gap
+    micros = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    gap = micros - F.lag(micros).over(w)
+    new_session = F.when(gap.isNull() | (gap > 1_800_000_000), 1).otherwise(0)
     sessions = ev.withColumn("new_session", new_session).withColumn(
         "session_id",
         F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),

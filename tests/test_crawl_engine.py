@@ -164,3 +164,50 @@ def test_torn_commit_ignored(spark, mirror, tmp_path_factory):
     eng.url_seen().limit(1).write.mode("overwrite").parquet(str(orphan))
     eng2 = _make_engine(spark, mirror, tmp, "a")
     assert eng2.url_seen().count() == seen_before
+
+
+COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def test_cached_epoch_frames_coalesce(spark):
+    """The epoch's persist helper lets AQE shrink a small cached frame
+    below the shuffle-partition count; a plain persist keeps them all."""
+    from webscrape_neko_jirushi_spark.crawl.engine import _persist_coalesced
+
+    def frame():
+        return spark.range(100).groupBy((F.col("id") % 10).alias("k")).count()
+
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # one at a time: the cache manager would hand the second persist of
+    # the same plan the first one's cached relation
+    for persist, coalesces in ((_persist_coalesced, True), (lambda df: df.persist(), False)):
+        cached = persist(frame())
+        try:
+            n = cached.rdd.getNumPartitions()
+            assert n < n_shuffle if coalesces else n == n_shuffle
+        finally:
+            cached.unpersist()
+
+
+def test_epoch_restores_callers_cached_partitioning(spark, mirror, tmp_path, monkeypatch):
+    """run_epoch flips the cached-plan partitioning setting only around
+    its persist calls: after an epoch, and after one that raises, the
+    session holds the caller's value (or none, if the caller set none)."""
+    eng = _make_engine(spark, mirror, tmp_path)
+    eng.seed([M.listing_url(1)])
+    try:
+        spark.conf.set(COALESCE_CACHED, "false")
+        assert eng.run_epoch().selected > 0
+        assert spark.conf.get(COALESCE_CACHED, None) == "false"
+
+        def fail(self, *args, **kwargs):
+            raise RuntimeError("persist failed")
+
+        # the session's concrete DataFrame class overrides persist
+        monkeypatch.setattr(type(spark.range(1)), "persist", fail)
+        spark.conf.unset(COALESCE_CACHED)
+        with pytest.raises(RuntimeError, match="persist failed"):
+            eng.run_epoch()
+        assert spark.conf.get(COALESCE_CACHED, None) is None
+    finally:
+        spark.conf.unset(COALESCE_CACHED)

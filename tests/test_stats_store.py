@@ -122,3 +122,48 @@ def test_time_travel_read_at(spark, tmp_path):
     # vacuum respects surviving-version liveness: v4's data remains
     store.vacuum(0.0)
     assert vals(4) == [99]
+
+
+def _rows(store, table):
+    return sorted(r["x"] for r in store.read(table, SCHEMA).collect())
+
+
+def test_failed_write_leaves_head_and_tables_unchanged(spark, tmp_path):
+    """The commit's tables are written concurrently; one failed write
+    re-raises, and the manifest and HEAD do not move."""
+    import pytest
+
+    store = SnapshotStore(tmp_path / "s", spark)
+    store.commit(
+        1,
+        appends={"a": spark.range(3).withColumnRenamed("id", "x")},
+        replaces={"f": spark.range(5).withColumnRenamed("id", "x")},
+    )
+    good = spark.range(10, 12).withColumnRenamed("id", "x")
+    bad = spark.range(2).select(F.raise_error(F.lit("write failed")).cast("long").alias("x"))
+    with pytest.raises(Exception, match="write failed"):
+        store.commit(2, appends={"a": good, "b": bad}, replaces={"f": good})
+    assert (store.version(), store.epoch()) == (1, 1)
+    assert [v["version"] for v in store.versions()] == [1]
+    assert _rows(store, "a") == [0, 1, 2]
+    assert _rows(store, "f") == [0, 1, 2, 3, 4]
+    assert not store.has_data("b")
+
+
+def test_commit_writes_run_in_callers_job_group(spark, tmp_path):
+    """Every write job of a commit carries the caller's job group (and
+    with it the job description), though each runs on its own thread."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = SnapshotStore(tmp_path / "s", spark)
+    frames = {t: spark.range(n).withColumnRenamed("id", "x") for n, t in enumerate("abc", 1)}
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("snapshot-commit-test", "commit under a job group")
+    try:
+        store.commit(1, appends={"a": frames["a"], "b": frames["b"]}, replaces={"c": frames["c"]})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("snapshot-commit-test")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    assert [_rows(store, t) for t in "abc"] == [[0], [0, 1], [0, 1, 2]]

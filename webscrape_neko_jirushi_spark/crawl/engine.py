@@ -52,6 +52,29 @@ from .snapshots import SnapshotStore
 # columns, so the encoding only needs to be locally monotone.
 FANOUT = 4096
 SEEN_SHARDS = 64
+_COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _persist_coalesced(df: DataFrame) -> DataFrame:
+    """``df.persist()`` with AQE free to coalesce the cached plan's output
+    partitions. An epoch's cached frames hold a few hundred to a few
+    thousand rows; pinned at the shuffle-partition count, every stage
+    that reads them runs that many near-empty tasks, and each task that
+    feeds a Python worker pays its start-up cost. The setting is read
+    when ``persist()`` plans the cached query, so it is flipped only
+    around that call and the caller's value is restored; the session
+    default stays off (a session-wide flip also re-plans the analytics
+    queries' cached self-joins)."""
+    conf = df.sparkSession.conf
+    prev = conf.get(_COALESCE_CACHED, None)
+    conf.set(_COALESCE_CACHED, "true")
+    try:
+        return df.persist()
+    finally:
+        if prev is None:
+            conf.unset(_COALESCE_CACHED)
+        else:
+            conf.set(_COALESCE_CACHED, prev)
 
 
 class MirrorFetcher:
@@ -241,10 +264,9 @@ class CrawlEngine:
             self.spark, self.base_url, ranges, step, depth=depth, epoch=epoch
         )
         frontier = self.frontier()
-        new = (
+        new = _persist_coalesced(
             probes.join(self.url_seen().select("url_hash"), "url_hash", "left_anti")
             .join(frontier.select("url_hash"), "url_hash", "left_anti")
-            .persist()
         )
         n = new.count()
         if n:
@@ -258,13 +280,17 @@ class CrawlEngine:
 
     def _ensure_bloom(self) -> BloomShards | CuckooShards | None:
         """Driver-incremental bloom/cuckoo; distributed rebuild only on
-        resume (both filters build per-shard via applyInPandas)."""
+        resume (both filters build per-shard via applyInPandas). A store
+        whose manifest holds no ``url_seen`` dir (a fresh crawl: ``seed``
+        commits only the frontier) starts from an empty filter instead
+        of running the build over an empty table."""
         if self._bloom is None:
-            seen = self.url_seen()
+            resume = self.store.has_data("url_seen")
             if self.use_cuckoo:
-                if self.store.version() > 0:
+                if resume:
                     # size shards for the seen count at ~80% target load
                     # (insert failure raises rather than dropping keys)
+                    seen = self.url_seen()
                     n = seen.count()
                     per_shard = max(1, (n // 16) + 1)
                     buckets = 1 << max(
@@ -275,10 +301,10 @@ class CrawlEngine:
                     )
                 else:
                     self._bloom = CuckooShards.empty(n_shards=16, n_buckets=1 << 16)
-            elif self.store.version() > 0:
+            elif resume:
                 # resume path: one distributed build over the seen table
                 self._bloom = BloomShards.build(
-                    seen, n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
+                    self.url_seen(), n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
                 )
             else:
                 self._bloom = BloomShards.empty(
@@ -313,9 +339,9 @@ class CrawlEngine:
         # ONE cached DataFrame carries the bloom probe + ranking window;
         # selected/deferred are cheap filters over it (without this the
         # frontier commit recomputes the whole selection pipeline)
-        annotated = select_budget_annotated(
-            candidates, self.host_budget, self.n_salts
-        ).persist()
+        annotated = _persist_coalesced(
+            select_budget_annotated(candidates, self.host_budget, self.n_salts)
+        )
         selected = annotated.filter(F.col("chosen"))
         deferred = annotated.filter(~F.col("chosen")).drop(
             "chosen", "slot", "seq_in_host", "scheduled_ms", "shard",
@@ -335,7 +361,7 @@ class CrawlEngine:
         # persist only body-free columns: bodies are huge and flow ONLY
         # into span extraction (one streaming pass join -> Arrow -> UDF);
         # caching them would dominate memory + serialization time
-        fetched = fetched_full.drop("body").persist()
+        fetched = _persist_coalesced(fetched_full.drop("body"))
         # one combined count job (replaces separate count()s per branch)
         counts = fetched.agg(
             F.count("*").alias("n"),
@@ -355,11 +381,13 @@ class CrawlEngine:
         profiles = fetched_full.filter(
             (F.col("status_code") == 200) & (F.col("kind") == "profile")
         )
-        docs_with_meta = extract_spans(
-            profiles.select("url", "body", "api_image_1", "depth", "priority"),
-            self.base_url,
-            passthrough=True,
-        ).persist()
+        docs_with_meta = _persist_coalesced(
+            extract_spans(
+                profiles.select("url", "body", "api_image_1", "depth", "priority"),
+                self.base_url,
+                passthrough=True,
+            )
+        )
         docs = docs_with_meta.select("doc_id", "spans")
 
         # discoveries -----------------------------------------------------
@@ -429,9 +457,11 @@ class CrawlEngine:
             .select([f.name for f in schemas.FRONTIER.fields])
         )
 
-        new_frontier = deferred.select(
-            [f.name for f in schemas.FRONTIER.fields]
-        ).unionByName(discoveries).persist()
+        new_frontier = _persist_coalesced(
+            deferred.select([f.name for f in schemas.FRONTIER.fields]).unionByName(
+                discoveries
+            )
+        )
 
         # commit ----------------------------------------------------------
         seen_append = fetched.select(

@@ -1,13 +1,17 @@
-"""Atomic multi-table snapshot store (SURVEY.md §2.9 T2; S10/S11 —
-the JSON-state read/write sinks become manifest+parquet snapshots).
+"""Iceberg-style snapshot store (swap point): atomic multi-table
+snapshots of parquet behind a manifest pointer, not Iceberg itself
+(SURVEY.md §2.9 T2; S10/S11 — the JSON-state read/write sinks become
+manifest+parquet snapshots).
 
 The reference checkpoints by rewriting two JSON files non-atomically
 (comprehensive_scraper.py:82-96,317-326) — a crash between the writes
 tears the state. Here every epoch commits all state tables in ONE
 atomic step, the Iceberg pattern reduced to its core:
 
-- each table version is an immutable parquet directory;
-- a manifest (JSON) pins the exact directory set per table;
+- each table version is an immutable parquet directory; a commit
+  writes its tables' directories concurrently, one Spark job each;
+- a manifest (JSON) pins the exact directory set per table, and one
+  manifest swap publishes all of a commit's directories together;
 - HEAD is a tiny pointer file swapped with ``os.replace`` (atomic on
   POSIX) — readers only ever see a fully-committed manifest.
 
@@ -23,10 +27,16 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
+
+
+def _data_dir(table: str, epoch: int) -> str:
+    return f"{table}-{epoch:06d}-{uuid.uuid4().hex[:8]}"
 
 
 class SnapshotStore:
@@ -53,10 +63,17 @@ class SnapshotStore:
         m = self._head()
         return m["epoch"] if m else 0
 
+    def _dirs(self, table: str) -> list[str]:
+        return (self._head() or {}).get("tables", {}).get(table, [])
+
+    def has_data(self, table: str) -> bool:
+        """Whether HEAD lists any data dir for ``table``: read from the
+        manifest, without a Spark job."""
+        return bool(self._dirs(table))
+
     def read(self, table: str, schema: T.StructType) -> DataFrame:
         """Committed contents of ``table`` (empty DF if never written)."""
-        m = self._head()
-        dirs = (m or {}).get("tables", {}).get(table, [])
+        dirs = self._dirs(table)
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(
@@ -75,7 +92,10 @@ class SnapshotStore:
 
         ``appends`` add a directory to the table's set; ``replaces``
         swap the whole set (used for the pending frontier, which shrinks).
-        A crash before the final ``os.replace`` leaves HEAD untouched.
+        The data dirs are written concurrently, one Spark job per table,
+        and published together by one manifest swap once every write has
+        succeeded; a failed write re-raises with HEAD untouched, and so
+        does a crash before the final ``os.replace``.
         ``write_partitions`` coalesces each write (small-state epochs
         produce 1-8 files instead of one per shuffle partition; leave
         None on clusters where wide writes are wanted).
@@ -93,16 +113,26 @@ class SnapshotStore:
         # data dirs first, OUTSIDE the commit lock: uuid-named, so
         # concurrent writers can never collide on a directory, and the
         # (long) Spark writes never block another store's commit
-        written_replaces: list[tuple[str, str]] = []
-        written_appends: list[tuple[str, str]] = []
-        for name, df in (replaces or {}).items():
-            d = f"{name}-{epoch:06d}-{uuid.uuid4().hex[:8]}"
-            _write(df, d)
-            written_replaces.append((name, d))
-        for name, df in (appends or {}).items():
-            d = f"{name}-{epoch:06d}-{uuid.uuid4().hex[:8]}"
-            _write(df, d)
-            written_appends.append((name, d))
+        replaces, appends = replaces or {}, appends or {}
+        written_replaces = [(name, _data_dir(name, epoch)) for name in replaces]
+        written_appends = [(name, _data_dir(name, epoch)) for name in appends]
+        writes = [(replaces[n], d) for n, d in written_replaces] + [
+            (appends[n], d) for n, d in written_appends
+        ]
+        # one thread per table: a small epoch's writes are mostly
+        # per-job fixed cost, which overlaps across concurrent jobs. Each
+        # target is wrapped on its own so it gets its own copy of the
+        # caller's local properties (job description, job group, tags):
+        # one shared copy would race on the per-query execution id.
+        with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(_write), df, d)
+                for df, d in writes
+            ]
+        # every write has finished here; a failed one re-raises before
+        # the manifest and HEAD move
+        for f in futures:
+            f.result()
 
         # the read-version -> write-manifest -> swap-HEAD section runs
         # under the flock (index_store._commit_lock): racing commits
