@@ -321,7 +321,7 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
             [float(x) for x in r["embedding"]]
             for r in e.filter(F.col("vec_id") < n_cells).collect()
         ]
-        flags = dedup.semantic_dedup(e, cents, tau=0.92, materialize=True)
+        flags = dedup.semantic_dedup(e, cents, tau=0.92)
         return flags.agg(
             F.count("*").alias("n"),
             F.sum(F.col("kept").cast("int")).alias("n_kept"),
@@ -495,7 +495,7 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
         # and score the full corpus through the broadcast model joins
         # — expected ~linear in corpus tokens. Terminal agg forces
         # the scoring joins
-        return lm.lm_perplexity(docs, materialize=True).agg(
+        return lm.lm_perplexity(docs).agg(
             F.sum("n_tokens").alias("n_tokens"),
             F.round(F.avg("nll"), 4).alias("avg_nll"),
         )

@@ -3032,7 +3032,7 @@ def q_lm_perplexity(spark, sf_dir):
     the identical smoothed probabilities (same IEEE double ordering)
     in DuckDB."""
     d = load(spark, sf_dir, "documents")
-    return lm.lm_perplexity(d, carry_cols=("lang",), materialize=True)
+    return lm.lm_perplexity(d, carry_cols=("lang",))
 
 
 @q(
@@ -3063,7 +3063,7 @@ def q_ccnet_quality_buckets(spark, sf_dir):
     path classifies against sampled thresholds map-side (module
     docstring)."""
     d = load(spark, sf_dir, "documents")
-    scored = lm.lm_perplexity(d, carry_cols=("lang",), materialize=True)
+    scored = lm.lm_perplexity(d, carry_cols=("lang",))
     return lm.ccnet_bucket_stats(scored, by="lang")
 
 
@@ -3562,8 +3562,9 @@ def q_boilerplate_strip_stats(spark, sf_dir):
     - per-host pass fuses n_pages (countDistinct) with the before
       count (n_spans) in one aggregation;
     - flagged keys = per-span join per-host with the SAME
-      (page_frac > 0.5 AND n_pages >= 5) predicate boilerplate_keys
-      computes (long/long division is double in both engines);
+      (page_frac > PAGE_FRAC AND n_pages >= MIN_PAGES) predicate
+      boilerplate_keys computes, on the module's own thresholds
+      (long/long division is double in both engines);
     - n_kept = broadcast anti-join of the proxy against the flagged
       (host, md5) pairs — identical survivors to strip_boilerplate
       because the anti-join key is exactly (host, md5(text)).
@@ -3585,8 +3586,8 @@ def q_boilerplate_strip_stats(spark, sf_dir):
     flagged = (
         per_span.join(per_host.select("host", "_np"), "host")
         .filter(
-            (F.col("_nps") / F.col("_np") > F.lit(0.5))
-            & (F.col("_np") >= F.lit(5))
+            (F.col("_nps") / F.col("_np") > F.lit(boilerplate.PAGE_FRAC))
+            & (F.col("_np") >= F.lit(boilerplate.MIN_PAGES))
         )
         .select("host", "_k")
     )
@@ -4274,9 +4275,7 @@ def q_semantic_dedup_flags(spark, sf_dir):
         for r in e.filter(F.col("vec_id") < 8).collect()
     }
     centroids = [small[i] for i in sorted(small)]
-    flags = dedup.semantic_dedup(
-        corpus, centroids, tau=0.92, materialize=True
-    )
+    flags = dedup.semantic_dedup(corpus, centroids, tau=0.92)
     return flags.select(
         "vec_id", "cell", F.round("ccos", 6).alias("ccos"), "kept"
     )
@@ -5714,9 +5713,7 @@ def q_source_overlap_exact(spark, sf_dir):
         splits=scan_splits(spark, f"{sf_dir}/documents.parquet"),
     )
     return ov_mod.source_overlap_exact(
-        ov_mod.source_shingle_hashes(d, k_shingle=5),
-        # r6: the distinct hash set feeds three consumers — known-small
-        materialize=True,
+        ov_mod.source_shingle_hashes(d, k_shingle=5)
     )
 
 

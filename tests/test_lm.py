@@ -107,9 +107,7 @@ def test_duckdb_twin(spark, docs):
     block on the same rows (the driver gate's exact comparison)."""
     got = {
         r["doc_id"]: (r["lang"], r["n_tokens"], r["nll"], r["ppl"])
-        for r in lm.lm_perplexity(
-            docs, carry_cols=("lang",), materialize=True
-        ).collect()
+        for r in lm.lm_perplexity(docs, carry_cols=("lang",)).collect()
     }
     con = duckdb.connect()
     con.register(

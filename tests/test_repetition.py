@@ -97,9 +97,12 @@ def test_gopher_filter_reasons(spark, docs):
     assert strict[1] == "too_few_words"
 
 
-def test_repetition_matches_duckdb_twin(spark, docs):
+def test_repetition_matches_duckdb_twin(spark):
     import duckdb
 
+    # beyond DOCS: bigrams but no trigrams, and the empty string
+    twin_docs = DOCS + [(5, "one two"), (6, "")]
+    docs = spark.createDataFrame(twin_docs, "doc_id long, text string")
     got = sorted(
         tuple(r)
         for r in repetition.repetition_stats(docs, ngrams=(2, 3)).collect()
@@ -107,7 +110,7 @@ def test_repetition_matches_duckdb_twin(spark, docs):
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", DOCS)
+    con.executemany("INSERT INTO documents VALUES (?, ?)", twin_docs)
 
     def gram_branch(n: int) -> str:
         h = portable_hash64_sql(f"array_to_string(w[i : i + {n - 1}], ' ')")
@@ -165,28 +168,3 @@ def test_repetition_matches_duckdb_twin(spark, docs):
     )
     assert got == want
 
-
-def test_single_scan_variant_is_output_identical(spark):
-    """repetition_stats(single_scan=True) carries base metrics through
-    the explode instead of re-scanning + joining — must be row- and
-    column-identical, including gram-less docs (empty / too short)."""
-    from webscrape_neko_jirushi_spark.text.repetition import repetition_stats
-
-    docs = spark.createDataFrame(
-        [
-            ("d1", "the cat sat on the mat the cat sat again and again"),
-            ("d2", "one two"),  # has 2-grams, no 4-grams
-            ("d3", "word"),  # no n-grams at all
-            ("d4", ""),  # empty
-            ("d5", "spam spam spam spam spam spam spam spam spam spam"),
-        ],
-        "doc_id string, text string",
-    )
-    a = sorted(
-        repetition_stats(docs, (2, 3, 4)).collect(), key=lambda r: r["doc_id"]
-    )
-    b = sorted(
-        repetition_stats(docs, (2, 3, 4), single_scan=True).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]

@@ -99,22 +99,6 @@ def test_semantic_dedup_prunes_planted_duplicates(spark, corpus):
     assert res[1] != res[2001]
 
 
-def test_semantic_dedup_materialize_same_result(spark, corpus):
-    centroids = [corpus[0], corpus[5], corpus[10], corpus[15]]
-    df = spark.createDataFrame(
-        [(k, v) for k, v in corpus.items()], "vec_id long, embedding array<double>"
-    )
-    plain = sorted(
-        dedup.semantic_dedup(df, centroids, tau=0.9).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    mat = sorted(
-        dedup.semantic_dedup(df, centroids, tau=0.9, materialize=True).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    assert [tuple(r) for r in plain] == [tuple(r) for r in mat]
-
-
 def test_arrow_path_matches_literal_path(spark, corpus):
     """The >128-centroid Arrow matmul assign must be row-identical to
     the literal-Column form (cell, ccos, AND the kept flags) — forced

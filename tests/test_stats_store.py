@@ -43,7 +43,7 @@ def test_snapshot_vacuum_reclaims_orphans_keeps_committed(spark, tmp_path):
         # replaces: each epoch's dir supersedes the previous (shrinking
         # frontier pattern), so epochs 1-2 become orphaned history
         df = spark.range(epoch * 10).withColumnRenamed("id", "x")
-        store.commit(epoch, replaces={"t": df}, write_partitions=1)
+        store.commit(epoch, replaces={"t": df})
     # kill-mid-commit simulation: a data dir written but never named by
     # any manifest (commit crashes before the HEAD swap)
     orphan = store.root / "data" / "t-000009-deadbeef"
@@ -76,7 +76,7 @@ def test_archive_snapshot_is_consistent_and_restorable(spark, tmp_path):
 
     store = SnapshotStore(tmp_path / "st", spark)
     df = spark.range(0, 100).select(F.col("id").cast("long").alias("id"))
-    store.commit(1, replaces={"tbl": df}, write_partitions=2)
+    store.commit(1, replaces={"tbl": df})
     out = archive_snapshot(store, str(tmp_path / "backup.zip"))
 
     dest = tmp_path / "restored"

@@ -160,7 +160,6 @@ class CrawlEngine:
         n_salts: int = 4,
         fetch_images: bool = True,
         bloom_fpr: float = 0.01,
-        write_partitions: int | None = 8,
         collect_stats: bool = True,
         robots_map: dict[str, list[str]] | None = None,
         use_cuckoo: bool = False,
@@ -173,7 +172,6 @@ class CrawlEngine:
         self.n_salts = n_salts
         self.fetch_images = fetch_images
         self.bloom_fpr = bloom_fpr
-        self.write_partitions = write_partitions
         # False skips the optional per-epoch bookkeeping counts
         # (documents/discoveries in EpochStats become -1) — fewer
         # driver-serial jobs on the throughput path
@@ -271,9 +269,7 @@ class CrawlEngine:
         n = new.count()
         if n:
             self.store.commit(
-                epoch,
-                replaces={"frontier": frontier.unionByName(new)},
-                write_partitions=self.write_partitions,
+                epoch, replaces={"frontier": frontier.unionByName(new)}
             )
         new.unpersist()
         return n
@@ -349,9 +345,10 @@ class CrawlEngine:
         )
         if getattr(self.fetcher, "salted_input", True):
             # salted repartition: spread one host's fetch work across
-            # shards while select_budget's slot arithmetic keeps the
-            # per-host politeness schedule exact (SURVEY §7.2 crux).
-            # Join-based fetchers skip this (they reshuffle by url).
+            # shards while select_budget_annotated's slot arithmetic
+            # keeps the per-host politeness schedule exact (SURVEY
+            # §7.2 crux). Join-based fetchers skip this (they
+            # reshuffle by url).
             selected = selected.repartition(
                 max(self.spark.sparkContext.defaultParallelism, self.n_salts),
                 "host",
@@ -532,7 +529,6 @@ class CrawlEngine:
             epoch,
             appends=appends,
             replaces={"frontier": new_frontier},
-            write_partitions=self.write_partitions,
         )
         # post-commit bookkeeping: counts on persisted/parquet-metadata
         # inputs (cheap jobs) + distributed bloom delta: executors fold

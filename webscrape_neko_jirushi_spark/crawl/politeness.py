@@ -8,8 +8,9 @@ host, one thread, ~0.2 pages/s. The engine keeps the *invariant*
 (per-host: ≤ budget fetches per epoch, ≥ min_delay between fetches)
 while parallelizing across hosts AND across salt shards within a host:
 
-1. ``select_budget``: per (host, epoch) take the top ``max_per_epoch``
-   pending URLs by (depth, priority, url_hash); assign each a slot
+1. ``select_budget_annotated``: per (host, epoch) mark the top
+   ``max_per_epoch`` pending URLs by (depth, priority, url_hash) as
+   ``chosen`` (the rest are deferred); assign each a slot
    k = 0..B-1 and a virtual ``scheduled_ms = k * min_delay_ms`` — the
    per-host token-bucket schedule.
 2. ``salt_for_parallelism``: shard = slot % n_salts. Shard i's slots
@@ -109,21 +110,6 @@ def select_budget_annotated(
         .drop("_psalt", "_lrn")
         .unionByName(annotated_free)
     )
-
-
-def select_budget(
-    candidates: DataFrame,
-    host_budget: DataFrame,
-    n_salts: int = 4,
-) -> tuple[DataFrame, DataFrame]:
-    """(selected, deferred) view of ``select_budget_annotated``."""
-    annotated = select_budget_annotated(candidates, host_budget, n_salts)
-    selected = annotated.filter(F.col("chosen"))
-    deferred = annotated.filter(~F.col("chosen")).drop(
-        "chosen", "slot", "seq_in_host", "scheduled_ms", "shard",
-        "max_per_epoch", "min_delay_ms",
-    )
-    return selected, deferred
 
 
 def parse_robots(text: str, user_agent: str = "*") -> list[tuple[str, bool]]:

@@ -77,7 +77,6 @@ def recrawl_expired(engine: CrawlEngine, ttl_epochs: int) -> int:
     engine.store.commit(
         current,
         replaces={"url_seen": new_seen, "frontier": frontier},
-        write_partitions=engine.write_partitions,
     )
     # filter state: cuckoo shards (engine use_cuckoo=True) support
     # delete — expired hashes are removed per-shard in applyInPandas

@@ -86,7 +86,6 @@ class SnapshotStore:
         epoch: int,
         appends: dict[str, DataFrame] | None = None,
         replaces: dict[str, DataFrame] | None = None,
-        write_partitions: int | None = None,
     ) -> int:
         """Write new data dirs, then atomically publish a new manifest.
 
@@ -96,18 +95,14 @@ class SnapshotStore:
         and published together by one manifest swap once every write has
         succeeded; a failed write re-raises with HEAD untouched, and so
         does a crash before the final ``os.replace``.
-        ``write_partitions`` coalesces each write (small-state epochs
-        produce 1-8 files instead of one per shuffle partition; leave
-        None on clusters where wide writes are wanted).
+        A write's file count follows the frame's own partitioning: the
+        crawl engine's epoch frames are cached with AQE coalescing
+        (``engine._persist_coalesced``), so a small epoch writes a few
+        files and a large one stays wide. There is no knob; a fixed
+        repartition would add a shuffle stage and suit only one scale.
         """
 
         def _write(df: DataFrame, d: str) -> None:
-            if write_partitions:
-                # repartition, NOT coalesce: coalesce would collapse the
-                # upstream stages (extraction, joins) to this parallelism;
-                # a round-robin shuffle of the small output rows keeps
-                # upstream wide and still yields few output files
-                df = df.repartition(write_partitions)
             df.write.mode("overwrite").parquet(str(self.root / "data" / d))
 
         # data dirs first, OUTSIDE the commit lock: uuid-named, so

@@ -957,18 +957,17 @@ def embedding_near_dups(
     vec_col: str = "embedding",
     tau: float = 0.95,
     candidates: DataFrame | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Cosine >= tau pairs. Brute-force cross join at small scale;
     at 100 TB pre-bucket with ``similarity.lsh_buckets`` and pass the
     bucket pairs as ``candidates``.
 
-    ``materialize=True`` (candidate path only) localCheckpoints the
-    normed vector table — it is consumed by BOTH hydration joins, and
-    lazily each join side re-derives the whole corpus pipeline — and
-    broadcast-hints the two join builds (same known-small opt-in
-    contract as ``bucket_pairs``: safe while the vector table fits the
-    executors; the default shuffle join scales)."""
+    The candidate path hydrates both pair sides with plain equi-joins
+    over the lazy normed vector table: no checkpoint and no broadcast
+    hint, so the joins stay shuffle joins that scale with the corpus
+    (Catalyst/AQE may still broadcast a small table). A checkpoint
+    plus hinted-broadcast variant was A/B'd in r6 at 2.4k vectors with
+    no stable win, and its forced broadcast is unsafe at scale."""
     norm = F.sqrt(
         F.aggregate(
             F.col(vec_col),
@@ -979,8 +978,6 @@ def embedding_near_dups(
     e = embeddings.select(
         F.col(id_col), F.col(vec_col), norm.alias("nrm")
     )
-    if candidates is not None and materialize:
-        e = e.localCheckpoint(eager=True)
     if candidates is not None:
         # Candidate-driven verify: hydrate both sides of each candidate
         # pair with two equi-joins — the quadratic pair space never
@@ -996,8 +993,6 @@ def embedding_near_dups(
             F.col(vec_col).alias("_vec_b"),
             F.col("nrm").alias("_nrm_b"),
         )
-        if materialize:
-            ea, eb = F.broadcast(ea), F.broadcast(eb)
         pairs = (
             candidates.select("id_a", "id_b").join(ea, "id_a").join(eb, "id_b")
         )
@@ -1507,7 +1502,6 @@ def semantic_dedup(
     tau: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = False,
     arrow_threshold: int = 128,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1535,10 +1529,15 @@ def semantic_dedup(
     target_cell_size (train them with ``similarity.ivf_train_centroids``),
     sum(n_c^2) stays linear in n. A mega-cell means C is under-sized
     for the corpus — the same sizing discipline as ``lsh_bits_for``.
-    ``materialize=True`` localCheckpoints the assign stage so the
-    scan->score->argmax subtree executes once instead of three times
-    (pairs-left, pairs-right, final flag join) — worth it whenever the
-    upstream is more than a parquet scan.
+    The assign stage is always localCheckpointed (one eager job at
+    construction) so the scan->score->argmax subtree executes once
+    instead of three times (pairs-left, pairs-right, final flag join).
+    That pays whenever the upstream is more than a parquet scan, which
+    holds for every caller (the planted-dup union of
+    ``semantic_dedup_flags``, the cast projection of the 600k-vector
+    scale run in ``BENCH/run_dedup_scale.py``). The checkpoint is
+    executor-local storage that spills to disk and forces no
+    broadcast: the ``cell`` self-join stays a shuffle equi-join.
 
     The assign stage auto-switches at ``arrow_threshold`` centroids
     from literal-Column scoring to the Arrow matmul form
@@ -1581,8 +1580,7 @@ def semantic_dedup(
             ).alias("cell"),
             F.array_max("_scores").alias("ccos"),
         )
-    if materialize:
-        assigned = assigned.localCheckpoint(eager=True)
+    assigned = assigned.localCheckpoint(eager=True)
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_va"),

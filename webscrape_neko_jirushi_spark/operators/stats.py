@@ -218,9 +218,7 @@ def key_histogram(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return df.groupBy(*key_cols).agg(F.count("*").alias("cnt"))
 
 
-def key_skew_report(
-    df: DataFrame, key_cols: list[str], materialize: bool = False
-) -> DataFrame:
+def key_skew_report(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """ONE-row skew diagnosis of a prospective shuffle/join key — the
     measurement that decides between a plain equi-join, AQE skew
     handling, and explicit salting (the engine's own mitigation
@@ -240,15 +238,12 @@ def key_skew_report(
     Scale shape: one hash aggregate to the key histogram (key-sized),
     one 3-scalar aggregate, a 1-row broadcast back, one final
     aggregate over the histogram. The histogram subtree feeds two
-    consumers, so Catalyst executes it twice; ``materialize=True``
-    localCheckpoints it (upstream-once) — opt-in per the repo's
-    measured rule that concurrent duplicate stages often beat a
-    serializing checkpoint on an under-utilized cluster (see
-    ``bucket_pairs``).
+    consumers, so Catalyst executes it twice; it is deliberately not
+    checkpointed — per the repo's measured rule (see ``bucket_pairs``)
+    concurrent duplicate stages often beat a serializing checkpoint,
+    and the report stays a pure plan with no job at construction.
     """
     counts = key_histogram(df, key_cols)
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     tot = counts.agg(
         F.sum("cnt").alias("n_rows"),
         F.count("*").alias("n_keys"),

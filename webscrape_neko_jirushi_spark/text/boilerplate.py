@@ -25,14 +25,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the boilerplate verdict: a span is chrome when it is on MORE than
+# PAGE_FRAC of its host's pages and the host has at least MIN_PAGES
+# pages (the evidence floor)
+MIN_PAGES = 5
+PAGE_FRAC = 0.5
+
 
 def boilerplate_keys(
     spans: DataFrame,
     host_col: str = "host",
     page_col: str = "page_id",
     text_col: str = "text",
-    min_pages: int = 5,
-    frac: float = 0.5,
+    min_pages: int = MIN_PAGES,
+    frac: float = PAGE_FRAC,
 ) -> DataFrame:
     """Per (host, span_md5): ``n_pages_with_span``, the host's
     ``n_pages``, ``page_frac``, and ``is_boilerplate`` — true when the
@@ -104,7 +110,7 @@ def strip_boilerplate(
 
 
 def boilerplate_sql_ctes(
-    spans_sql: str, min_pages: int = 5, frac: float = 0.5
+    spans_sql: str, min_pages: int = MIN_PAGES, frac: float = PAGE_FRAC
 ) -> str:
     """DuckDB twin of ``boilerplate_keys`` over a relation
     ``(host, page_id, text)`` — ends in CTE ``bp_keys``."""

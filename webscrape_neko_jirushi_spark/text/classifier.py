@@ -102,21 +102,21 @@ def train_logreg(
     l2: float = 0.0,
     id_col: str = "doc_id",
     n_docs: int | None = None,
-    materialize: bool = True,
 ) -> tuple[list[float], float]:
     """Full-batch logistic GD over ``hashed_features(...,
     label_col=...)`` output. Returns ``(weights[dim], bias)``.
 
     ``n_docs`` is the lazy-hint discipline (skips the one sizing
-    count); ``materialize`` localCheckpoints the feature rows first so
-    the ``2 * n_iters`` passes never re-execute the featurization DAG
-    (the edge-list-first discipline)."""
+    count). The feature rows are always localCheckpointed first (one
+    eager job) so the ``2 * n_iters`` passes and the sizing count never
+    re-execute the tokenize/hash featurization DAG (the
+    edge-list-first discipline); the checkpoint is executor-local
+    storage that spills to disk and forces no broadcast."""
     if "y" not in features.columns:
         raise ValueError("train_logreg: features must carry a 'y' label column")
     if n_iters < 1:
         raise ValueError(f"train_logreg: n_iters must be >= 1, got {n_iters}")
-    if materialize:
-        features = features.localCheckpoint(eager=True)
+    features = features.localCheckpoint(eager=True)
     n = int(n_docs) if n_docs is not None else (
         features.select(id_col).distinct().count()
     )

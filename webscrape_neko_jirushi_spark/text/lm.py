@@ -34,8 +34,8 @@ Scoring joins the corpus's bigram stream against the model twice
 below ``broadcast_vocab_threshold`` distinct contexts both joins are
 broadcast (zero corpus shuffle — the plan a 100 TB scoring pass
 needs); above it they fall back to shuffle equi-joins, where the hot
-contexts ("the", BOS) are exactly the AQE-skew-join case. The
-``materialize`` flag localCheckpoints the model table FIRST and
+contexts ("the", BOS) are exactly the AQE-skew-join case.
+``lm_perplexity`` localCheckpoints the model table FIRST and
 derives c1 / V from it — the ``connected_components`` edge-list-first
 discipline, so the training aggregation never executes once per
 consumer.
@@ -207,19 +207,18 @@ def lm_perplexity(
     text_col: str = "text",
     id_col: str = "doc_id",
     carry_cols: tuple[str, ...] = (),
-    broadcast_lm: bool | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Train on ``train_docs``, score ``score_docs`` (default: the
     training corpus itself — the CCNet self-scoring pass).
-    ``materialize=True`` localCheckpoints the model FIRST so the
-    training aggregation executes once across its three consumers
-    (c12 join, c1 re-agg, V probe) — the edge-list-first discipline;
-    without it the lazy plan recomputes the (cheap, two-aggregate)
-    training subtree per consumer."""
-    lm = train_bigram_lm(train_docs, text_col, id_col)
-    if materialize:
-        lm = lm.localCheckpoint(eager=True)
+
+    The model is always localCheckpointed FIRST (one eager job at
+    construction) so the training aggregation executes once across its
+    three consumers (c12 join, c1 re-agg, V probe) — the
+    edge-list-first discipline; lazily each consumer recomputes the
+    training subtree. The checkpoint is executor-local storage that
+    spills to disk; whether the model is then broadcast is decided by
+    ``perplexity``'s vocabulary-size gate, not here."""
+    lm = train_bigram_lm(train_docs, text_col, id_col).localCheckpoint(eager=True)
     return perplexity(
         score_docs if score_docs is not None else train_docs,
         lm,
@@ -228,7 +227,6 @@ def lm_perplexity(
         text_col=text_col,
         id_col=id_col,
         carry_cols=carry_cols,
-        broadcast_lm=broadcast_lm,
     )
 
 

@@ -54,32 +54,22 @@ def repetition_stats(
     ngrams: tuple[int, ...] = (2, 3, 4),
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_scan: bool = False,
 ) -> DataFrame:
     """One row per document: ``n_words``, ``n_chars``,
     ``dup_word_frac``, and ``top{n}gram_frac`` for each requested n —
     the top-gram char fraction is 0.0 when the document has no n-gram
     of that size (shorter than n words, or empty).
 
-    ``single_scan`` trades scans for shuffle bytes: the default plan
-    scans ``documents`` twice (base metrics + gram spans, equi-joined
-    at the end — scans are cheap columnar reads of the same file);
-    ``single_scan=True`` carries the three base metrics through the
-    gram explode (``explode_outer`` keeps gram-less docs) and recovers
-    them with ``first()`` in the aggregates — ONE scan, but ~2x the
-    shuffle payload per gram row (the explode fan-out is the dominant
-    row count, so this is the expensive side of the trade at 100 TB
-    unless the input scan itself is the bottleneck, e.g. a pre-filter
-    DAG too costly to run twice). Output-identical (parity-tested).
-
-    MEASURED (BENCH/ab_repetition.py, warm alternating medians of 3,
-    local[32]): two-scan 4.6 s vs single-scan 6.2 s at the
-    sf0.1-shape (7.5k docs), 72.4 s vs 136.1 s at the 100x corpus
-    (600k docs) — the fatter explode shuffle loses by ~1.9x and the
-    gap GROWS with size, so two-scan stays the default; pass
-    ``single_scan=True`` only when the upstream is an expensive
-    non-reusable DAG whose second execution would cost more than the
-    doubled shuffle."""
+    The plan scans ``documents`` twice (base metrics + gram spans,
+    equi-joined at the end — scans are cheap columnar reads of the same
+    file). A single-scan variant that carried the three base metrics
+    through the gram explode and recovered them with ``first()`` was
+    measured and deleted: it doubles the shuffle payload per gram row,
+    and the explode fan-out is the dominant row count. Warm
+    alternating medians of 3 at local[32], two-scan vs single-scan:
+    4.6 s vs 6.2 s at the sf0.1 shape (7.5k docs), 72.4 s vs 136.1 s
+    at the 100x corpus (600k docs) — the single scan lost by ~1.9x and
+    the gap grew with size."""
     if not ngrams or any(n < 1 for n in ngrams):
         raise ValueError(f"repetition_stats: bad ngrams {ngrams}")
     t = F.col(text_col)
@@ -129,84 +119,35 @@ def repetition_stats(
     all_grams = F.concat(
         *[F.transform(F.col(f"_g{n}"), _gram_struct(n)) for n in ns]
     )
-    if single_scan:
-        spans = (
-            documents.select(
-                F.col(id_col),
-                nw.alias("n_words"),
-                F.length(t).alias("n_chars"),
-                F.round(dup_word_fraction(t), 6).alias("dup_word_frac"),
-                trimmed.alias("_t"),
-                words.alias("_w"),
-            )
-            .select(
-                F.col(id_col),
-                "n_words",
-                "n_chars",
-                "dup_word_frac",
-                *[gram_strings(n).alias(f"_g{n}") for n in ns],
-            )
-            .select(
-                F.col(id_col),
-                "n_words",
-                "n_chars",
-                "dup_word_frac",
-                F.explode_outer(all_grams).alias("g"),
-            )
-            .select(
-                id_col, "n_words", "n_chars", "dup_word_frac", "g.n", "g.gh", "g.gl"
-            )
+    spans = (
+        documents.select(
+            F.col(id_col), trimmed.alias("_t"), words.alias("_w")
         )
-        counted = spans.groupBy(id_col, "n", "gh", "gl").agg(
-            F.count("*").alias("cnt"),
-            F.first("n_words").alias("n_words"),
-            F.first("n_chars").alias("n_chars"),
-            F.first("dup_word_frac").alias("dup_word_frac"),
+        .select(
+            F.col(id_col),
+            *[gram_strings(n).alias(f"_g{n}") for n in ns],
         )
-        out = counted.groupBy(id_col).agg(
-            F.first("n_words").alias("n_words"),
-            F.first("n_chars").alias("n_chars"),
-            F.first("dup_word_frac").alias("dup_word_frac"),
-            *[
-                F.max(
-                    F.when(
-                        F.col("n") == n,
-                        F.struct(F.col("cnt"), F.col("gl"), F.col("gh")),
-                    )
-                ).alias(f"_top{n}")
-                for n in sorted(set(ngrams))
-            ],
-        )
-    else:
-        spans = (
-            documents.select(
-                F.col(id_col), trimmed.alias("_t"), words.alias("_w")
-            )
-            .select(
-                F.col(id_col),
-                *[gram_strings(n).alias(f"_g{n}") for n in ns],
-            )
-            .select(F.col(id_col), F.explode(all_grams).alias("g"))
-            .select(id_col, "g.n", "g.gh", "g.gl")
-        )
-        counted = spans.groupBy(id_col, "n", "gh", "gl").agg(
-            F.count("*").alias("cnt")
-        )
-        # per (doc, n) winner: lexicographic struct max = the
-        # (count, gram length, hash) tie-break, inside one aggregate
-        tops = counted.groupBy(id_col).agg(
-            *[
-                F.max(
-                    F.when(
-                        F.col("n") == n,
-                        F.struct(F.col("cnt"), F.col("gl"), F.col("gh")),
-                    )
-                ).alias(f"_top{n}")
-                for n in sorted(set(ngrams))
-            ]
-        )
-        out = base.join(tops, id_col, "left")
-    for n in sorted(set(ngrams)):
+        .select(F.col(id_col), F.explode(all_grams).alias("g"))
+        .select(id_col, "g.n", "g.gh", "g.gl")
+    )
+    counted = spans.groupBy(id_col, "n", "gh", "gl").agg(
+        F.count("*").alias("cnt")
+    )
+    # per (doc, n) winner: lexicographic struct max = the
+    # (count, gram length, hash) tie-break, inside one aggregate
+    tops = counted.groupBy(id_col).agg(
+        *[
+            F.max(
+                F.when(
+                    F.col("n") == n,
+                    F.struct(F.col("cnt"), F.col("gl"), F.col("gh")),
+                )
+            ).alias(f"_top{n}")
+            for n in ns
+        ]
+    )
+    out = base.join(tops, id_col, "left")
+    for n in ns:
         top = F.col(f"_top{n}")
         out = out.withColumn(
             f"top{n}gram_frac",
