@@ -139,7 +139,7 @@ def test_frontier_stream_writer_drives_epochs(spark, tmp_path):
     src = tmp_path / "seed_src"
     src.mkdir()
     spark.createDataFrame(
-        [(M.listing_url(1),)], "url string"
+        [(M.listing_url(1),), (M.listing_url(1),)], "url string"
     ).coalesce(1).write.parquet(str(src / "b0"))
 
     stream = spark.readStream.schema("url string").parquet(str(src / "*"))
@@ -150,7 +150,7 @@ def test_frontier_stream_writer_drives_epochs(spark, tmp_path):
         assert seen_after_b0 >= 1  # at least the listing page fetched
         # second batch: another seed; already-seen URLs are not re-added
         spark.createDataFrame(
-            [(M.listing_url(2),), (M.listing_url(1),)], "url string"
+            [(M.listing_url(2),), (M.listing_url(1),), (M.listing_url(2),)], "url string"
         ).coalesce(1).write.parquet(str(src / "b1"))
         q.processAllAvailable()
         assert eng.url_seen().count() > seen_after_b0
@@ -167,6 +167,9 @@ def test_frontier_stream_writer_drives_epochs(spark, tmp_path):
     got = {r["url_hash"] for r in eng.url_seen().collect()}
     exp = {r["url_hash"] for r in want.url_seen().collect()}
     assert got == exp
+    # a URL repeated within a batch was fetched once
+    log = eng.fetch_log()
+    assert log.count() == log.select("url_hash").distinct().count()
 
 
 def test_host_health_state_survives_query_restart(spark, tmp_path):

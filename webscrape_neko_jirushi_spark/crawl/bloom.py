@@ -3,7 +3,9 @@
 The reference holds every seen URL in an in-memory Python set
 (comprehensive_scraper.py:68-79, smart_cat_discovery.py:41-43) — RAM-
 bound around 10^7 entries. At the 10^10-URL design point the seen set
-is a table; membership is a two-stage check:
+is a table. The filter guards the one seen check that drops rows: the
+one where URLs enter the frontier (``CrawlEngine._enqueue``). There,
+membership is a two-stage check:
 
 1. **Bloom pre-filter** (this module): shards of a bitset built with
    ``applyInPandas`` over ``pmod(url_hash, n_shards)`` groups,
@@ -16,7 +18,8 @@ is a table; membership is a two-stage check:
    equality gate vs the oracle covers this path).
 
 Deletion-safe recrawl uses the cuckoo variant (``CuckooShards``):
-fingerprint eviction supports delete, same probe API.
+fingerprint eviction supports delete. Both filters offer the surface the
+engine uses: ``is_empty``, ``prefilter`` and ``add_seen``.
 """
 
 from __future__ import annotations
@@ -94,14 +97,9 @@ class BloomShards:
     ) -> "BloomShards":
         """Distributed build: one bitset per shard via applyInPandas
         (UDAF build phase), collected packed (n_bits/8 bytes each)."""
-        if n_shards & (n_shards - 1):
-            raise ValueError("n_shards must be a power of two (uint64 vs pmod parity)")
-        n_bits = max(1024, int(-expected_per_shard * math.log(fpr) / (math.log(2) ** 2)))
-        n_bits = 1 << (n_bits - 1).bit_length()  # round up to pow2
-        k = max(1, round(n_bits / expected_per_shard * math.log(2))) if expected_per_shard else 7
-        k = min(k, 16)
-        bits = _shard_bits(seen, n_shards, n_bits, k)
-        return cls(n_shards, n_bits, k, bits)
+        filt = cls.empty(n_shards, expected_per_shard, fpr)
+        filt.bits = _shard_bits(seen, n_shards, filt.n_bits, filt.k)
+        return filt
 
     def build_delta(self, df: DataFrame, hash_col: str = "url_hash") -> dict[int, np.ndarray]:
         """Distributed delta build with THIS filter's parameters — the
@@ -113,6 +111,14 @@ class BloomShards:
     def _snapshot(self) -> "BloomShards":
         """State-only clone for broadcasting (no broadcast handle)."""
         return BloomShards(self.n_shards, self.n_bits, self.k, dict(self.bits))
+
+    def is_empty(self) -> bool:
+        return not self.bits
+
+    def add_seen(self, spark: SparkSession, hashes: DataFrame) -> None:
+        """Insert a frame of committed ``url_hash`` values (distributed
+        ``build_delta``, driver-side ``merge_delta``)."""
+        self.merge_delta(self.build_delta(hashes))
 
     def merge_delta(self, delta: dict[int, np.ndarray]) -> None:
         """OR a ``build_delta`` result into the held shards."""
@@ -129,9 +135,9 @@ class BloomShards:
         cls, n_shards: int = 16, expected_per_shard: int = 1_000_000, fpr: float = 0.01
     ) -> "BloomShards":
         if n_shards & (n_shards - 1):
-            raise ValueError("n_shards must be a power of two")
+            raise ValueError("n_shards must be a power of two (uint64 vs pmod parity)")
         n_bits = max(1024, int(-expected_per_shard * math.log(fpr) / (math.log(2) ** 2)))
-        n_bits = 1 << (n_bits - 1).bit_length()
+        n_bits = 1 << (n_bits - 1).bit_length()  # round up to pow2
         k = max(1, round(n_bits / expected_per_shard * math.log(2))) if expected_per_shard else 7
         return cls(n_shards, n_bits, min(k, 16), {})
 
@@ -245,44 +251,13 @@ class CuckooShards:
         n_shards: int = 16,
         n_buckets: int = 1 << 16,
     ) -> "CuckooShards":
-        """Distributed build: one fingerprint table per shard via
-        applyInPandas (rows insert sequentially WITHIN a shard group —
-        eviction chains are shard-local); only the packed tables
-        (n_buckets * SLOTS * 2 bytes each) travel to the driver."""
-        slots = cls.SLOTS
-
-        def _build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            ck = cls(1, n_buckets, {})
-            t = ck._table(0)
-            for h in pdf["url_hash"].to_numpy():
-                if not ck._insert_into(t, int(h) & ((1 << 64) - 1)):
-                    # a silently-dropped fingerprint would later read as
-                    # 'definitely unseen' and skip the exact anti-join —
-                    # duplicating fetches. Fail loudly instead.
-                    raise ValueError(
-                        f"cuckoo shard full at n_buckets={n_buckets} "
-                        f"({len(pdf)} keys); increase n_buckets"
-                    )
-            return pd.DataFrame(
-                {"shard": [int(pdf["shard"].iloc[0])], "bits": [t.tobytes()]}
-            )
-
-        rows = (
-            seen.select(
-                "url_hash",
-                F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard"),
-            )
-            .groupBy("shard")
-            .applyInPandas(_build_shard, schema=_SHARD_BITS_SCHEMA)
-            .collect()
-        )
-        tables = {
-            r["shard"]: np.frombuffer(r["bits"], dtype=np.uint16)
-            .reshape(n_buckets, slots)
-            .copy()
-            for r in rows
-        }
-        return cls(n_shards, n_buckets, tables)
+        """Distributed build: ``apply_delta`` inserts into an empty
+        filter (rows insert sequentially WITHIN a shard group — eviction
+        chains are shard-local); only the packed tables (n_buckets *
+        SLOTS * 2 bytes each) travel to the driver."""
+        filt = cls.empty(n_shards, n_buckets)
+        filt.apply_delta(seen.sparkSession, seen)
+        return filt
 
     def apply_delta(
         self,
@@ -348,6 +323,17 @@ class CuckooShards:
                 .reshape(n_buckets, slots)
                 .copy()
             )
+
+    def is_empty(self) -> bool:
+        return not self.tables
+
+    def add_seen(self, spark: SparkSession, hashes: DataFrame) -> None:
+        """Insert a frame of committed ``url_hash`` values. Eviction
+        chains are not OR-mergeable, but they are shard-local, so the
+        inserts run per shard (``apply_delta``). A full shard raises
+        inside the task: a dropped fingerprint would read 'definitely
+        unseen' and duplicate fetches."""
+        self.apply_delta(spark, hashes, op="insert")
 
     def might_contain_np(self, hashes: np.ndarray) -> np.ndarray:
         """Vectorized probe (same contract as BloomShards): True may be

@@ -2,14 +2,22 @@
 
 Each epoch is one batch DataFrame pipeline committed atomically:
 
-    frontier(pending)
-      -> bloom-prefiltered exact anti-join vs url_seen          (J1)
+    frontier(pending) -> robots filter                          (T4)
       -> per-host budget select + token-bucket schedule          (T3, O3)
       -> salted repartition fetch                                (S3/F3)
       -> from_json listing parse | mapInPandas span extraction   (S2, F2)
-      -> discoveries: union + keep-min dedup + anti-join seen    (U1, J3)
+      -> discoveries -> _enqueue: robots, keep-min per URL,
+         bloom-prefiltered exact anti-join vs url_seen,
+         anti-join vs pending                                    (U1, J3, J1)
       -> single snapshot commit: documents/url_seen/fetch_log/
          lineage appends + frontier replace                      (T2)
+
+Seeds, ID-range probes, stream batches and discoveries all enter the
+frontier through ``_enqueue``, so the frontier holds no seen URL and no
+duplicate ``url_hash``, and the epoch runs no seen check on pending
+rows. ``recrawl_expired`` bypasses ``_enqueue`` but keeps the invariant:
+it drops its URLs from url_seen in the same commit that re-queues them,
+and its rows are distinct and anti-joined against the frontier.
 
 Also covers: S1 (paginated listing scan: ``next_pages``), S5 (outlink
 scan via span children), S7 (API seed source: ``seed``), S11 (state
@@ -177,7 +185,7 @@ class CrawlEngine:
         # driver-serial jobs on the throughput path
         self.collect_stats = collect_stats
         # T4: robots cache — host -> disallowed path prefixes, applied as
-        # a broadcast-map filter on candidates and on discoveries (north
+        # a broadcast-map filter on candidates and in _enqueue (north
         # rule; the reference sends polite headers but never parses
         # robots, comprehensive_scraper.py:32-42)
         self.robots_map = robots_map
@@ -185,10 +193,11 @@ class CrawlEngine:
         self._robots_bc = (
             spark.sparkContext.broadcast(robots_map) if robots_map else None
         )
-        # driver-held incremental bloom over url_seen; rebuilt from the
-        # committed seen table on resume, extended per epoch after that.
-        # use_cuckoo swaps in deletion-capable cuckoo shards (recrawl
-        # expiry deletes instead of forcing a rebuild); their per-epoch
+        # driver-held incremental bloom over url_seen, probed by
+        # _enqueue; rebuilt from the committed seen table on resume,
+        # extended per epoch after that (add_seen). use_cuckoo swaps in
+        # deletion-capable cuckoo shards (recrawl expiry deletes
+        # instead of forcing a rebuild); their per-epoch
         # insert/delete maintenance is distributed (per-shard
         # applyInPandas via CuckooShards.apply_delta — eviction chains
         # are shard-local, the driver only merges packed tables). Bloom
@@ -234,18 +243,16 @@ class CrawlEngine:
         if self.store.version() > 0:
             return  # resume: state already committed
         rows = [(u, i + 1) for i, u in enumerate(seed_urls)]
-        df = self.spark.createDataFrame(rows, "raw_url string, priority long")
-        frontier = (
-            df.withColumn("url", canonicalize_url(F.col("raw_url")))
-            .withColumn("url_hash", url_hash_col(F.col("url")))
-            .withColumn("host", host_col(F.col("url")))
-            .withColumn("depth", F.lit(0))
-            .withColumn("epoch", F.lit(0))
-            .withColumn("status", F.lit("pending"))
-            .withColumn("api_image_1", F.lit(None).cast("string"))
-            .select([f.name for f in schemas.FRONTIER.fields])
+        urls = self.spark.createDataFrame(rows, "raw_url string, priority long").select(
+            canonicalize_url(F.col("raw_url")).alias("url"),
+            F.lit(0).alias("depth"),
+            "priority",
+            F.lit(None).cast("string").alias("api_image_1"),
         )
-        self.store.commit(0, replaces={"frontier": frontier})
+        # a repeated seed keeps its first position (J3)
+        new, cached = self._enqueue(urls, 0, self.frontier())
+        self.store.commit(0, replaces={"frontier": new})
+        cached.unpersist()
 
     def inject_probe_ranges(
         self, ranges: list[tuple[int, int]], step: int = 5, depth: int = 0
@@ -253,28 +260,71 @@ class CrawlEngine:
         """S6: union an ID-range probe sweep into the frontier
         (smart_cat_discovery.py:158-173). Probe URLs already seen,
         already pending, or previously failed (failures live in
-        url_seen) are dropped by anti-join before the commit. Returns
-        the number of injected URLs."""
+        url_seen) are dropped by ``_enqueue`` before the commit.
+        Returns the number of injected URLs."""
         from .probe import id_range_probe
 
         epoch = self.store.epoch()
-        probes = id_range_probe(
-            self.spark, self.base_url, ranges, step, depth=depth, epoch=epoch
-        )
+        probes = id_range_probe(self.spark, self.base_url, ranges, step, depth=depth)
         frontier = self.frontier()
-        new = _persist_coalesced(
-            probes.join(self.url_seen().select("url_hash"), "url_hash", "left_anti")
-            .join(frontier.select("url_hash"), "url_hash", "left_anti")
+        new, cached = self._enqueue(
+            probes.select("url", "depth", "priority", "api_image_1"), epoch, frontier
         )
         n = new.count()
         if n:
             self.store.commit(
                 epoch, replaces={"frontier": frontier.unionByName(new)}
             )
-        new.unpersist()
+        cached.unpersist()
         return n
 
-    def _ensure_bloom(self) -> BloomShards | CuckooShards | None:
+    def _enqueue(
+        self, urls: DataFrame, epoch: int, pending: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """Build new frontier rows from ``url, depth, priority,
+        api_image_1`` candidates; the only place frontier rows are made.
+
+        Robots-disallowed URLs leave (T4). The min ``(depth, priority)``
+        row per ``url_hash`` stays (J3: the first discovery wins). URLs
+        already in url_seen are dropped by an exact anti-join with the
+        bloom/cuckoo filter in front of it (J1): definite-new rows skip
+        the join, and the filter's positives, false ones included, are
+        re-checked exactly. URLs in ``pending`` are dropped last.
+
+        Returns ``(rows, cached)``: the definite/maybe split reads
+        ``cached`` twice (uncached, a discovery plan's listing parse and
+        canonicalize UDF would run twice); unpersist it once ``rows``
+        are committed."""
+        rows = self._robots_filter(
+            urls.withColumn("url_hash", url_hash_col(F.col("url")))
+            .withColumn("host", host_col(F.col("url")))
+        )
+        w = Window.partitionBy("url_hash").orderBy("depth", "priority")
+        rows = rows.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") == 1
+        ).drop("rn")
+        filt = self._ensure_bloom()
+        if filt.is_empty():
+            # the filter holds every seen hash: empty means none is seen.
+            # No split, so nothing to cache (unpersist is a no-op).
+            cached = unseen = rows
+        else:
+            cached = _persist_coalesced(filt.prefilter(self.spark, rows))
+            maybe = F.col("bloom_maybe_seen")
+            unseen = cached.filter(~maybe).unionByName(
+                cached.filter(maybe).join(
+                    self.url_seen().select("url_hash"), "url_hash", "left_anti"
+                )
+            ).drop("bloom_maybe_seen")
+        new = (
+            unseen.join(pending.select("url_hash"), "url_hash", "left_anti")
+            .withColumn("epoch", F.lit(epoch))
+            .withColumn("status", F.lit("pending"))
+            .select([f.name for f in schemas.FRONTIER.fields])
+        )
+        return new, cached
+
+    def _ensure_bloom(self) -> BloomShards | CuckooShards:
         """Driver-incremental bloom/cuckoo; distributed rebuild only on
         resume (both filters build per-shard via applyInPandas). A store
         whose manifest holds no ``url_seen`` dir (a fresh crawl: ``seed``
@@ -311,29 +361,12 @@ class CrawlEngine:
     # -- one epoch ------------------------------------------------------------
     def run_epoch(self) -> EpochStats:
         epoch = self.store.epoch() + 1
-        pending = self.frontier()
-        seen = self.url_seen()
+        # no seen check here: _enqueue let no seen URL into the frontier.
+        # Robots is checked again at fetch time (T4).
+        candidates = self._robots_filter(self.frontier())
 
-        # J1: exact anti-join with sharded-bloom pre-filter. Bloom-negative
-        # rows skip the join entirely; positives (incl. FPs) are re-checked
-        # exactly, so the seen set stays exact.
-        bloom = self._ensure_bloom()
-        filt_state = getattr(bloom, "bits", None) or getattr(bloom, "tables", None)
-        if bloom is not None and filt_state:
-            flagged = bloom.prefilter(self.spark, pending)
-            definite_new = flagged.filter(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
-            maybe = (
-                flagged.filter(F.col("bloom_maybe_seen"))
-                .drop("bloom_maybe_seen")
-                .join(seen.select("url_hash"), "url_hash", "left_anti")
-            )
-            candidates = definite_new.unionByName(maybe)
-        else:
-            candidates = pending
-        candidates = self._robots_filter(candidates)  # T4
-
-        # ONE cached DataFrame carries the bloom probe + ranking window;
-        # selected/deferred are cheap filters over it (without this the
+        # ONE cached DataFrame carries the ranking window; selected/
+        # deferred are cheap filters over it (without this the
         # frontier commit recomputes the whole selection pipeline)
         annotated = _persist_coalesced(
             select_budget_annotated(candidates, self.host_budget, self.n_salts)
@@ -429,31 +462,12 @@ class CrawlEngine:
             )
         )
 
-        discoveries = child_profiles.unionByName(next_pages).unionByName(span_children)
-        discoveries = (
-            discoveries.withColumn("url_hash", url_hash_col(F.col("url")))
-            .withColumn("host", host_col(F.col("url")))
+        # U1: annotated holds every pending candidate, fetched or deferred
+        discoveries, disc_cached = self._enqueue(
+            child_profiles.unionByName(next_pages).unionByName(span_children),
+            epoch,
+            annotated,
         )
-        discoveries = self._robots_filter(discoveries)  # T4: never enqueued
-        discoveries = (
-            discoveries
-            .withColumn("epoch", F.lit(epoch))
-            .withColumn("status", F.lit("pending"))
-        )
-        # J3/U1: keep-min (depth, priority) per URL within the epoch, then
-        # drop anything already seen, just fetched, or still pending
-        w = Window.partitionBy("url_hash").orderBy("depth", "priority")
-        discoveries = discoveries.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") == 1
-        ).drop("rn")
-        just_fetched = fetched.select("url_hash")
-        discoveries = (
-            discoveries.join(seen.select("url_hash"), "url_hash", "left_anti")
-            .join(just_fetched, "url_hash", "left_anti")
-            .join(deferred.select("url_hash"), "url_hash", "left_anti")
-            .select([f.name for f in schemas.FRONTIER.fields])
-        )
-
         new_frontier = _persist_coalesced(
             deferred.select([f.name for f in schemas.FRONTIER.fields]).unionByName(
                 discoveries
@@ -531,11 +545,11 @@ class CrawlEngine:
             replaces={"frontier": new_frontier},
         )
         # post-commit bookkeeping: counts on persisted/parquet-metadata
-        # inputs (cheap jobs) + distributed bloom delta: executors fold
-        # the epoch's hashes into packed per-shard bitsets; the driver
-        # only OR-merges a bounded n_shards * n_bits/8 bytes (never the
-        # row stream — at 10^8 rows/epoch a toPandas() here would be
-        # the driver bottleneck).
+        # inputs (cheap jobs) + the distributed filter delta: executors
+        # fold the epoch's hashes into packed per-shard state and only
+        # those bounded bytes reach the driver (never the row stream —
+        # at 10^8 rows/epoch a toPandas() here would be the driver
+        # bottleneck).
         n_pending_after = self.frontier().count()  # footer-only count
         if self.collect_stats:
             n_docs = docs.count()
@@ -543,25 +557,11 @@ class CrawlEngine:
         else:
             n_docs = -1
             n_disc = -1
-        if self._bloom is not None:
-            if hasattr(self._bloom, "merge_delta"):
-                self._bloom.merge_delta(
-                    self._bloom.build_delta(fetched.select("url_hash"))
-                )
-            else:
-                # cuckoo: eviction chains are not OR-mergeable, but they
-                # ARE shard-local — the delta inserts run per-shard in
-                # applyInPandas (group = shard) and only the packed
-                # tables come back (bounded bytes, same contract as the
-                # bloom merge). A full shard raises inside the task: a
-                # dropped fingerprint would read 'definitely unseen'
-                # and duplicate fetches.
-                self._bloom.apply_delta(
-                    self.spark, fetched.select("url_hash"), op="insert"
-                )
+        self._bloom.add_seen(self.spark, fetched.select("url_hash"))
         fetched.unpersist()
         docs_with_meta.unpersist()
         annotated.unpersist()
+        disc_cached.unpersist()
         new_frontier.unpersist()
         return EpochStats(
             epoch=epoch,

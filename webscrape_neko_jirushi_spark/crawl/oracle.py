@@ -286,9 +286,11 @@ class OracleCrawler:
         pending: dict[str, tuple[int, int]] = {}
         api_image: dict[str, str | None] = {}
         for i, u in enumerate(seed_urls):
+            # a repeated seed keeps its first position, like a repeated
+            # discovery (J3)
             cu = canonicalize_one(u)
-            pending[cu] = (0, i + 1)
-            api_image[cu] = None
+            pending.setdefault(cu, (0, i + 1))
+            api_image.setdefault(cu, None)
 
         for epoch in range(1, self.max_epochs + 1):
             if not pending:

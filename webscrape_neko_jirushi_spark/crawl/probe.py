@@ -5,9 +5,10 @@ synthesizes ``/foster/{id}/`` URLs from hardcoded ID ranges with step 5
 and queues the ones not already discovered or failed. Spark-first:
 ``spark.range(start, end, step)`` per range — a generated relation, no
 driver-side list — unioned, formatted into frontier-shaped rows. The
-engine anti-joins them against url_seen and the live frontier before the
-union (the reference's ``not in discovered_urls / failed_urls`` check;
-failures live in url_seen here, so they are never re-probed).
+engine's ``_enqueue`` drops those already in url_seen or the live
+frontier before the union (the reference's ``not in discovered_urls /
+failed_urls`` check; failures live in url_seen here, so they are never
+re-probed).
 
 Scale note: a probe sweep of 10^9 ids is ``spark.range`` partitions —
 embarrassingly parallel, no shuffle until the dedup anti-join, which is
@@ -53,10 +54,8 @@ def id_range_probe(
     for start, end in ranges:
         part = spark.range(start, end, step).select(F.col("id"))
         ids = part if ids is None else ids.unionByName(part)
-    # overlapping ranges (the reference's lists do overlap in spirit)
-    # must not enqueue an id twice — the frontier has no within-commit
-    # dedup, so a duplicate here would double-fetch
-    ids = ids.distinct()
+    # overlapping ranges repeat an id; the engine's _enqueue keeps one
+    # row per URL, so no dedup shuffle here
     url = canonicalize_url(
         F.concat(F.lit(base_url + "/foster/"), F.col("id").cast("string"), F.lit("/"))
     )

@@ -30,32 +30,23 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..crawl.engine import CrawlEngine
-from ..functions.urls import canonicalize_url, host_col, url_hash_col
+from ..functions.urls import canonicalize_url
 
 
 def seed_batch_to_frontier(engine: CrawlEngine, batch_df: DataFrame, epoch_id: int) -> None:
     """foreachBatch body: canonicalize the arriving seed URLs, append
-    the unseen ones to the frontier (one snapshot commit), then run one
-    crawl epoch."""
-    seeds = (
-        batch_df.select(canonicalize_url(F.col("url")).alias("url"))
-        .withColumn("url_hash", url_hash_col(F.col("url")))
-        .withColumn("host", host_col(F.col("url")))
-        .withColumn("depth", F.lit(0))
-        .withColumn("priority", F.lit(0).cast("long"))
-        .withColumn("epoch", F.lit(int(epoch_id)).cast("int"))
-        .withColumn("status", F.lit("pending"))
-        .withColumn("api_image_1", F.lit(None).cast("string"))
+    the new ones to the frontier through the engine's ``_enqueue`` (one
+    snapshot commit), then run one crawl epoch."""
+    urls = batch_df.select(
+        canonicalize_url(F.col("url")).alias("url"),
+        F.lit(0).alias("depth"),
+        F.lit(0).cast("long").alias("priority"),
+        F.lit(None).cast("string").alias("api_image_1"),
     )
     existing = engine.frontier()
-    seen = engine.url_seen().select("url_hash")
-    new_rows = (
-        seeds.join(seen, "url_hash", "left_anti")
-        .join(existing.select("url_hash"), "url_hash", "left_anti")
-        .select([f.name for f in existing.schema.fields])
-    )
-    merged = existing.unionByName(new_rows)
-    engine.store.commit(engine.store.epoch(), replaces={"frontier": merged})
+    new, cached = engine._enqueue(urls, int(epoch_id), existing)  # noqa: SLF001
+    engine.store.commit(engine.store.epoch(), replaces={"frontier": existing.unionByName(new)})
+    cached.unpersist()
     engine.run_epoch()
 
 
