@@ -362,9 +362,7 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
         # expected ~FLAT vs corpus size: probed-bucket files resolve
         # from one IndexManifest read (no partition-tree listing) and
         # their occupancy the index-bits sizing holds ~constant
-        return similarity.ann_topk_indexed(
-            spark, idx_path, query_vec, k=10, bits=_ann_index_bits(n_vecs)
-        )
+        return similarity.ann_topk_indexed(spark, idx_path, query_vec, k=10)
 
     def lsh_incremental():
         # fixed 60-doc delta vs the persisted banded index: signing,

@@ -19,6 +19,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from webscrape_neko_jirushi_spark.operators import dedup, similarity
+from webscrape_neko_jirushi_spark.operators.cluster_store import build_cluster_labels
 from webscrape_neko_jirushi_spark.operators.index_store import IndexManifest
 from webscrape_neko_jirushi_spark.sources.synth_corpus import (
     synth_documents,
@@ -111,9 +112,11 @@ def test_ann_append_requires_manifest(spark, tmp_path):
 
     e = _embeddings(spark)
     idx = str(tmp_path / "bare")
-    similarity.build_ann_index(e, idx, dim=64, bits=8, seed=7, manifest=False)
+    e.write.parquet(idx)
     with pytest.raises(ValueError, match="no manifest"):
         similarity.append_ann_index(e.limit(1), idx)
+    with pytest.raises(ValueError, match="no manifest"):
+        similarity.ann_topk_indexed(spark, idx, _query_vec(spark), k=10)
 
 
 def test_ann_reindex_trigger_fires_on_occupancy_drift(spark, tmp_path):
@@ -142,7 +145,7 @@ def test_ivf_manifest_probe_parity_and_file_subset(spark, tmp_path):
     m = IndexManifest.load(idx)
     assert m is not None and m.key == "cell"
 
-    probed = similarity.ivf_topk_indexed(spark, idx, query, cents, k=10, nprobe=2)
+    probed = similarity.ivf_topk_indexed(spark, idx, query, k=10, nprobe=2)
     got = [(r["vec_id"], r["cosine"]) for r in probed.collect()]
     want = [
         (r["vec_id"], r["cosine"])
@@ -172,13 +175,13 @@ def test_ivf_append_parity_with_full_rebuild(spark, tmp_path):
         got = [
             tuple(r)
             for r in similarity.ivf_topk_indexed(
-                spark, inc, query, cents, k=10, nprobe=2
+                spark, inc, query, k=10, nprobe=2
             ).collect()
         ]
         want = [
             tuple(r)
             for r in similarity.ivf_topk_indexed(
-                spark, full, query, cents, k=10, nprobe=2
+                spark, full, query, k=10, nprobe=2
             ).collect()
         ]
         assert got == want, f"IVF append/rebuild divergence for query vec {vid}"
@@ -483,7 +486,7 @@ def test_probe_rejects_wrong_index_kind(spark, tmp_path):
     ]
     q = _query_vec(spark)
     with pytest.raises(ValueError, match="not a 'cell' index"):
-        similarity.ivf_topk_indexed(spark, ann, q, cents, k=5, nprobe=1)
+        similarity.ivf_topk_indexed(spark, ann, q, k=5, nprobe=1)
     ivf = str(tmp_path / "ivf")
     similarity.build_ivf_index(e, ivf, cents)
     with pytest.raises(ValueError, match="not a 'bucket' index"):
@@ -722,7 +725,9 @@ def test_index_builds_write_one_file_per_partition_dir(spark, tmp_path):
     into every dir it holds rows for and probe latency multiplies by
     the writer's task count (the bucketing.py small-files footgun;
     measured as most of simhash_incremental's 100x growth before the
-    fix). Build => exactly 1 data file per dir; one append => <= 2."""
+    fix). Build => exactly 1 data file per dir; one append => <= 2.
+    Covers every index family: lsh, simhash, ann, emb-LSH, ivf, pq,
+    ivfpq and the cluster-label store."""
     docs = synth_documents(spark, 400, dup_frac=0.10).repartition(8).cache()
     old = docs.filter(F.col("doc_id") < 350)
     delta = docs.filter(F.col("doc_id") >= 350)
@@ -765,6 +770,42 @@ def test_index_builds_write_one_file_per_partition_dir(spark, tmp_path):
     assert max(files_per_dir(emb)) == 1
     similarity.append_emb_lsh_index(edelta, str(emb))
     assert max(files_per_dir(emb)) <= 2
+
+    cents = [
+        [float(x) for x in r["embedding"]]
+        for r in eold.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
+    ]
+    ivf = tmp_path / "ivf"
+    similarity.build_ivf_index(eold, str(ivf), cents)
+    assert max(files_per_dir(ivf)) == 1
+    similarity.append_ivf_index(edelta, str(ivf))
+    assert max(files_per_dir(ivf)) <= 2
+
+    books = similarity.pq_train(eold, 16, m=4, ksub=8, n_iters=3, n_vecs=250)
+    pq = tmp_path / "pq"
+    similarity.build_pq_index(eold, str(pq), books, n_shards=4)
+    assert max(files_per_dir(pq)) == 1
+    similarity.append_pq_index(edelta, str(pq))
+    assert max(files_per_dir(pq)) <= 2
+
+    ivfpq = tmp_path / "ivfpq"
+    similarity.build_ivfpq_index(
+        eold, str(ivfpq), cents, dim=16, m=4, ksub=8, n_iters=3, n_vecs=250
+    )
+    assert max(files_per_dir(ivfpq)) == 1
+    similarity.append_ivfpq_index(edelta, str(ivfpq))
+    assert max(files_per_dir(ivfpq)) <= 2
+
+    labels = tmp_path / "labels"
+    build_cluster_labels(
+        docs.select(
+            F.col("doc_id").alias("id"),
+            (F.col("doc_id") - F.col("doc_id") % 7).alias("cluster_id"),
+        ),
+        str(labels),
+        n_subparts=4,
+    )
+    assert max(files_per_dir(labels)) == 1
     docs.unpersist()
     e.unpersist()
 

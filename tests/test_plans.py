@@ -176,43 +176,6 @@ def test_agg_is_partial_final(spark):
     assert P.exchange_count(q) <= 2
 
 
-def test_ann_index_probe_partition_pruned(spark, tmp_path):
-    """The persisted ANN index (bucket-partitioned parquet) must be
-    probed through Catalyst partition pruning — the bucket IN-list is a
-    PartitionFilter, the scan reads only probed bucket directories —
-    and return exactly the rows of the unindexed ann_topk_lsh."""
-    import re
-
-    from webscrape_neko_jirushi_spark.operators import similarity
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    query = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    idx = str(tmp_path / "ann_index")
-    # manifest=False pins the LEGACY bare-tree layout: this test gates
-    # the Catalyst partition-pruning contract of that path (the
-    # manifest path has its own file-list gate below)
-    similarity.build_ann_index(e, idx, dim=64, bits=8, seed=7, manifest=False)
-
-    probed = similarity.ann_topk_indexed(spark, idx, query, k=10, bits=8, seed=7)
-    plan = P.physical_plan(probed)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "bucket" in m.group(1), plan[:2000]
-
-    got = [(r["vec_id"], r["cosine"]) for r in probed.collect()]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in similarity.ann_topk_lsh(e, query, k=10, bits=8, seed=7).collect()
-    ]
-    assert got == want
-
-    # the probe reads a strict subset of the bucket directories:
-    # at hamming<=1 over 8 bits, at most 9 of the 2^8 buckets
-    planes = similarity._hyperplanes(64, 8, 7)
-    probe = similarity._probe_buckets(query, planes, 1)
-    n_all = spark.read.parquet(idx).select("bucket").distinct().count()
-    assert len(probe) == 9 and n_all > len(probe)
-
-
 def test_simhash_wide_banded_pairs_match_bruteforce(spark):
     """120-bit pigeonhole banding is exact: same pair set as the
     brute-force Hamming join over (sim_hi, sim_lo) on a planted
@@ -265,40 +228,6 @@ def test_simhash_wide_halves_match_narrow_on_hi(spark):
         F.col("sim_hi") != F.col("simhash")
     )
     assert joined.count() == 0
-
-
-def test_ivf_index_probe_partition_pruned(spark, tmp_path):
-    """The persisted IVF index (cell-partitioned parquet) must be
-    probed through Catalyst partition pruning — the nprobe cell
-    IN-list is a PartitionFilter — and return exactly the rows of the
-    unindexed ivf_topk over the same corpus and centroids."""
-    import re
-
-    from webscrape_neko_jirushi_spark.operators import similarity
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = [
-        [float(x) for x in r["embedding"]]
-        for r in e.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    ]
-    query = [float(x) for x in e.filter(F.col("vec_id") == 7).head()["embedding"]]
-    idx = str(tmp_path / "ivf_index")
-    similarity.build_ivf_index(e, idx, cents, manifest=False)
-
-    probed = similarity.ivf_topk_indexed(spark, idx, query, cents, k=10, nprobe=2)
-    plan = P.physical_plan(probed)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "cell" in m.group(1), plan[:2000]
-
-    got = [(r["vec_id"], r["cosine"]) for r in probed.collect()]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in similarity.ivf_topk(e, query, cents, k=10, nprobe=2).collect()
-    ]
-    assert got == want
-    # nprobe=2 of 4 cells: the scan's partition list is a strict subset
-    n_cells = spark.read.parquet(idx).select("cell").distinct().count()
-    assert n_cells > 2
 
 
 def test_ngram_restricted_semi_join_is_broadcast(spark):

@@ -249,7 +249,7 @@ def test_ivf_training_is_deterministic_and_feeds_the_index(spark, tmp_path):
     similarity.build_ivf_index(e, path, c1)
     qv = [float(x) for x in e.filter(F.col("vec_id") == 77).head()["embedding"]]
     direct = similarity.ivf_topk(e, qv, c1, k=5, nprobe=2).collect()
-    indexed = similarity.ivf_topk_indexed(spark, path, qv, c1, k=5, nprobe=2).collect()
+    indexed = similarity.ivf_topk_indexed(spark, path, qv, k=5, nprobe=2).collect()
     vecs.unpersist()
     assert [tuple(r) for r in direct] == [tuple(r) for r in indexed]
 

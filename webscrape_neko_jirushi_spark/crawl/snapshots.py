@@ -13,7 +13,9 @@ atomic step, the Iceberg pattern reduced to its core:
 - a manifest (JSON) pins the exact directory set per table, and one
   manifest swap publishes all of a commit's directories together;
 - HEAD is a tiny pointer file swapped with ``os.replace`` (atomic on
-  POSIX) — readers only ever see a fully-committed manifest.
+  POSIX) — readers only ever see a fully-committed manifest. The
+  manifest-then-HEAD publish is ``index_store.publish_manifest``, the
+  step the persisted indexes commit with too.
 
 On a cluster this class is swapped for real Iceberg tables
 (``df.writeTo(...).append()`` inside one transaction); the engine only
@@ -25,7 +27,6 @@ committed manifest) — resume is always consistent.
 from __future__ import annotations
 
 import json
-import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -33,6 +34,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
+
+from ..operators.index_store import _commit_lock, publish_manifest
 
 
 def _data_dir(table: str, epoch: int) -> str:
@@ -133,8 +136,6 @@ class SnapshotStore:
         # under the flock (index_store._commit_lock): racing commits
         # serialize onto distinct versions instead of clobbering, and
         # HEAD never moves backward — readers stay lock-free
-        from ..operators.index_store import _commit_lock
-
         with _commit_lock(self.root):
             return self._commit_locked(epoch, written_replaces, written_appends)
 
@@ -152,29 +153,12 @@ class SnapshotStore:
             tables.setdefault(name, []).append(d)
 
         version = m["version"] + 1
-        manifest = {"version": version, "epoch": epoch, "tables": tables}
-        mname = f"v{version:06d}.json"
-        tmp = self.root / "manifests" / (mname + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.root / "manifests" / mname)
-
-        head_tmp = self.root / "HEAD.tmp"
-        # fsync the pointer AND the directory: replace alone survives
-        # process crashes but a power failure can persist the rename
-        # with empty content (or drop the rename) without these syncs
-        with open(head_tmp, "w") as f:
-            f.write(mname)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, self.root / "HEAD")  # the atomic commit point
-        dfd = os.open(self.root, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        publish_manifest(
+            self.root,
+            {"version": version, "epoch": epoch, "tables": tables},
+            "manifests",
+            "HEAD",
+        )
         return version
 
     # -- time travel (SURVEY §2.11 X69) --------------------------------------

@@ -96,11 +96,11 @@ def build_cluster_labels(
     update rewrites — size it like ``lsh_subparts_for`` (hold expected
     rows per partition ~constant as the corpus grows)."""
     rows = labels.select(F.col(id_col).alias("id"), F.col(label_col).alias("label"))
-    _projected(rows, n_subparts).write.partitionBy("pb").mode("overwrite").parquet(
-        path
-    )
-    IndexManifest.commit(
-        path, "pb", meta={"kind": "cc_labels", "n_subparts": n_subparts}
+    IndexManifest.build(
+        _projected(rows, n_subparts),
+        path,
+        "pb",
+        meta={"kind": "cc_labels", "n_subparts": n_subparts},
     )
 
 
@@ -243,7 +243,7 @@ def apply_cluster_update(spark, updates: DataFrame, path: str) -> None:
     # is dropped from the head, and the CAS on the derivation version
     # turns a concurrent writer into CommitConflict instead of silent
     # file loss
-    stage, _ = IndexManifest.stage_write(out.repartition("pb"), m.root, "pb")
+    stage, _ = IndexManifest.stage_write(out, m.root, "pb")
     IndexManifest.commit_staged(
         m.root, "pb", stage, meta=m.meta,
         replace_values=pbs, expected_version=m.version,

@@ -431,17 +431,10 @@ def build_lsh_text_index(
     with different hash functions than the build."""
     sigs = minhash_signatures(docs, text_col, id_col, n_hashes, k)
     banded = banded_minhash(sigs, id_col, n_hashes, n_bands)
-    # one file per pb dir: without the repartition every write task
-    # emits a file into every pb it holds rows for, and a pruned probe
-    # then pays O(probed pbs x write tasks) file-OPENS instead of
-    # O(probed pbs) — the bucketing.py small-files footgun, measured
-    # as most of the incremental probes' 100x growth (DEDUP_SCALE.md)
-    _with_pb(banded, n_bands, n_subparts).repartition("pb").write.partitionBy(
-        "pb"
-    ).mode("overwrite").parquet(path)
     from .index_store import IndexManifest
 
-    IndexManifest.commit(
+    IndexManifest.build(
+        _with_pb(banded, n_bands, n_subparts),
         path,
         "pb",
         meta={
@@ -575,9 +568,7 @@ def append_lsh_text_index(
     # dirs inside the locked commit, with the exact list published —
     # no tree re-list, nothing for a concurrent writer to adopt
     stage, _ = IndexManifest.stage_write(
-        _with_pb(
-            banded, int(m.meta["n_bands"]), int(m.meta["n_subparts"])
-        ).repartition("pb"),
+        _with_pb(banded, int(m.meta["n_bands"]), int(m.meta["n_subparts"])),
         path,
         "pb",
     )
@@ -1376,15 +1367,10 @@ def build_simhash_index(
     scale."""
     sigs = simhash_signatures_wide(docs, text_col, id_col)
     banded = simhash_wide_banded(sigs, id_col, max_hamming=max_hamming)
-    # one file per pb dir (see build_lsh_text_index) — this index's
-    # probe opens up to |delta| x (max_hamming+1) dirs, so files-per-dir
-    # multiplies directly into probe latency
-    _with_pb(
-        banded, max_hamming + 1, n_subparts, bucket_col="chunk"
-    ).repartition("pb").write.partitionBy("pb").mode("overwrite").parquet(path)
     from .index_store import IndexManifest
 
-    IndexManifest.commit(
+    IndexManifest.build(
+        _with_pb(banded, max_hamming + 1, n_subparts, bucket_col="chunk"),
         path,
         "pb",
         meta={
@@ -1489,7 +1475,7 @@ def append_simhash_index(new_docs: DataFrame, path: str) -> None:
             int(m.meta["max_hamming"]) + 1,
             int(m.meta["n_subparts"]),
             bucket_col="chunk",
-        ).repartition("pb"),
+        ),
         path,
         "pb",
     )

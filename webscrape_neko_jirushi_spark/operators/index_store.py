@@ -10,9 +10,10 @@ flat). Iceberg fixes this with manifest metadata; this module is that
 fix reduced to its core, sharing the snapshot store's commit protocol:
 
 - data files live where Spark's ``partitionBy`` writes them
-  (``<root>/bucket=5/part-*.parquet``) — the tree stays readable as a
-  plain partitioned table, so legacy tree probes and ad-hoc reads keep
-  working;
+  (``<root>/bucket=5/part-*.parquet``), one file per partition dir
+  after a build: ``build`` and ``stage_write`` are the only writers
+  and both repartition on the key first — the tree stays readable as
+  a plain partitioned table for ad-hoc reads;
 - a manifest (JSON) pins the exact file list per partition value plus
   the build parameters (dim/bits/seed), under ``_manifests/`` —
   underscore-prefixed, so Spark's own listing ignores it;
@@ -24,8 +25,9 @@ A probe then resolves its ~nprobe partitions' files with ONE manifest
 read and hands Spark an explicit file list — zero directory listing,
 O(probed-partitions) metadata instead of O(all-partitions). On a
 cluster this class is swapped for Iceberg table metadata; the
-operators only use ``load``/``commit``/``files_for``, so the swap is a
-constructor change.
+operators only use ``load``/``build``/``stage_write``/
+``commit_staged``/``files_for``, so the swap is a constructor change. Every index has a manifest: a path without one
+is not an index, and every probe and append raises on it.
 
 Write-side cost: ``commit`` re-enumerates the partition tree once per
 build/append. That is the Iceberg trade — metadata work happens at
@@ -69,6 +71,42 @@ def _commit_lock(root: Path):
         os.close(fd)
 
 
+def _write_synced(path: Path, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def publish_manifest(
+    root: Path, manifest: dict, manifests_dir: str, head: str
+) -> None:
+    """The publish step both manifest stores share (this one and
+    ``crawl/snapshots.py``): write ``manifest`` as
+    ``<root>/<manifests_dir>/v<version>.json``, then swap the ``head``
+    pointer file to it. Callers hold ``_commit_lock``.
+
+    Each file is written to a ``.tmp`` sibling, fsynced, then
+    ``os.replace``d into place, and the root directory is fsynced
+    last: the replace alone is atomic against process crashes, but on
+    a power failure ext4/xfs may persist a rename with empty content
+    unless the file was synced first (and drop the rename itself
+    unless the directory is). The HEAD replace is the commit point —
+    readers only ever see a fully written manifest."""
+    mdir = root / manifests_dir
+    mdir.mkdir(parents=True, exist_ok=True)
+    mname = f"v{manifest['version']:06d}.json"
+    _write_synced(mdir / (mname + ".tmp"), json.dumps(manifest))
+    os.replace(mdir / (mname + ".tmp"), mdir / mname)
+    _write_synced(root / (head + ".tmp"), mname)
+    os.replace(root / (head + ".tmp"), root / head)
+    dfd = os.open(root, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 class IndexManifest:
     """One committed manifest version of a partition-keyed index."""
 
@@ -110,8 +148,8 @@ class IndexManifest:
 
     @staticmethod
     def load(path: str | Path) -> "IndexManifest | None":
-        """The committed manifest at ``path``, or None if the index was
-        built without one (legacy tree probe applies)."""
+        """The committed manifest at ``path``, or None if nothing was
+        ever committed there."""
         root = IndexManifest._local_root(path)
         head = root / "_HEAD"
         if not head.exists():
@@ -137,18 +175,15 @@ class IndexManifest:
 
     # -- write side ---------------------------------------------------------
     @staticmethod
-    def _disk_files(root: Path, key: str, values=None) -> dict[str, list[str]]:
+    def _disk_files(root: Path, key: str) -> dict[str, list[str]]:
         """Current on-disk data files per partition value (the walk
-        ``commit`` snapshots); restricted to ``values`` when given."""
+        ``commit`` snapshots)."""
         partitions: dict[str, list[str]] = {}
         prefix = f"{key}="
-        wanted = None if values is None else {str(v) for v in values}
         for d in sorted(root.iterdir()):
             if not d.is_dir() or not d.name.startswith(prefix):
                 continue
             value = d.name[len(prefix):]
-            if wanted is not None and value not in wanted:
-                continue
             files = sorted(
                 str(f.relative_to(root))
                 for f in d.iterdir()
@@ -163,8 +198,7 @@ class IndexManifest:
     @staticmethod
     def all_referenced_files(path: str | Path) -> set[str]:
         """Union of every remaining manifest version's file lists —
-        the liveness set ``vacuum`` protects and the baseline
-        ``uncommitted_files`` diffs against."""
+        the liveness set ``vacuum`` protects."""
         root = IndexManifest._local_root(path)
         mdir = root / "_manifests"
         live: set[str] = set()
@@ -176,24 +210,23 @@ class IndexManifest:
         return live
 
     @staticmethod
-    def uncommitted_files(path: str | Path, key: str, values) -> dict[str, list[str]]:
-        """Per-partition files currently on disk in ``values`` that NO
-        manifest version references — i.e. exactly what a just-finished
-        append wrote there. The building block of a copy-on-write
-        partition REWRITE: write replacement rows with mode=append
-        (part-file names are unique, nothing collides), resolve them
-        here, then ``commit`` an explicit partitions dict in which the
-        rewritten values list only these files. Same caveat as
-        ``commit``'s re-list: run ``vacuum`` after a KILLED append, or
-        its stray files would be adopted as if they were the rewrite."""
+    def build(df, path: str | Path, key: str, meta: dict) -> "IndexManifest":
+        """Write ``df`` as a fresh index at ``path`` and commit its
+        manifest — the one build path of every persisted index.
+
+        Rows are repartitioned on ``key`` before the ``partitionBy``
+        write, so each partition dir holds ONE data file: without it
+        every write task emits a file into every dir it holds rows
+        for, and a pruned probe pays O(probed dirs x write tasks)
+        file-OPENS instead of O(probed dirs) — measured as most of the
+        incremental probes' 100x growth in ``BENCH/DEDUP_SCALE.md``.
+        ``meta`` pins the build parameters appends and probes read
+        back (planes, centroids, codebooks, band geometry)."""
         root = IndexManifest._local_root(path)
-        live = IndexManifest.all_referenced_files(root)
-        on_disk = IndexManifest._disk_files(root, key, values)
-        return {
-            v: fresh
-            for v, files in on_disk.items()
-            if (fresh := [f for f in files if f not in live])
-        }
+        df.repartition(key).write.partitionBy(key).mode("overwrite").parquet(
+            str(root)
+        )
+        return IndexManifest.commit(root, key, meta=meta)
 
     @staticmethod
     def stage_write(
@@ -203,22 +236,23 @@ class IndexManifest:
         concurrent writers safe at the DATA level, not just the
         manifest level: the incoming rows land under
         ``<root>/_staging/<job-uuid>/`` (Spark-invisible, never inside
-        a live partition dir), so no other writer's tree re-list or
-        ``uncommitted_files`` resolution can ever adopt them, and this
-        writer KNOWS its exact file set instead of inferring it from
-        the tree. Returns ``(stage_dir, {partition value: [file
-        names]})``; hand the stage dir to :meth:`commit_staged`, which
+        a live partition dir), so no other writer's tree re-list can
+        ever adopt them, and this writer KNOWS its exact file set
+        instead of inferring it from the tree. Returns ``(stage_dir,
+        {partition value: [file names]})``; hand the stage dir to :meth:`commit_staged`, which
         moves the files into the live dirs and publishes them in one
         locked step. A crash before that commit leaves only a staging
         subtree for ``vacuum`` to reclaim — live data is untouched.
 
-        Callers keep their own ``repartition(key)`` upstream: the
-        one-file-per-partition-dir layout moves over verbatim."""
+        Rows are repartitioned on ``key`` first, as in :meth:`build`,
+        so each write adds at most one file per partition dir."""
         import uuid as _uuid
 
         root = IndexManifest._local_root(path)
         stage = root / "_staging" / _uuid.uuid4().hex
-        df.write.partitionBy(key).mode("overwrite").parquet(str(stage))
+        df.repartition(key).write.partitionBy(key).mode("overwrite").parquet(
+            str(stage)
+        )
         files: dict[str, list[str]] = {}
         prefix = f"{key}="
         for d in sorted(stage.iterdir()):
@@ -347,9 +381,9 @@ class IndexManifest:
         version references but this dict omits are NOT deleted: older
         manifest versions keep resolving them (time travel), and they
         become reclaimable by ``vacuum`` once ``expire_versions``
-        drops the last version naming them. Callers build the dict as
-        ``prev.partitions`` with the rewritten values' lists replaced
-        by ``uncommitted_files(...)``.
+        drops the last version naming them. Rewrites that stage their
+        rows use :meth:`commit_staged` with ``replace_values``, which
+        builds this dict under the lock.
 
         Local paths only (see ``_local_root``).
 
@@ -397,30 +431,7 @@ class IndexManifest:
             "meta": meta if meta is not None else (prev.meta if prev else {}),
             "partitions": partitions,
         }
-        (root / "_manifests").mkdir(parents=True, exist_ok=True)
-        mname = f"v{version:06d}.json"
-        tmp = root / "_manifests" / (mname + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, root / "_manifests" / mname)
-
-        head_tmp = root / "_HEAD.tmp"
-        # fsync the pointer content AND the directory: os.replace alone
-        # is atomic against process crashes, but on a power failure
-        # ext4/xfs may persist the rename with empty content unless the
-        # file is synced first (and the rename itself unless the dir is)
-        with open(head_tmp, "w") as f:
-            f.write(mname)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, root / "_HEAD")  # the atomic commit point
-        dfd = os.open(root, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        publish_manifest(root, manifest, "_manifests", "_HEAD")
         return IndexManifest(
             root, key, manifest["meta"], partitions, version
         )
@@ -431,7 +442,7 @@ class IndexManifest:
     ) -> list[str]:
         """Partition values whose HEAD file list exceeds ``max_files``
         — the compaction trigger. Builds land one file per partition
-        (the writers repartition on the key), but every append adds
+        (``build`` repartitions on the key), but every append adds
         one more, so after N deltas a pruned probe pays N file-opens
         per probed dir again; check this after append bursts the way
         ``ann_index_needs_reindex`` is checked after occupancy
@@ -604,11 +615,7 @@ def compact_index(spark, path: str | Path, max_files: int = 1) -> int:
         return 0
     files = m.files_for(values)
     stage, staged = IndexManifest.stage_write(
-        spark.read.option("basePath", str(root))
-        .parquet(*files)
-        .repartition(m.key),
-        root,
-        m.key,
+        spark.read.option("basePath", str(root)).parquet(*files), root, m.key
     )
     missing = [v for v in values if v not in staged]
     if missing:

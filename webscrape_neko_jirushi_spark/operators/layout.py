@@ -209,12 +209,9 @@ def build_range_layout(
         (v >= F.lit(int(s))).cast("int") for s in split_vals
     ) if split_vals else F.lit(0)
     binned = df.withColumn("_bin", binc.cast("int"))
-    root = IndexManifest._local_root(path)
-    binned.repartition("_bin").write.partitionBy("_bin").mode(
-        "overwrite"
-    ).parquet(str(root))
-    return IndexManifest.commit(
-        root,
+    return IndexManifest.build(
+        binned,
+        path,
         "_bin",
         meta={"col": col, "k": k, "sub_bits": sub_bits, "splits": split_vals},
     )

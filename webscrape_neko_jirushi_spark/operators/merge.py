@@ -13,8 +13,9 @@ manifest machinery):
   full-outer column coalescing, oracle-expressible in ANSI SQL.
 - :func:`build_merge_table` / :func:`read_merge_table` — a hash-bucketed
   (``mb = portable_hash64(key) % n_buckets``) manifest-committed table;
-  one file per bucket dir (the writers repartition on the bucket key —
-  the small-files rule every pruned-probe index in this repo follows).
+  one file per bucket dir (``IndexManifest.build`` and ``stage_write``
+  repartition on the bucket key — the small-files rule every
+  pruned-probe index in this repo follows).
 - :func:`merge_into` — the FILE-PRUNED copy-on-write MERGE: only the
   buckets that contain an updated/deleted key are read, rewritten to a
   job-scoped staging tree, and swapped in one CAS-protected manifest
@@ -95,18 +96,13 @@ def build_merge_table(
 ) -> IndexManifest:
     """Write ``df`` as a hash-bucketed, manifest-committed merge table.
 
-    One file per bucket dir (repartition on the bucket BEFORE
-    partitionBy — otherwise every write task emits a sliver into every
-    bucket dir and a pruned merge pays O(buckets × tasks) file-opens;
-    pinned repo-wide by test_index_store.py). The bucket count is
-    frozen at build time in the manifest meta, like X18's bucketBy:
+    One file per bucket dir (``IndexManifest.build``). The bucket count
+    is frozen at build time in the manifest meta, like X18's bucketBy:
     size it for the table's TARGET scale.
     """
-    staged = _with_bucket(df, key, n_buckets).repartition(BUCKET_COL)
-    root = IndexManifest._local_root(path)
-    staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(str(root))
-    return IndexManifest.commit(
-        root,
+    return IndexManifest.build(
+        _with_bucket(df, key, n_buckets),
+        path,
         BUCKET_COL,
         meta={"key": key, "n_buckets": n_buckets, "hash": "portable60/mrg"},
     )
@@ -181,7 +177,7 @@ def merge_into(
         target = up_b.limit(0)
     merged = merge_frames(
         target, up_b, key, deletes=del_b.select(key) if del_b is not None else None
-    ).repartition(BUCKET_COL)
+    )
 
     stage, _staged_files = IndexManifest.stage_write(merged, m.root, BUCKET_COL)
     # delta-sized scan of the staged tree (NOT a re-execution of the plan)

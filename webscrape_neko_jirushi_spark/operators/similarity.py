@@ -248,7 +248,6 @@ def build_ann_index(
     bits: int = 8,
     seed: int = 7,
     vec_col: str = "embedding",
-    manifest: bool = True,
 ) -> None:
     """Materialize the LSH index as a ``bucket``-partitioned parquet
     table: one directory per bucket (2^bits dirs). Probing then reads
@@ -258,23 +257,17 @@ def build_ann_index(
     vectors with ``append_ann_index`` and rebuild when
     ``ann_index_needs_reindex`` fires (the index is derived data).
 
-    With ``manifest=True`` (default) the build also commits an
-    ``IndexManifest`` pinning per-bucket file lists + the build params
-    (dim/bits/seed): a probe then resolves its files from ONE manifest
-    read instead of listing the whole partition tree — the listing was
-    the entire residual 100x probe growth in ``BENCH/DEDUP_SCALE.md``.
-    ``manifest=False`` keeps the bare partitioned table (probed via
-    Catalyst partition pruning, plan-gated in test_plans.py)."""
-    # one file per bucket dir (see dedup.build_lsh_text_index): the
-    # multiprobe opens <= bits+1 dirs, and files-per-dir multiplies
-    # directly into probe file-open latency
-    lsh_buckets(embeddings, dim, bits=bits, seed=seed, vec_col=vec_col).repartition(
-        "bucket"
-    ).write.partitionBy("bucket").mode("overwrite").parquet(path)
-    if manifest:
-        IndexManifest.commit(
-            path, "bucket", meta={"dim": dim, "bits": bits, "seed": seed}
-        )
+    The build commits an ``IndexManifest`` pinning per-bucket file
+    lists + the build params (dim/bits/seed): a probe then resolves
+    its files from ONE manifest read instead of listing the whole
+    partition tree — the listing was the entire residual 100x probe
+    growth in ``BENCH/DEDUP_SCALE.md``."""
+    IndexManifest.build(
+        lsh_buckets(embeddings, dim, bits=bits, seed=seed, vec_col=vec_col),
+        path,
+        "bucket",
+        meta={"dim": dim, "bits": bits, "seed": seed},
+    )
 
 
 def append_ann_index(
@@ -292,18 +285,18 @@ def append_ann_index(
     Occupancy drift: appends grow expected bucket occupancy linearly
     while ``bits`` stays fixed; check ``ann_index_needs_reindex``
     after large appends and rebuild at the new size when it fires."""
-    m = _checked_manifest(path, "bucket", ["bits", "seed", "dim"])
-    if m is None:
-        raise ValueError(
+    m = _checked_manifest(
+        path,
+        "bucket",
+        ["bits", "seed", "dim"],
+        missing_msg=(
             f"append_ann_index: no manifest at {path} — build with "
-            "build_ann_index(manifest=True) first (appending to a bare "
-            "tree would leave probes unaware of the new files)"
-        )
+            "build_ann_index first"
+        ),
+    )
     planes = _hyperplanes(int(m.meta["dim"]), int(m.meta["bits"]), int(m.meta["seed"]))
     stage, _ = IndexManifest.stage_write(
-        embeddings.withColumn(
-            "bucket", lsh_bucket_col(F.col(vec_col), planes)
-        ).repartition("bucket"),
+        embeddings.withColumn("bucket", lsh_bucket_col(F.col(vec_col), planes)),
         path,
         "bucket",
     )
@@ -320,9 +313,12 @@ def ann_index_needs_reindex(
     — rebuild with ``build_ann_index(bits=lsh_bits_for(n_total))``.
     The caller supplies the total count (it knows its append sizes;
     counting here would burn a job per check)."""
-    m = _checked_manifest(path, "bucket", ["bits"])
-    if m is None:
-        raise ValueError(f"ann_index_needs_reindex: no manifest at {path}")
+    m = _checked_manifest(
+        path,
+        "bucket",
+        ["bits"],
+        missing_msg=f"ann_index_needs_reindex: no manifest at {path}",
+    )
     return lsh_bits_for(n_vecs_total, target_occupancy) > int(m.meta["bits"])
 
 
@@ -332,7 +328,8 @@ def _checked_manifest(
     required_meta: list[str],
     kind: str | None = None,
     desc: str | None = None,
-    missing_msg: str | None = None,
+    *,
+    missing_msg: str,
 ):
     """Load and VALIDATE the index manifest: probing an ANN index with
     the IVF operator (or vice versa) would silently map probe values
@@ -344,14 +341,12 @@ def _checked_manifest(
     the banded minhash/simhash/emb-LSH and cluster-label stores —
     five hand-rolled copies drifted before this): ``kind`` pins the
     ``meta['kind']`` tag where a family writes one, ``desc`` names
-    the family in the mismatch error, and ``missing_msg`` turns the
-    absent-manifest case into that family's build-hint error instead
-    of returning None."""
+    the family in the mismatch error, and ``missing_msg`` is the
+    family's build-hint error for a path with no manifest (every
+    index has one, so a bare path is never probed)."""
     m = IndexManifest.load(path)
     if m is None:
-        if missing_msg is not None:
-            raise ValueError(missing_msg)
-        return None
+        raise ValueError(missing_msg)
     missing = [k for k in required_meta if k not in m.meta]
     bad_kind = kind is not None and m.meta.get("kind") != kind
     if m.key != expected_key or missing or bad_kind:
@@ -391,8 +386,6 @@ def ann_topk_indexed(
     path: str,
     query: list[float],
     k: int = 10,
-    bits: int = 8,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multiprobe_hamming: int = 1,
@@ -402,38 +395,38 @@ def ann_topk_indexed(
     the same rows as ``ann_topk_lsh`` over the same corpus
     (test-proven).
 
-    With a manifest (the default build), the probed buckets' files
-    come from ONE manifest read and Spark is handed the explicit file
-    list — O(probed-partitions) metadata, zero directory listing, and
-    (bits, seed) are taken from the manifest so the probe can never
-    use different planes than the build. Without one (legacy tree),
-    the bucket membership test is a PARTITION filter (literal
-    IN-list) and Catalyst prunes to the probed directories after an
-    O(all-partitions) listing."""
-    m = _checked_manifest(path, "bucket", ["bits", "seed", "dim"])
-    if m is not None:
-        if len(query) != int(m.meta["dim"]):
-            # a wrong-dimension query would build DIFFERENT hyperplanes
-            # than the index was bucketed with and silently probe wrong
-            # buckets — fail loudly, same rationale as _checked_manifest
-            raise ValueError(
-                f"query dim {len(query)} != index dim {m.meta['dim']} at {path}"
-            )
-        bits, seed = int(m.meta["bits"]), int(m.meta["seed"])
-    planes = _hyperplanes(len(query), bits, seed)
+    The probed buckets' files come from ONE manifest read and Spark is
+    handed the explicit file list — O(probed-partitions) metadata,
+    zero directory listing — and (bits, seed) are taken from the
+    manifest so the probe can never use different planes than the
+    build."""
+    m = _checked_manifest(
+        path,
+        "bucket",
+        ["bits", "seed", "dim"],
+        missing_msg=(
+            f"ann_topk_indexed: no manifest at {path} — build with "
+            "build_ann_index first"
+        ),
+    )
+    if len(query) != int(m.meta["dim"]):
+        # a wrong-dimension query would build DIFFERENT hyperplanes
+        # than the index was bucketed with and silently probe wrong
+        # buckets — fail loudly, same rationale as _checked_manifest
+        raise ValueError(
+            f"query dim {len(query)} != index dim {m.meta['dim']} at {path}"
+        )
+    planes = _hyperplanes(len(query), int(m.meta["bits"]), int(m.meta["seed"]))
     if n_probes is not None:
         probe = multiprobe_sequence(query, planes, n_probes)
     else:
         probe = _probe_buckets(query, planes, multiprobe_hamming)
-    if m is not None:
-        files = m.files_for(probe)
-        if not files:
-            # every probed bucket is empty: no directory was ever
-            # written for them, so there is nothing to scan at all
-            return _empty_probe_result(spark, m, id_col)
-        pruned = spark.read.parquet(*files)
-    else:
-        pruned = spark.read.parquet(path).filter(F.col("bucket").isin(probe))
+    files = m.files_for(probe)
+    if not files:
+        # every probed bucket is empty: no directory was ever
+        # written for them, so there is nothing to scan at all
+        return _empty_probe_result(spark, m, id_col)
+    pruned = spark.read.parquet(*files)
     return (
         pruned.select(
             F.col(id_col),
@@ -932,28 +925,22 @@ def build_ivf_index(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    manifest: bool = True,
 ) -> None:
     """Materialize the IVF assignment as a ``cell``-partitioned parquet
     table — the IVF twin of ``build_ann_index``. Probing reads only the
     ``nprobe`` probed cell directories. One scan + one write; rebuild
     on corpus or centroid change (the index is derived data).
 
-    ``manifest=True`` (default) commits an ``IndexManifest`` so probes
-    resolve their cell files from one manifest read (no partition-tree
-    listing); ``manifest=False`` leaves a bare partitioned table probed
-    via Catalyst partition pruning."""
-    ivf_assign(
-        embeddings, centroids, id_col=id_col, vec_col=vec_col
-    ).write.partitionBy("cell").mode("overwrite").parquet(path)
-    if manifest:
-        # centroids pinned in the manifest (tiny: C x dim floats) so
-        # appends can never assign with different cells than the build
-        IndexManifest.commit(
-            path,
-            "cell",
-            meta={"centroids": [[float(x) for x in c] for c in centroids]},
-        )
+    The build commits an ``IndexManifest`` so probes resolve their
+    cell files from one manifest read (no partition-tree listing)."""
+    # centroids pinned in the manifest (tiny: C x dim floats) so
+    # appends can never assign with different cells than the build
+    IndexManifest.build(
+        ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col),
+        path,
+        "cell",
+        meta={"centroids": [[float(x) for x in c] for c in centroids]},
+    )
 
 
 def append_ivf_index(
@@ -966,12 +953,15 @@ def append_ivf_index(
     Centroids are derived data too — when the corpus drifts enough
     that assignments would change materially, rebuild with fresh
     centroids (an IVF re-cluster is a full rebuild by definition)."""
-    m = _checked_manifest(path, "cell", ["centroids"])
-    if m is None:
-        raise ValueError(
+    m = _checked_manifest(
+        path,
+        "cell",
+        ["centroids"],
+        missing_msg=(
             f"append_ivf_index: no centroid-bearing manifest at {path} — "
-            "build with build_ivf_index(manifest=True) first"
-        )
+            "build with build_ivf_index first"
+        ),
+    )
     stage, _ = IndexManifest.stage_write(
         ivf_assign(
             embeddings, m.meta["centroids"], id_col=id_col, vec_col=vec_col
@@ -986,34 +976,31 @@ def ivf_topk_indexed(
     spark,
     path: str,
     query: list[float],
-    centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k over a persisted ``build_ivf_index`` table: the probed
-    cells are computed driver-side over the tiny centroid list, and
-    with a manifest (default build) their files come from ONE manifest
-    read — no partition-tree listing; on a bare tree the cell
-    membership test is a PARTITION filter (literal IN-list) pruned by
-    Catalyst. Returns the same rows as ``ivf_topk`` over the same
-    corpus and centroids (test-proven)."""
-    m = _checked_manifest(path, "cell", ["centroids"])
-    if m is not None:
-        # the manifest's pinned centroids are the ones the data was
-        # assigned with — probing with anything else reads wrong cells
-        centroids = m.meta["centroids"]
-    probe = _probe_cells(query, centroids, nprobe)
-    if m is not None:
-        files = m.files_for([int(p) for p in probe])
-        if not files:
-            return _empty_probe_result(spark, m, id_col)
-        pruned = spark.read.parquet(*files)
-    else:
-        pruned = spark.read.parquet(path).filter(
-            F.col("cell").isin([int(p) for p in probe])
-        )
+    cells are computed driver-side over the manifest's pinned
+    centroids (the ones the data was assigned with), and their files
+    come from ONE manifest read — no partition-tree listing. Returns
+    the same rows as ``ivf_topk`` over the same corpus and centroids
+    (test-proven)."""
+    m = _checked_manifest(
+        path,
+        "cell",
+        ["centroids"],
+        missing_msg=(
+            f"ivf_topk_indexed: no manifest at {path} — build with "
+            "build_ivf_index first"
+        ),
+    )
+    probe = _probe_cells(query, m.meta["centroids"], nprobe)
+    files = m.files_for([int(p) for p in probe])
+    if not files:
+        return _empty_probe_result(spark, m, id_col)
+    pruned = spark.read.parquet(*files)
     return (
         pruned.select(
             F.col(id_col),
@@ -1075,11 +1062,8 @@ def build_emb_lsh_index(
     banded = emb_banded(
         embeddings, dim, n_bands, bits_per_band, id_col, vec_col, keep_vec=True
     )
-    # one file per pb dir (see dedup.build_lsh_text_index)
-    _with_pb(
-        banded, n_bands, n_subparts, bucket_col="bucket"
-    ).repartition("pb").write.partitionBy("pb").mode("overwrite").parquet(path)
-    IndexManifest.commit(
+    IndexManifest.build(
+        _with_pb(banded, n_bands, n_subparts, bucket_col="bucket"),
         path,
         "pb",
         meta={
@@ -1217,7 +1201,7 @@ def append_emb_lsh_index(new_embeddings: DataFrame, path: str) -> None:
             int(m.meta["n_bands"]),
             int(m.meta["n_subparts"]),
             bucket_col="bucket",
-        ).repartition("pb"),
+        ),
         path,
         "pb",
     )
@@ -1488,13 +1472,13 @@ def build_pq_index(
     for append/manifest mechanics and write parallelism, not pruning:
     a PQ probe scans ALL codes by design (that is what the 25-100x
     compression buys)."""
-    pq_encode(embeddings, codebooks, id_col, vec_col).withColumn(
-        "shard",
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)).cast(
-            "int"
+    IndexManifest.build(
+        pq_encode(embeddings, codebooks, id_col, vec_col).withColumn(
+            "shard",
+            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)).cast(
+                "int"
+            ),
         ),
-    ).write.partitionBy("shard").mode("overwrite").parquet(path)
-    IndexManifest.commit(
         path,
         "shard",
         meta={
@@ -1517,12 +1501,15 @@ def append_pq_index(
     partitions, publish a new manifest version atomically. Codebooks
     are distribution statistics — after heavy corpus drift, retrain
     and rebuild (the index is derived data)."""
-    m = _checked_manifest(path, "shard", ["codebooks", "n_shards"])
-    if m is None:
-        raise ValueError(
+    m = _checked_manifest(
+        path,
+        "shard",
+        ["codebooks", "n_shards"],
+        missing_msg=(
             f"append_pq_index: no codebook-bearing manifest at {path} — "
             "build with build_pq_index first"
-        )
+        ),
+    )
     stage, _ = IndexManifest.stage_write(
         pq_encode(embeddings, m.meta["codebooks"], id_col, vec_col).withColumn(
             "shard",
@@ -1548,9 +1535,12 @@ def pq_topk_indexed(
     AND the full shard file list come from one manifest read (no
     partition-tree listing), then the probe is the same
     TakeOrderedAndProject over the code column as ``pq_topk``."""
-    m = _checked_manifest(path, "shard", ["codebooks", "n_shards"])
-    if m is None:
-        raise ValueError(f"pq_topk_indexed: no manifest at {path}")
+    m = _checked_manifest(
+        path,
+        "shard",
+        ["codebooks", "n_shards"],
+        missing_msg=f"pq_topk_indexed: no manifest at {path}",
+    )
     if len(query) != len(m.meta["codebooks"]) * len(m.meta["codebooks"][0][0]):
         raise ValueError(
             f"pq_topk_indexed: query dim {len(query)} does not match the "
@@ -1623,9 +1613,8 @@ def build_ivfpq_index(
     encode differently than the build, and a probe resolves its
     nprobe cells' files from ONE manifest read.
 
-    Unlike the bucket/pb writers, cells are FEW and LARGE, so the
-    build deliberately keeps multi-file cells (intra-cell read
-    parallelism; see the IVF/PQ note on the one-file-per-dir fix)."""
+    One file per cell dir, like every ``IndexManifest.build``: a
+    probe pays one file-open per file in each probed cell."""
     assigned = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col)
     res = assigned.select(
         F.col(id_col),
@@ -1645,10 +1634,8 @@ def build_ivfpq_index(
         vec_col="_res",
         normalize=False,
     )
-    pq_encode(
-        res, books, id_col, "_res", normalize=False, carry_cols=("cell",)
-    ).write.partitionBy("cell").mode("overwrite").parquet(path)
-    IndexManifest.commit(
+    IndexManifest.build(
+        pq_encode(res, books, id_col, "_res", normalize=False, carry_cols=("cell",)),
         path,
         "cell",
         meta={

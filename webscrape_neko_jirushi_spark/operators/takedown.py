@@ -358,9 +358,7 @@ def delete_from_index(
     part = spark.read.option("basePath", str(m.root)).parquet(
         *m.files_for(affected)
     )
-    survivors = part.join(
-        F.broadcast(ids.select(id_col)), id_col, "left_anti"
-    ).repartition(m.key)
+    survivors = part.join(F.broadcast(ids.select(id_col)), id_col, "left_anti")
     stage, _ = IndexManifest.stage_write(survivors, m.root, m.key)
     new = IndexManifest.commit_staged(
         m.root,

@@ -142,12 +142,11 @@ def build_inverted_index(
             "int"
         ),
     )
-    root = IndexManifest._local_root(path)
-    post.repartition(TERM_BUCKET_COL).write.partitionBy(TERM_BUCKET_COL).mode(
-        "overwrite"
-    ).parquet(str(root))
-    return IndexManifest.commit(
-        root, TERM_BUCKET_COL, meta={"n_buckets": n_buckets, "hash": "portable60/inv"}
+    return IndexManifest.build(
+        post,
+        path,
+        TERM_BUCKET_COL,
+        meta={"n_buckets": n_buckets, "hash": "portable60/inv"},
     )
 
 
