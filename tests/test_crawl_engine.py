@@ -220,3 +220,36 @@ def test_epoch_restores_callers_cached_partitioning(spark, mirror, tmp_path, mon
         assert spark.conf.get(COALESCE_CACHED, None) is None
     finally:
         spark.conf.unset(COALESCE_CACHED)
+
+
+# hrefs/srcs urllib cannot parse: a port out of range, a port that is
+# not a number, an unclosed IPv6 bracket
+MALFORMED = [
+    "https://h.test:99999/foster/1/",
+    "https://h.test:abc/foster/2/",
+    "https://[::1/foster/3/",
+]
+
+
+def test_malformed_urls_crawl_like_oracle(spark, tmp_path):
+    """An unparseable URL on a fetched page (or among the seeds) has no
+    canonical form: both crawlers skip it, so the epoch commits and the
+    crawl ends where the oracle's does."""
+    mirror = M.build_mirror(seed=7, n_pages=1, cats_per_page=6, fail_rate=0.0)
+    page = mirror.pages[f"{M.BASE_URL}{M.profile_path(mirror.profile_ids[0])}"]
+    page["body"] = page["body"].replace(
+        "</body>",
+        "".join(f'<a href="{u}">bad</a>' for u in MALFORMED)
+        + f'<div class="photo"><img src="{MALFORMED[0]}x.jpg"></div></body>',
+    )
+    seeds = [M.listing_url(1), MALFORMED[1]]
+    budgets = {h: (BUDGET, MIN_DELAY) for h in [M.MAIN_HOST, *M.TAIL_HOSTS]}
+    want = OracleCrawler(mirror, budgets, max_epochs=50).run(seeds)
+
+    eng = _make_engine(spark, mirror, tmp_path)
+    eng.seed(seeds)
+    eng.run(max_epochs=50)
+    assert {r["url_hash"] for r in eng.url_seen().collect()} == want.url_seen
+    docs = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in eng.documents().collect()}
+    assert docs == want.documents
+    assert len(docs) == 6

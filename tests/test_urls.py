@@ -32,6 +32,9 @@ def test_canonicalize_one_rules():
     assert canonicalize_one("https://h") == "https://h/"
     # absolute URL ignores base
     assert canonicalize_one("https://other/x", "https://base") == "https://other/x"
+    # urllib cannot parse these: no canonical form, as for a NULL URL
+    for bad in ("https://h.test:99999/a", "https://h.test:abc/a", "https://[::1/x"):
+        assert canonicalize_one(bad, "https://base") is None
 
 
 def test_canonicalize_udf_matches_python(spark):
@@ -40,6 +43,7 @@ def test_canonicalize_udf_matches_python(spark):
         "https://img-cdn-a.test/media/foster_1_x.png",
         "HTTP://X.test/a?z=1&y=2#f",
         "/img/cat_5_main.jpg",
+        "https://h.test:abc/a",  # unparseable -> NULL
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = [

@@ -67,8 +67,11 @@ def _persist_coalesced(df: DataFrame) -> DataFrame:
     """``df.persist()`` with AQE free to coalesce the cached plan's output
     partitions. An epoch's cached frames hold a few hundred to a few
     thousand rows; pinned at the shuffle-partition count, every stage
-    that reads them runs that many near-empty tasks, and each task that
-    feeds a Python worker pays its start-up cost. The setting is read
+    that reads them runs that many near-empty tasks, and each one pays
+    the per-task fixed cost: scheduling, plus for a task that feeds a
+    Python worker the Arrow round trip (its import-cache reset inside
+    the worker is under a millisecond with ``worker_daemon``, against
+    0.15-0.25 s with SPARK_HOME's zips on the path). The setting is read
     when ``persist()`` plans the cached query, so it is flipped only
     around that call and the caller's value is restored; the session
     default stays off (a session-wide flip also re-plans the analytics
@@ -284,8 +287,10 @@ class CrawlEngine:
         """Build new frontier rows from ``url, depth, priority,
         api_image_1`` candidates; the only place frontier rows are made.
 
-        Robots-disallowed URLs leave (T4). The min ``(depth, priority)``
-        row per ``url_hash`` stays (J3: the first discovery wins). URLs
+        Robots-disallowed URLs leave (T4), and so do NULL URLs
+        (``canonicalize_url`` of an unparseable one: ``xxhash64(NULL)``
+        is the constant 42, so unfiltered they would enqueue). The min
+        ``(depth, priority)`` row per ``url_hash`` stays (J3: the first discovery wins). URLs
         already in url_seen are dropped by an exact anti-join with the
         bloom/cuckoo filter in front of it (J1): definite-new rows skip
         the join, and the filter's positives, false ones included, are
@@ -300,8 +305,11 @@ class CrawlEngine:
             .withColumn("host", host_col(F.col("url")))
         )
         w = Window.partitionBy("url_hash").orderBy("depth", "priority")
+        # NULL URLs leave here, not ahead of the hashing: there the
+        # optimizer moves the filter into the discovery plan, and the
+        # commit ran three more jobs per epoch (traced crawl_polite)
         rows = rows.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") == 1
+            (F.col("rn") == 1) & F.col("url").isNotNull()
         ).drop("rn")
         filt = self._ensure_bloom()
         if filt.is_empty():

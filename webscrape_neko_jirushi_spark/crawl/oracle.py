@@ -143,12 +143,12 @@ def extract_profile_spans_dom(
             if not src:
                 continue
             canonical = canonicalize_one(src, base_url)
-            if canonical not in image_urls and url_interest(canonical):
+            if canonical and canonical not in image_urls and url_interest(canonical):
                 image_urls.append(canonical)
 
     if api_image_1:
         main = canonicalize_one(api_image_1, base_url)
-        if main not in image_urls:
+        if main and main not in image_urls:
             image_urls.insert(0, main)
     for u in image_urls:
         spans.append({"kind": "image", "media_ref": u})
@@ -159,7 +159,7 @@ def extract_profile_spans_dom(
             href = n.attrs.get("href") or ""
             if FOSTER_LINK_RE.search(href):
                 canonical = canonicalize_one(href, base_url)
-                if canonical not in link_urls:
+                if canonical and canonical not in link_urls:
                     link_urls.append(canonical)
     for u in link_urls:
         spans.append({"kind": "link", "media_ref": u})
@@ -289,6 +289,8 @@ class OracleCrawler:
             # a repeated seed keeps its first position, like a repeated
             # discovery (J3)
             cu = canonicalize_one(u)
+            if cu is None:
+                continue  # unparseable: the engine's enqueue drops it too
             pending.setdefault(cu, (0, i + 1))
             api_image.setdefault(cu, None)
 
@@ -363,7 +365,7 @@ class OracleCrawler:
             # merge discoveries: keep-min (depth, priority) per url; drop seen
             discoveries.sort(key=lambda d: (d[0], d[1]))
             for depth, priority, url, img1 in discoveries:
-                if url in res.seen_urls or url in pending:
+                if url is None or url in res.seen_urls or url in pending:
                     continue
                 pending[url] = (depth, priority)
                 api_image[url] = img1

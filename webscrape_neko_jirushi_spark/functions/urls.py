@@ -26,20 +26,25 @@ from pyspark.sql import types as T
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
 
-def canonicalize_one(url: str, base: str = "") -> str:
+def canonicalize_one(url: str, base: str = "") -> str | None:
     """Canonical form of one URL; pure function shared by the pandas UDF
-    and the sequential oracle so both sides agree byte-for-byte."""
+    and the sequential oracle so both sides agree byte-for-byte. A URL
+    urllib cannot parse (a port out of range or not a number, an
+    unclosed IPv6 bracket) has none: ``None``, like a NULL input."""
     if url is None:
         return None
     u = url.strip()
-    if base and not u.startswith(("http://", "https://")):
-        # reference rule: urljoin(base, rel) when not absolute
-        # (comprehensive_scraper.py:181-182)
-        u = urljoin(base, u)
-    parts = urlsplit(u)
+    try:
+        if base and not u.startswith(("http://", "https://")):
+            # reference rule: urljoin(base, rel) when not absolute
+            # (comprehensive_scraper.py:181-182)
+            u = urljoin(base, u)
+        parts = urlsplit(u)
+        port = parts.port
+    except ValueError:
+        return None
     scheme = parts.scheme.lower()
     host = parts.hostname.lower() if parts.hostname else ""
-    port = parts.port
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
         netloc = f"{host}:{port}"

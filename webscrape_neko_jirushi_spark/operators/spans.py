@@ -136,12 +136,12 @@ def extract_profile_spans(html: str, api_image_1: str | None, base_url: str) -> 
             if not src:
                 continue
             canonical = canonicalize_one(src, base_url)
-            if canonical not in image_urls and url_interest(canonical):
+            if canonical and canonical not in image_urls and url_interest(canonical):
                 image_urls.append(canonical)
 
     if api_image_1:
         main = canonicalize_one(api_image_1, base_url)
-        if main not in image_urls:
+        if main and main not in image_urls:
             image_urls.insert(0, main)
 
     for u in image_urls:
@@ -154,7 +154,7 @@ def extract_profile_spans(html: str, api_image_1: str | None, base_url: str) -> 
         href = m.group(1)
         if FOSTER_LINK_RE.search(href):
             canonical = canonicalize_one(href, base_url)
-            if canonical not in link_urls:
+            if canonical and canonical not in link_urls:
                 link_urls.append(canonical)
     for u in link_urls:
         spans.append({"kind": "link", "media_ref": u})
