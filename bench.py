@@ -111,10 +111,6 @@ def run_crawl(spark, n_pages: int, n_cpus: int) -> dict:
             budget,
             M.BASE_URL,
             n_salts=max(n_cpus, 4),
-            # BENCH_USE_CUCKOO=1 swaps the URL-seen sketch for the
-            # deletion-capable cuckoo shards (distributed per-shard
-            # apply_delta maintenance) to measure its cost vs bloom
-            use_cuckoo=os.environ.get("BENCH_USE_CUCKOO") == "1",
             # pages-only crawl (no image-URL fan-out) when the scaling
             # evidence wants the compute-bound configuration: the
             # image epoch is a pure JVM join+write wave whose disk IO

@@ -1,4 +1,4 @@
-"""Sharded bloom / cuckoo filter correctness (SURVEY.md §7.2: sketches
+"""Sharded bloom filter correctness (SURVEY.md §7.2: sketches
 are pre-filters only — no false negatives ever; FP paths re-checked)."""
 
 from __future__ import annotations
@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from webscrape_neko_jirushi_spark.crawl.bloom import BloomShards, CuckooShards
+from webscrape_neko_jirushi_spark.crawl.bloom import BloomShards
 
 
 def test_bloom_no_false_negatives(spark):
@@ -45,20 +45,6 @@ def test_bloom_prefilter_column(spark):
             assert r["bloom_maybe_seen"] is True  # no false negatives
 
 
-def test_cuckoo_insert_contains_delete():
-    ck = CuckooShards.empty(n_shards=4, n_buckets=1 << 12)
-    keys = [hash(("k", i)) for i in range(5000)]
-    for k in keys:
-        assert ck.insert(k)
-    assert all(ck.contains(k) for k in keys)
-    # delete makes a URL re-fetchable (recrawl path)
-    for k in keys[:1000]:
-        assert ck.delete(k)
-    missing = sum(not ck.contains(k) for k in keys[:1000])
-    assert missing >= 990  # rare fp collisions tolerated
-    assert all(ck.contains(k) for k in keys[1000:])
-
-
 def test_bloom_distributed_delta_matches_full_build(spark):
     """build_delta + merge_delta (the engine's epoch path) is
     bit-identical to one full distributed build over the union."""
@@ -77,94 +63,3 @@ def test_bloom_distributed_delta_matches_full_build(spark):
     assert set(incremental.bits) == set(full.bits)
     for s in full.bits:
         assert np.array_equal(incremental.bits[s], full.bits[s]), s
-
-
-def test_cuckoo_distributed_build_and_probe(spark):
-    """Distributed cuckoo build: no false negatives, vectorized probe,
-    deletes make keys definitively absent."""
-    seen = spark.range(0, 4000).select(
-        (F.xxhash64(F.col("id").cast("string"))).alias("url_hash")
-    )
-    ck = CuckooShards.build(seen, n_shards=8, n_buckets=1 << 12)
-    hashes = np.array([r["url_hash"] for r in seen.collect()], dtype=np.int64)
-    assert ck.might_contain_np(hashes).all()
-    fresh = spark.range(50000, 60000).select(
-        (F.xxhash64(F.col("id").cast("string"))).alias("url_hash")
-    )
-    fh = np.array([r["url_hash"] for r in fresh.collect()], dtype=np.int64)
-    assert ck.might_contain_np(fh).mean() < 0.02
-    for h in hashes[:500]:
-        ck.delete(int(h))
-    assert ck.might_contain_np(hashes[:500]).mean() < 0.05  # rare fp collisions
-    assert ck.might_contain_np(hashes[500:]).all()
-
-
-def test_cuckoo_apply_delta_matches_driver_loop(spark):
-    """apply_delta (per-shard applyInPandas insert/delete — the engine's
-    epoch path) produces tables bit-identical to the driver-side
-    insert()/delete() loop over the same hashes in shard order, and
-    ships only packed tables to the driver."""
-    base = spark.range(0, 3000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    delta = spark.range(3000, 5000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    distributed = CuckooShards.build(base, n_shards=8, n_buckets=1 << 12)
-    distributed.apply_delta(spark, delta, op="insert")
-
-    # reference: same inserts applied driver-side in per-shard order
-    # (groupBy preserves no global order, but within a shard the input
-    # row order is the range order — insert order only matters within
-    # a shard because eviction chains are shard-local)
-    mirror = CuckooShards.build(base, n_shards=8, n_buckets=1 << 12)
-    delta_hashes = [r["url_hash"] for r in delta.collect()]
-    for h in delta_hashes:
-        assert mirror.insert(int(h))
-
-    def same_buckets(a, b):
-        # slot order within a bucket depends on arrival order; bucket
-        # MEMBERSHIP is order-independent at this load factor (no
-        # evictions), so compare slot-sorted buckets
-        return np.array_equal(np.sort(a, axis=1), np.sort(b, axis=1))
-
-    for s in mirror.tables:
-        assert same_buckets(distributed.tables[s], mirror.tables[s]), s
-
-    # distributed delete: same equivalence
-    to_del = spark.range(0, 1000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    distributed.apply_delta(spark, to_del, op="delete")
-    for r in to_del.collect():
-        mirror.delete(int(r["url_hash"]))
-    for s in mirror.tables:
-        assert same_buckets(distributed.tables[s], mirror.tables[s]), s
-
-    # no false negatives on survivors, deleted mostly absent
-    survivors = np.array(delta_hashes, dtype=np.int64)
-    assert distributed.might_contain_np(survivors).all()
-
-
-def test_cuckoo_engine_crawl_equals_bloom_engine(spark, tmp_path):
-    """use_cuckoo=True crawls to the identical seen set (the filter is
-    a pre-filter only; exactness comes from the anti-join)."""
-    from webscrape_neko_jirushi_spark import schemas
-    from webscrape_neko_jirushi_spark.crawl.engine import CrawlEngine, MirrorFetcher
-    from webscrape_neko_jirushi_spark.crawl.snapshots import SnapshotStore
-    from webscrape_neko_jirushi_spark.fixtures import mirror as M
-
-    mirror = M.build_mirror(seed=11, n_pages=2, cats_per_page=8, fail_rate=0.0)
-    pages = spark.createDataFrame(mirror.rows(), schemas.PAGES)
-    budget = spark.createDataFrame(M.host_budget_rows(100, 5), schemas.HOST_BUDGET)
-
-    def crawl(name, use_cuckoo):
-        eng = CrawlEngine(
-            spark, SnapshotStore(tmp_path / name, spark), MirrorFetcher(pages),
-            budget, M.BASE_URL, fetch_images=False, use_cuckoo=use_cuckoo,
-        )
-        eng.seed([M.listing_url(1)])
-        eng.run(max_epochs=20)
-        return {r["url_hash"] for r in eng.url_seen().collect()}
-
-    assert crawl("ck", True) == crawl("bl", False)

@@ -1,5 +1,5 @@
 """PandasMirrorFetcher equivalence with the join fetcher, and the
-cuckoo-backed recrawl/TTL path."""
+recrawl/TTL path, which leaves the URL-seen bloom filter untouched."""
 
 from __future__ import annotations
 
@@ -76,36 +76,44 @@ def test_recrawl_expired_requeues(spark, tmp_path):
     assert eng.url_seen().count() == seen_before
 
 
-def test_recrawl_with_cuckoo_deletes_in_place(spark, tmp_path):
-    """use_cuckoo=True: expiry deletes fingerprints instead of dropping
-    the filter; the engine re-fetches expired URLs and converges to the
-    same seen set. Also exercises idempotence: a second recrawl call
-    while the re-queue is pending adds nothing."""
+def test_recrawl_keeps_bloom_and_refetches_once(spark, tmp_path):
+    """Expiry leaves the engine's bloom filter as it is (no rebuild):
+    the exact anti-join behind it re-checks the stale bits, so every
+    expired URL is fetched again exactly once and the seen set
+    converges. Also exercises idempotence: a second recrawl call while
+    the re-queue is pending adds nothing."""
     mirror = M.build_mirror(seed=42, n_pages=1, cats_per_page=8, fail_rate=0.0)
     pages = spark.createDataFrame(mirror.rows(), schemas.PAGES)
     budget = spark.createDataFrame(
         M.host_budget_rows(BUDGET, MIN_DELAY), schemas.HOST_BUDGET
     )
     eng = CrawlEngine(
-        spark, SnapshotStore(tmp_path / "ck", spark), MirrorFetcher(pages),
-        budget, M.BASE_URL, fetch_images=False, use_cuckoo=True,
+        spark, SnapshotStore(tmp_path / "bl", spark), MirrorFetcher(pages),
+        budget, M.BASE_URL, fetch_images=False,
     )
     eng.seed([M.listing_url(1)])
     eng.run(max_epochs=20)
-    seen_before = eng.url_seen().count()
+    assert eng.frontier().count() == 0
+    seen_before = {r["url_hash"] for r in eng.url_seen().collect()}
     total_epochs = eng.store.epoch()
     filt = eng._bloom  # noqa: SLF001
-    assert hasattr(filt, "delete")
 
     n = recrawl_expired(eng, ttl_epochs=total_epochs - 1)
     assert n > 0
-    # same filter object survived (deleted in place, no rebuild)
     assert eng._bloom is filt  # noqa: SLF001
     # idempotence: everything expired is already pending
     assert recrawl_expired(eng, ttl_epochs=total_epochs - 1) == 0
+    requeued = {r["url_hash"] for r in eng.frontier().collect()}
+    assert len(requeued) == n
 
     eng.run(max_epochs=20)
-    assert eng.url_seen().count() == seen_before
+    assert eng._bloom is filt  # noqa: SLF001
+    fetches = {
+        r["url_hash"]: r["n"]
+        for r in eng.fetch_log().groupBy("url_hash").agg(F.count("*").alias("n")).collect()
+    }
+    assert {fetches[h] for h in requeued} == {2}
+    assert {r["url_hash"] for r in eng.url_seen().collect()} == seen_before
     assert eng.frontier().count() == 0
 
 

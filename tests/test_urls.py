@@ -35,6 +35,20 @@ def test_canonicalize_one_rules():
     # urllib cannot parse these: no canonical form, as for a NULL URL
     for bad in ("https://h.test:99999/a", "https://h.test:abc/a", "https://[::1/x"):
         assert canonicalize_one(bad, "https://base") is None
+    # an IPv6 host keeps its brackets; the default port still goes
+    assert canonicalize_one("https://[::1]:8080/a") == "https://[::1]:8080/a"
+    assert canonicalize_one("http://[2001:DB8::1]/x") == "http://[2001:db8::1]/x"
+    assert canonicalize_one("https://[::1]:443/a") == "https://[::1]/a"
+    # idempotent: a canonical URL canonicalizes to itself
+    for u in (
+        "HTTPS://Mirror-Main.TEST:443/a?b=2&a=1#frag",
+        "http://h:8080/x",
+        "https://h",
+        "https://[::1]:8080/a",
+        "http://[2001:db8::1]/x",
+    ):
+        c = canonicalize_one(u)
+        assert c is not None and canonicalize_one(c) == c, u
 
 
 def test_canonicalize_udf_matches_python(spark):
@@ -44,16 +58,18 @@ def test_canonicalize_udf_matches_python(spark):
         "HTTP://X.test/a?z=1&y=2#f",
         "/img/cat_5_main.jpg",
         "https://h.test:abc/a",  # unparseable -> NULL
+        "https://[::1]:8080/a",
+        "http://[2001:db8::1]/x",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [
-        r[0]
-        for r in df.select(
-            canonicalize_url(F.col("url"), "https://mirror-main.test")
-        ).collect()
-    ]
+    canon = canonicalize_url(F.col("url"), "https://mirror-main.test").alias("c")
+    got = [r[0] for r in df.select(canon).collect()]
     want = [canonicalize_one(u, "https://mirror-main.test") for u in urls]
     assert got == want
+    assert got[-2:] == ["https://[::1]:8080/a", "http://[2001:db8::1]/x"]
+    # idempotent through the UDF too: c(c(u)) == c(u)
+    out = df.select(canon).select(canonicalize_url(F.col("c")).alias("cc"), "c").collect()
+    assert all(r["cc"] == r["c"] for r in out if r["c"] is not None)
 
 
 def test_xxhash64_parity_with_spark(spark):

@@ -25,7 +25,6 @@ DEFAULTS = {
     "max_per_epoch": 200,
     "n_salts": 4,
     "fetch_images": True,
-    "bloom_fpr": 0.01,
     "timeout_s": 30.0,
     "user_agent": "webscrape-neko-jirushi-spark/0.1",
     "max_epochs": 100,
@@ -42,7 +41,6 @@ class CrawlConfig:
     max_per_epoch: int
     n_salts: int
     fetch_images: bool
-    bloom_fpr: float
     timeout_s: float
     user_agent: str
     max_epochs: int
@@ -74,7 +72,6 @@ class CrawlConfig:
             "base_url": self.base_url,
             "n_salts": self.n_salts,
             "fetch_images": self.fetch_images,
-            "bloom_fpr": self.bloom_fpr,
         }
 
     def budget_rows(self, hosts: list[str]) -> list[dict]:

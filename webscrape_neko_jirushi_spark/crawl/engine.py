@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions.urls import canonicalize_url, host_col, url_hash_col
 from ..operators.spans import extract_spans, parse_listing
-from .bloom import BloomShards, CuckooShards
+from .bloom import BloomShards
 from .politeness import select_budget_annotated
 from .snapshots import SnapshotStore
 
@@ -170,10 +170,8 @@ class CrawlEngine:
         base_url: str,
         n_salts: int = 4,
         fetch_images: bool = True,
-        bloom_fpr: float = 0.01,
         collect_stats: bool = True,
         robots_map: dict[str, list[str]] | None = None,
-        use_cuckoo: bool = False,
     ):
         self.spark = spark
         self.store = store
@@ -182,7 +180,6 @@ class CrawlEngine:
         self.base_url = base_url
         self.n_salts = n_salts
         self.fetch_images = fetch_images
-        self.bloom_fpr = bloom_fpr
         # False skips the optional per-epoch bookkeeping counts
         # (documents/discoveries in EpochStats become -1) — fewer
         # driver-serial jobs on the throughput path
@@ -196,17 +193,11 @@ class CrawlEngine:
         self._robots_bc = (
             spark.sparkContext.broadcast(robots_map) if robots_map else None
         )
-        # driver-held incremental bloom over url_seen, probed by
-        # _enqueue; rebuilt from the committed seen table on resume,
-        # extended per epoch after that (add_seen). use_cuckoo swaps in
-        # deletion-capable cuckoo shards (recrawl expiry deletes
-        # instead of forcing a rebuild); their per-epoch
-        # insert/delete maintenance is distributed (per-shard
-        # applyInPandas via CuckooShards.apply_delta — eviction chains
-        # are shard-local, the driver only merges packed tables). Bloom
-        # stays the default for its smaller per-shard footprint.
-        self.use_cuckoo = use_cuckoo
-        self._bloom: BloomShards | CuckooShards | None = None
+        # driver-held bloom over url_seen, probed by _enqueue; built
+        # from the committed seen table on resume and extended per
+        # epoch after that. It is never shrunk: recrawl expiry leaves
+        # stale bits, which the exact anti-join behind it re-checks.
+        self._bloom: BloomShards | None = None
 
     def _robots_filter(self, df: DataFrame) -> DataFrame:
         """Drop robots-disallowed rows (never fetched, never re-queued:
@@ -292,7 +283,7 @@ class CrawlEngine:
         is the constant 42, so unfiltered they would enqueue). The min
         ``(depth, priority)`` row per ``url_hash`` stays (J3: the first discovery wins). URLs
         already in url_seen are dropped by an exact anti-join with the
-        bloom/cuckoo filter in front of it (J1): definite-new rows skip
+        bloom filter in front of it (J1): definite-new rows skip
         the join, and the filter's positives, false ones included, are
         re-checked exactly. URLs in ``pending`` are dropped last.
 
@@ -332,38 +323,19 @@ class CrawlEngine:
         )
         return new, cached
 
-    def _ensure_bloom(self) -> BloomShards | CuckooShards:
-        """Driver-incremental bloom/cuckoo; distributed rebuild only on
-        resume (both filters build per-shard via applyInPandas). A store
-        whose manifest holds no ``url_seen`` dir (a fresh crawl: ``seed``
-        commits only the frontier) starts from an empty filter instead
-        of running the build over an empty table."""
+    def _ensure_bloom(self) -> BloomShards:
+        """The engine's one URL-seen filter, made on first use: a
+        distributed per-shard build over ``url_seen`` on resume, or an
+        empty filter for a store whose manifest holds no ``url_seen``
+        dir (a fresh crawl: ``seed`` commits only the frontier), which
+        spares a build over an empty table."""
         if self._bloom is None:
-            resume = self.store.has_data("url_seen")
-            if self.use_cuckoo:
-                if resume:
-                    # size shards for the seen count at ~80% target load
-                    # (insert failure raises rather than dropping keys)
-                    seen = self.url_seen()
-                    n = seen.count()
-                    per_shard = max(1, (n // 16) + 1)
-                    buckets = 1 << max(
-                        16, (int(per_shard / (CuckooShards.SLOTS * 0.8)) - 1).bit_length()
-                    )
-                    self._bloom = CuckooShards.build(
-                        seen, n_shards=16, n_buckets=buckets
-                    )
-                else:
-                    self._bloom = CuckooShards.empty(n_shards=16, n_buckets=1 << 16)
-            elif resume:
-                # resume path: one distributed build over the seen table
+            if self.store.has_data("url_seen"):
                 self._bloom = BloomShards.build(
-                    self.url_seen(), n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
+                    self.url_seen(), n_shards=16, expected_per_shard=1 << 19
                 )
             else:
-                self._bloom = BloomShards.empty(
-                    n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
-                )
+                self._bloom = BloomShards.empty(n_shards=16, expected_per_shard=1 << 19)
         return self._bloom
 
     # -- one epoch ------------------------------------------------------------
@@ -565,7 +537,7 @@ class CrawlEngine:
         else:
             n_docs = -1
             n_disc = -1
-        self._bloom.add_seen(self.spark, fetched.select("url_hash"))
+        self._bloom.merge_delta(self._bloom.build_delta(fetched.select("url_hash")))
         fetched.unpersist()
         docs_with_meta.unpersist()
         annotated.unpersist()

@@ -1,16 +1,13 @@
-"""Deletion-safe recrawl (north rule: cuckoo-filter variant).
+"""Recrawl: expire URLs from the seen set after a TTL.
 
 The reference never recrawls: a scraped id stays in ``scraped_cats``
 forever. At frontier scale, freshness requires expiring URLs from the
-seen set after a TTL so they become fetchable again. Blooms cannot
-delete; the cuckoo shards can — so the recrawl path is:
+seen set after a TTL so they become fetchable again. The recrawl path:
 
 1. pick expired URLs from ``fetch_log`` (fetched more than
    ``ttl_epochs`` ago, best fetch per URL);
-2. delete their hashes from the driver's cuckoo shards (engine builds
-   them instead of blooms when ``use_cuckoo=True`` — same probe API);
-3. anti-delete from the ``url_seen`` table (rewrite minus expired);
-4. re-queue the expired URLs as pending frontier rows with a
+2. anti-delete from the ``url_seen`` table (rewrite minus expired);
+3. re-queue the expired URLs as pending frontier rows with a
    deterministic re-fetch order (depth = 1, priority = hash-derived —
    the original depth/priority left the frontier when the URL was
    fetched and are not persisted in fetch_log); epoch = current.
@@ -18,7 +15,15 @@ delete; the cuckoo shards can — so the recrawl path is:
    so calling recrawl twice (or while an expired URL is re-queued but
    not yet fetched) never inserts duplicates.
 
-One snapshot commit makes 3+4 atomic.
+One snapshot commit makes 2+3 atomic.
+
+The engine's bloom filter is left as it is. It cannot delete, and it
+need not: it only sits in front of the exact anti-join against
+``url_seen`` in ``CrawlEngine._enqueue``, so an expired hash still in
+the filter makes a rediscovered URL a positive that the anti-join
+re-checks (and the pending anti-join then drops, as the URL is
+re-queued). A stale bit costs one exact re-check and never drops a URL,
+so recrawl needs no filter rebuild and no delete.
 """
 
 from __future__ import annotations
@@ -78,17 +83,5 @@ def recrawl_expired(engine: CrawlEngine, ttl_epochs: int) -> int:
         current,
         replaces={"url_seen": new_seen, "frontier": frontier},
     )
-    # filter state: cuckoo shards (engine use_cuckoo=True) support
-    # delete — expired hashes are removed per-shard in applyInPandas
-    # (only packed shard tables travel to the driver, never the row
-    # stream); a bloom cannot delete, so it is dropped and rebuilt
-    # distributed from the committed seen table on next epoch
-    if engine._bloom is not None:  # noqa: SLF001
-        if hasattr(engine._bloom, "apply_delta"):  # noqa: SLF001
-            engine._bloom.apply_delta(  # noqa: SLF001
-                engine.spark, expired.select("url_hash"), op="delete"
-            )
-        else:
-            engine._bloom = None  # force rebuild from committed seen
     expired.unpersist()
     return n

@@ -45,6 +45,10 @@ def canonicalize_one(url: str, base: str = "") -> str | None:
         return None
     scheme = parts.scheme.lower()
     host = parts.hostname.lower() if parts.hostname else ""
+    if ":" in host:
+        # urllib strips an IPv6 literal's brackets; without them the
+        # result is no URL (the port would read as part of the host)
+        host = f"[{host}]"
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
         netloc = f"{host}:{port}"
