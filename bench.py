@@ -116,7 +116,6 @@ def run_crawl(spark, n_pages: int, n_cpus: int) -> dict:
             # image epoch is a pure JVM join+write wave whose disk IO
             # flattens CPU-scaling measurements on this shared host
             fetch_images=os.environ.get("BENCH_FETCH_IMAGES", "1") != "0",
-            collect_stats=False,  # bookkeeping counts off the hot path
         )
         seeds = [M.listing_url(p) for p in range(1, n_pages + 1)]
         t1 = time.time()

@@ -17,6 +17,7 @@ from webscrape_neko_jirushi_spark.crawl.engine import CrawlEngine, MirrorFetcher
 from webscrape_neko_jirushi_spark.crawl.oracle import OracleCrawler
 from webscrape_neko_jirushi_spark.crawl.snapshots import SnapshotStore
 from webscrape_neko_jirushi_spark.fixtures import mirror as M
+from webscrape_neko_jirushi_spark.functions.urls import canonicalize_one
 
 BUDGET = 40
 MIN_DELAY = 10
@@ -36,18 +37,23 @@ def oracle_result(mirror):
     return OracleCrawler(mirror, budgets, max_epochs=50).run(SEEDS)
 
 
-def _make_engine(spark, mirror, tmp_path, name="run"):
+def _make_engine(spark, mirror, tmp_path, name="run", **engine_kw):
     pages = spark.createDataFrame(mirror.rows(), schemas.PAGES)
     budget = spark.createDataFrame(
         M.host_budget_rows(BUDGET, MIN_DELAY), schemas.HOST_BUDGET
     )
     store = SnapshotStore(tmp_path / name, spark)
-    return CrawlEngine(spark, store, MirrorFetcher(pages), budget, M.BASE_URL)
+    return CrawlEngine(
+        spark, store, MirrorFetcher(pages), budget, M.BASE_URL, **engine_kw
+    )
 
 
 @pytest.fixture(scope="module")
 def engine_done(spark, mirror, tmp_path_factory):
-    eng = _make_engine(spark, mirror, tmp_path_factory.mktemp("crawl"))
+    # collect_stats=False as both benchmarks pass it: it is ignored
+    eng = _make_engine(
+        spark, mirror, tmp_path_factory.mktemp("crawl"), collect_stats=False
+    )
     eng.seed(SEEDS)
     stats = eng.run(max_epochs=50)
     return eng, stats
@@ -113,6 +119,21 @@ def test_lineage_present(engine_done):
     assert got_epochs == set(range(1, n_epochs + 1))
     sums = lin.groupBy().agg(F.sum("urls_in").alias("n")).collect()[0]["n"]
     assert sums == eng.fetch_log().count()
+
+
+def test_epoch_stats_add_up(engine_done):
+    """EpochStats come from aggregates the epoch runs anyway, so they
+    are filled in even with collect_stats=False: the documents sum to
+    the stored documents, and every URL that entered the frontier (a
+    distinct seed or a discovery) was fetched once or is still
+    pending."""
+    eng, stats = engine_done
+    assert all(s.documents >= 0 and s.discoveries >= 0 for s in stats)
+    assert sum(s.documents for s in stats) == eng.documents().count()
+    n_seeds = len({canonicalize_one(u) for u in SEEDS})
+    assert n_seeds + sum(s.discoveries for s in stats) == (
+        eng.fetch_log().count() + stats[-1].pending_after
+    )
 
 
 def test_failed_urls_dead_lettered(engine_done, oracle_result):

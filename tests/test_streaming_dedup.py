@@ -37,10 +37,11 @@ def _sink_pairs(spark, sink):
     }
 
 
-def test_stream_epochs_match_batch_rebuild(spark, corpus, tmp_path):
+def test_stream_epochs_match_batch_rebuild(spark, corpus, tmp_path, monkeypatch):
     """Two streamed epochs over a pre-built index emit exactly the
     pairs a full rebuild reports for the streamed ids, and the second
-    epoch sees the first's docs (cross-epoch pairs present)."""
+    epoch sees the first's docs (cross-epoch pairs present). Each epoch
+    signs its batch once: the append commits the probe's banding."""
     docs, full = corpus["docs"], corpus["full"]
     base = docs.filter(F.col("doc_id") < 1350)
     d1 = docs.filter((F.col("doc_id") >= 1350) & (F.col("doc_id") < 1425))
@@ -49,8 +50,18 @@ def test_stream_epochs_match_batch_rebuild(spark, corpus, tmp_path):
     sink = str(tmp_path / "pairs")
     dedup.build_lsh_text_index(base, idx, "text", "doc_id", 16, 4, 5, n_subparts=16)
 
+    calls = []
+    sign = dedup.minhash_signatures
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return sign(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", counted)
     assert doc_batch_update_index(d1, 0, idx, sink) is True
+    assert len(calls) == 1
     assert doc_batch_update_index(d2, 1, idx, sink) is True
+    assert len(calls) == 2
 
     want = {(a, b) for a, b in full if a >= 1350 or b >= 1350}
     assert _sink_pairs(spark, sink) == want and len(want) > 30

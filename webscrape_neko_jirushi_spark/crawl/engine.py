@@ -151,6 +151,12 @@ class MirrorFetcher:
 
 @dataclass
 class EpochStats:
+    """One epoch's counters, each read from an aggregate the epoch
+    already runs: ``documents`` is the profile pages fetched with
+    status 200 (``extract_spans`` makes one document per such page),
+    ``discoveries`` the URLs ``_enqueue`` let into the frontier, and
+    ``pending_after`` the committed frontier's size."""
+
     epoch: int
     selected: int
     fetched_ok: int
@@ -173,6 +179,9 @@ class CrawlEngine:
         collect_stats: bool = True,
         robots_map: dict[str, list[str]] | None = None,
     ):
+        """``collect_stats`` is ignored and kept only so existing
+        callers still construct: every ``EpochStats`` field comes from
+        an aggregate the epoch runs anyway."""
         self.spark = spark
         self.store = store
         self.fetcher = fetcher
@@ -180,10 +189,6 @@ class CrawlEngine:
         self.base_url = base_url
         self.n_salts = n_salts
         self.fetch_images = fetch_images
-        # False skips the optional per-epoch bookkeeping counts
-        # (documents/discoveries in EpochStats become -1) — fewer
-        # driver-serial jobs on the throughput path
-        self.collect_stats = collect_stats
         # T4: robots cache — host -> disallowed path prefixes, applied as
         # a broadcast-map filter on candidates and in _enqueue (north
         # rule; the reference sends polite headers but never parses
@@ -373,9 +378,11 @@ class CrawlEngine:
         # caching them would dominate memory + serialization time
         fetched = _persist_coalesced(fetched_full.drop("body"))
         # one combined count job (replaces separate count()s per branch)
+        is_ok = F.col("status_code") == 200
         counts = fetched.agg(
             F.count("*").alias("n"),
-            F.sum((F.col("status_code") == 200).cast("long")).alias("ok"),
+            F.sum(is_ok.cast("long")).alias("ok"),
+            F.sum((is_ok & (F.col("kind") == "profile")).cast("long")).alias("docs"),
         ).collect()[0]
         n_selected, n_ok = counts["n"], int(counts["ok"] or 0)
         if n_selected == 0:
@@ -448,10 +455,12 @@ class CrawlEngine:
             epoch,
             annotated,
         )
+        # _disc tells discoveries from deferred rows for the stats
+        # aggregate; the commit drops it
         new_frontier = _persist_coalesced(
-            deferred.select([f.name for f in schemas.FRONTIER.fields]).unionByName(
-                discoveries
-            )
+            deferred.select([f.name for f in schemas.FRONTIER.fields])
+            .withColumn("_disc", F.lit(False))
+            .unionByName(discoveries.withColumn("_disc", F.lit(True)))
         )
 
         # commit ----------------------------------------------------------
@@ -522,21 +531,17 @@ class CrawlEngine:
         self.store.commit(
             epoch,
             appends=appends,
-            replaces={"frontier": new_frontier},
+            replaces={"frontier": new_frontier.drop("_disc")},
         )
-        # post-commit bookkeeping: counts on persisted/parquet-metadata
-        # inputs (cheap jobs) + the distributed filter delta: executors
-        # fold the epoch's hashes into packed per-shard state and only
-        # those bounded bytes reach the driver (never the row stream —
-        # at 10^8 rows/epoch a toPandas() here would be the driver
+        # post-commit bookkeeping: one aggregate over the cached
+        # frontier + the distributed filter delta: executors fold the
+        # epoch's hashes into packed per-shard state and only those
+        # bounded bytes reach the driver (never the row stream — at
+        # 10^8 rows/epoch a toPandas() here would be the driver
         # bottleneck).
-        n_pending_after = self.frontier().count()  # footer-only count
-        if self.collect_stats:
-            n_docs = docs.count()
-            n_disc = n_pending_after - deferred.count()
-        else:
-            n_docs = -1
-            n_disc = -1
+        pending = new_frontier.agg(
+            F.count("*").alias("n"), F.sum(F.col("_disc").cast("long")).alias("disc")
+        ).collect()[0]
         self._bloom.merge_delta(self._bloom.build_delta(fetched.select("url_hash")))
         fetched.unpersist()
         docs_with_meta.unpersist()
@@ -548,9 +553,9 @@ class CrawlEngine:
             selected=n_selected,
             fetched_ok=n_ok,
             failed=n_selected - n_ok,
-            documents=n_docs,
-            discoveries=n_disc,
-            pending_after=n_pending_after,
+            documents=int(counts["docs"] or 0),
+            discoveries=int(pending["disc"] or 0),
+            pending_after=pending["n"],
         )
 
     def run(
@@ -566,12 +571,7 @@ class CrawlEngine:
                 break
             s = self.run_epoch()
             stats.append(s)
-            if s.documents >= 0:
-                docs_total += s.documents
-            elif target_docs is not None:
-                # collect_stats=False reports documents=-1; a target cap
-                # still needs a real count (footer-only metadata job)
-                docs_total = self.documents().count()
+            docs_total += s.documents
             pending = s.pending_after
             if s.selected == 0:
                 break

@@ -26,7 +26,7 @@ content_type, body) works. Three shapes:
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -89,11 +89,51 @@ def search_cond_dict(page_num: int) -> dict:
     return d
 
 
+def _scheduled_fetch(
+    selected: DataFrame,
+    open_fetcher: Callable[[], Callable[[str], tuple]],
+    enforce_wall_clock: bool,
+) -> DataFrame:
+    """The per-partition fetch loop every ``mapInPandas`` fetcher runs:
+    rows in schedule order, each slept to its token-bucket
+    ``scheduled_ms`` when ``enforce_wall_clock``, then the passthrough
+    columns plus ``(kind, status_code, content_type, body)`` from the
+    fetcher's fetch-one-URL function. ``open_fetcher`` runs once per
+    partition, on the executor, and returns that function."""
+
+    def _fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        fetch_one = open_fetcher()
+        # per-HOST schedule baseline: a partition holds several hosts;
+        # a shared t0 would let every host after the first fetch with
+        # zero inter-fetch delay (its deadlines already past). Each
+        # host's clock starts at its own first fetch.
+        host_t0: dict[str, float] = {}
+        for pdf in it:
+            # within a partition fetch in schedule order (the per-host
+            # sequential invariant, T3)
+            pdf = pdf.sort_values(["host", "scheduled_ms", "seq_in_host"])
+            results = []
+            for url, host, sched in zip(pdf["url"], pdf["host"], pdf["scheduled_ms"]):
+                if enforce_wall_clock:
+                    t0 = host_t0.setdefault(host, time.monotonic())
+                    if sched and sched > 0:
+                        wait = sched / 1000.0 - (time.monotonic() - t0)
+                        if wait > 0:
+                            time.sleep(wait)
+                results.append(fetch_one(url))
+            out = pdf[_PASSTHROUGH].copy()
+            for i, col in enumerate(("kind", "status_code", "content_type", "body")):
+                out[col] = [r[i] for r in results]
+            yield out
+
+    return selected.select(*_PASSTHROUGH).mapInPandas(_fetch, _FETCH_COLS)
+
+
 class PandasMirrorFetcher:
     """mapInPandas fetch against a broadcast in-memory mirror.
 
     ``enforce_wall_clock=True`` sleeps each row to its token-bucket
-    ``scheduled_ms`` (relative to the partition's first fetch) — the
+    ``scheduled_ms`` (relative to the host's first fetch) — the
     production politeness behavior; False (default) keeps the schedule
     virtual for tests/bench.
     """
@@ -108,52 +148,29 @@ class PandasMirrorFetcher:
         self.enforce_wall_clock = enforce_wall_clock
 
     def fetch(self, selected: DataFrame) -> DataFrame:
-        bc = self.bc
-        lookup = self._lookup
-        enforce = self.enforce_wall_clock
+        bc, lookup = self.bc, self._lookup
 
-        def _fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def open_fetcher():
             mirror = bc.value
-            # per-HOST schedule baseline: a partition holds several
-            # hosts; a shared t0 would let every host after the first
-            # fetch with zero inter-fetch delay (its deadlines already
-            # past). Each host's clock starts at its own first fetch.
-            host_t0: dict[str, float] = {}
-            for pdf in it:
-                # within a partition fetch in schedule order (the
-                # per-host sequential invariant, T3)
-                pdf = pdf.sort_values(["host", "scheduled_ms", "seq_in_host"])
-                kinds, statuses, cts, bodies = [], [], [], []
-                for url, host, sched in zip(
-                    pdf["url"], pdf["host"], pdf["scheduled_ms"]
-                ):
-                    if enforce:
-                        t0 = host_t0.setdefault(host, time.monotonic())
-                        if sched and sched > 0:
-                            wait = sched / 1000.0 - (time.monotonic() - t0)
-                            if wait > 0:
-                                time.sleep(wait)
-                    page = lookup(mirror, url)
-                    kinds.append(page["kind"])
-                    statuses.append(page["status_code"])
-                    cts.append(page["content_type"])
-                    bodies.append(page["body"])
-                out = pdf[_PASSTHROUGH].copy()
-                out["kind"] = kinds
-                out["status_code"] = statuses
-                out["content_type"] = cts
-                out["body"] = bodies
-                yield out
 
-        return selected.select(*_PASSTHROUGH).mapInPandas(_fetch, _FETCH_COLS)
+            def fetch_one(url):
+                page = lookup(mirror, url)
+                return tuple(
+                    page[c] for c in ("kind", "status_code", "content_type", "body")
+                )
+
+            return fetch_one
+
+        return _scheduled_fetch(selected, open_fetcher, self.enforce_wall_clock)
 
 
 class HttpFetcher:
     """Real HTTP fetch stage: per-partition requests.Session, in-UDF
     retry (3 attempts, jittered 2-5 s backoff — the reference's policy,
     comprehensive_scraper.py:126-137), per-host politeness by the
-    engine's schedule. Failures become fetch_log rows (status_code
-    set, body None) — never Spark task failures.
+    engine's schedule, always slept to in wall-clock time. Failures
+    become fetch_log rows (status_code set, body None) — never Spark
+    task failures.
 
     Sandbox note: NO network here; constructing is allowed (for plan
     shape tests), calling fetch() raises unless requests is importable
@@ -182,7 +199,7 @@ class HttpFetcher:
 
         headers, timeout, retries = self.headers, self.timeout, self.retries
 
-        def _fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
+        def open_fetcher():  # pragma: no cover
             import json
             import random
             import re
@@ -191,75 +208,57 @@ class HttpFetcher:
 
             session = requests.Session()
             session.headers.update(headers)
-            # per-host baseline (see PandasMirrorFetcher note): the
-            # min_delay invariant is per host, not per partition
-            host_t0: dict[str, float] = {}
-            for pdf in it:
-                pdf = pdf.sort_values(["host", "scheduled_ms", "seq_in_host"])
-                kinds, statuses, cts, bodies = [], [], [], []
-                for url, host, sched in zip(
-                    pdf["url"], pdf["host"], pdf["scheduled_ms"]
-                ):
-                    t0 = host_t0.setdefault(host, time.monotonic())
-                    if sched and sched > 0:
-                        wait = sched / 1000.0 - (time.monotonic() - t0)
-                        if wait > 0:
-                            time.sleep(wait)
-                    status, ct, body = None, None, None
-                    # P12: listing-API pages go through the POST form
-                    # body with the JSON-encoded search_cond
-                    # (comprehensive_scraper.py:100, :121-131). Match
-                    # the SPECIFIC endpoint, not any ajax-ish URL, so
-                    # other URLs carrying a p= param stay GETs; keep
-                    # non-p query params on the POST target.
-                    is_listing = "/ajax_getFosterList.php" in url.split("?")[0]
-                    page_m = re.search(r"[?&]p=(\d+)", url) if is_listing else None
-                    if page_m:
-                        base, _, qs = url.partition("?")
-                        extra = "&".join(
-                            kv for kv in qs.split("&")
-                            if kv and not re.fullmatch(r"p=\d+", kv)
-                        )
-                        post_url = base + ("?" + extra if extra else "")
-                    for attempt in range(retries):
-                        try:
-                            if page_m:
-                                resp = session.post(
-                                    post_url,
-                                    data={
-                                        # compact separators: byte-identical
-                                        # to the search_cond_json column twin
-                                        "search_cond": json.dumps(
-                                            search_cond_dict(int(page_m.group(1))),
-                                            separators=(",", ":"),
-                                        ),
-                                        "spMode": 0,
-                                    },
-                                    timeout=timeout,
-                                )
-                            else:
-                                resp = session.get(url, timeout=timeout)
-                            status = resp.status_code
-                            ct = resp.headers.get("content-type")
-                            body = resp.text if status == 200 else None
-                            break
-                        except requests.RequestException:
-                            if attempt < retries - 1:
-                                time.sleep(random.uniform(2, 5))
-                            else:
-                                status = -1  # terminal network failure
-                    kinds.append(
-                        "listing" if is_listing else
-                        ("image" if (ct or "").startswith("image/") else "profile")
-                    )
-                    statuses.append(status)
-                    cts.append(ct)
-                    bodies.append(body)
-                out = pdf[_PASSTHROUGH].copy()
-                out["kind"] = kinds
-                out["status_code"] = statuses
-                out["content_type"] = cts
-                out["body"] = bodies
-                yield out
 
-        return selected.select(*_PASSTHROUGH).mapInPandas(_fetch, _FETCH_COLS)
+            def fetch_one(url):
+                status, ct, body = None, None, None
+                # P12: listing-API pages go through the POST form body
+                # with the JSON-encoded search_cond
+                # (comprehensive_scraper.py:100, :121-131). Match the
+                # SPECIFIC endpoint, not any ajax-ish URL, so other URLs
+                # carrying a p= param stay GETs; keep non-p query params
+                # on the POST target.
+                is_listing = "/ajax_getFosterList.php" in url.split("?")[0]
+                page_m = re.search(r"[?&]p=(\d+)", url) if is_listing else None
+                if page_m:
+                    base, _, qs = url.partition("?")
+                    extra = "&".join(
+                        kv for kv in qs.split("&")
+                        if kv and not re.fullmatch(r"p=\d+", kv)
+                    )
+                    post_url = base + ("?" + extra if extra else "")
+                for attempt in range(retries):
+                    try:
+                        if page_m:
+                            resp = session.post(
+                                post_url,
+                                data={
+                                    # compact separators: byte-identical
+                                    # to the search_cond_json column twin
+                                    "search_cond": json.dumps(
+                                        search_cond_dict(int(page_m.group(1))),
+                                        separators=(",", ":"),
+                                    ),
+                                    "spMode": 0,
+                                },
+                                timeout=timeout,
+                            )
+                        else:
+                            resp = session.get(url, timeout=timeout)
+                        status = resp.status_code
+                        ct = resp.headers.get("content-type")
+                        body = resp.text if status == 200 else None
+                        break
+                    except requests.RequestException:
+                        if attempt < retries - 1:
+                            time.sleep(random.uniform(2, 5))
+                        else:
+                            status = -1  # terminal network failure
+                kind = (
+                    "listing" if is_listing else
+                    ("image" if (ct or "").startswith("image/") else "profile")
+                )
+                return kind, status, ct, body
+
+            return fetch_one
+
+        return _scheduled_fetch(selected, open_fetcher, enforce_wall_clock=True)

@@ -23,14 +23,47 @@ Scale notes: shingle explode shuffles O(docs * shingles) rows but each
 row is (hash, doc_id) — 16 bytes; the band join is an equi-join on
 (band, band_hash) so AQE handles bucket skew; exact Jaccard runs only
 on LSH candidates (quadratic blowup contained per bucket).
+
+Incremental near-dup indexes: minhash text (``build_lsh_text_index``),
+wide simhash (``build_simhash_index``) and embedding LSH
+(``similarity.build_emb_lsh_index``) share one build / delta-probe /
+append path (``_build_index`` / ``_probe_index`` / ``_append_index``).
+A family supplies its banding, bucket column, band count, pinned meta
+keys and ``kind`` (an ``_IndexFamily``), and its verify step.
+
+- build: band the corpus, key each row by ``pb = band * n_subparts +
+  (bucket mod n_subparts)`` (a bucket lives inside one pb partition)
+  and write through ``IndexManifest.build``, whose meta pins the band
+  parameters and ``kind``.
+- probe: check the manifest, band only the delta with the pinned meta
+  (checkpointed once), and scan only the files of its distinct pb
+  values (one manifest read). Candidates: the broadcast delta x index
+  join plus the delta self-join; with ``max_bucket``,
+  ``_capped_incremental_pairs`` (combined corpus + delta occupancy and
+  star centre); delta x delta alone on an index with no data. The
+  result is exactly the pairs a full rebuild over corpus + delta emits
+  that touch the delta (parity-tested per family). Delta ids must be
+  disjoint from indexed ids. Cost scales with the delta, not the
+  corpus (``BENCH/DEDUP_SCALE.md``).
+- verify: simhash (Hamming) and embeddings (cosine) read each
+  candidate's signature or vector from the delta and the scanned index
+  rows, never the corpus: every partner lives in a scanned file.
+- append: band the delta with the pinned meta, then ``stage_write`` +
+  ``commit_staged`` (an atomic ``_HEAD`` swap). The probe is read-only;
+  ``streaming.dedup_stream`` appends the probe's own banding, so a
+  batch is signed once.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
+from .index_store import IndexManifest
 
 
 def exact_dedup(
@@ -274,10 +307,9 @@ def _capped_incremental_pairs(
     bucket_cols: list[str],
     max_bucket: int,
 ) -> DataFrame:
-    """The CAPPED incremental candidate path, shared by the minhash
-    and embedding families: an asymmetric delta-x-index equi-join
-    cannot honor ``max_bucket`` (its occupancy view is the delta
-    alone, so one boilerplate mega-bucket in the INDEX explodes into
+    """The CAPPED candidate path of ``_probe_index``: an asymmetric
+    delta-x-index equi-join cannot honor ``max_bucket`` (its occupancy
+    view is the delta alone, so one boilerplate mega-bucket in the INDEX explodes into
     occupancy-proportional pairs — the exact skew the cap exists to
     absorb), and the cap must use the COMBINED corpus+delta occupancy
     and star center or the result diverges from a full rebuild.
@@ -351,22 +383,6 @@ def lsh_candidate_pairs(
     return bucket_pairs(banded, id_col, ["band", "bh"], max_bucket, materialize)
 
 
-def _checked_lsh_manifest(path: str):
-    from .similarity import _checked_manifest
-
-    return _checked_manifest(
-        path,
-        "pb",
-        ["n_hashes", "n_bands", "k", "id_col", "text_col", "n_subparts"],
-        desc="banded-minhash text",
-        missing_msg=(
-            f"no LSH text index manifest at {path} — build with "
-            "build_lsh_text_index first (banding a delta against a bare "
-            "tree could silently use different band parameters)"
-        ),
-    )
-
-
 def _with_pb(
     banded: DataFrame, n_bands: int, n_subparts: int, bucket_col: str = "bh"
 ) -> DataFrame:
@@ -374,14 +390,119 @@ def _with_pb(
     (band, bucket mod n_subparts) — ``n_bands * n_subparts``
     directories. Any (band, bucket) bucket lives entirely inside ONE
     pb partition, so a delta's candidate join only ever needs the pb
-    values the delta itself hashes into. ``bucket_col`` is ``bh`` for
-    the minhash index and ``chunk`` for the simhash one."""
+    values the delta itself hashes into."""
     return banded.withColumn(
         "pb",
         (
             F.col("band") * n_subparts + F.pmod(F.col(bucket_col), F.lit(n_subparts))
         ).cast("int"),
     )
+
+
+@dataclass(frozen=True)
+class _IndexFamily:
+    """What one incremental near-dup family gives the shared protocol
+    (module docstring): its banding of a docs/vectors table under the
+    pinned meta (``band``: id, payload columns, ``band``,
+    ``bucket_col``), its band count, the meta keys a probe needs, and
+    the names its errors use."""
+
+    kind: str
+    desc: str  # "index at ... is not a <desc> index"
+    label: str  # "no <label> index manifest at ..."
+    build_fn: str
+    meta_keys: tuple[str, ...]
+    bucket_col: str
+    band: Callable[[DataFrame, dict], DataFrame]
+    n_bands: Callable[[dict], int]
+
+
+def _checked_index(fam: _IndexFamily, path: str):
+    from .similarity import _checked_manifest
+
+    return _checked_manifest(
+        path,
+        "pb",
+        ["kind", *fam.meta_keys],
+        kind=fam.kind,
+        desc=fam.desc,
+        missing_msg=(
+            f"no {fam.label} index manifest at {path} — build with "
+            f"{fam.build_fn} first (banding a delta against a bare tree "
+            "could silently use different band parameters)"
+        ),
+    )
+
+
+def _index_rows(fam: _IndexFamily, meta: dict, df: DataFrame) -> DataFrame:
+    return _with_pb(
+        fam.band(df, meta), fam.n_bands(meta), int(meta["n_subparts"]), fam.bucket_col
+    )
+
+
+def _build_index(fam: _IndexFamily, df: DataFrame, path: str, meta: dict) -> None:
+    meta = {"kind": fam.kind, **meta}
+    IndexManifest.build(_index_rows(fam, meta, df), path, "pb", meta=meta)
+
+
+def _probe_index(
+    spark, fam: _IndexFamily, new: DataFrame, path: str, max_bucket: int | None
+) -> tuple[dict, DataFrame, DataFrame, DataFrame]:
+    """The delta probe: ``(meta, delta, candidates, payload)``.
+    ``meta`` is the manifest's, ``delta`` the checkpointed banded delta
+    in index row layout (``_commit_delta`` appends it as is),
+    ``candidates`` the ``(id_a, id_b)`` pairs touching the delta, and
+    ``payload`` one row of non-band columns per id over the delta and
+    the scanned index rows, for a family's verify step."""
+    m = _checked_index(fam, path)
+    id_col, keys = m.meta["id_col"], ["band", fam.bucket_col]
+    # the delta banding feeds every consumer below (pb probe, index
+    # join, both sides of the delta self-join, payload) and a streaming
+    # append — materialize once; deltas are small by the premise
+    delta = _index_rows(fam, m.meta, new).localCheckpoint(eager=True)
+    probe_pbs = [r["pb"] for r in delta.select("pb").distinct().collect()]
+    files = m.files_for(probe_pbs)
+    d = delta.select(id_col, *keys)
+    payload = delta.drop(*keys, "pb")
+    if not files:  # an index with no data: only delta-delta pairs
+        cands = bucket_pairs(d, id_col, keys, max_bucket)
+    else:
+        idx = spark.read.option("basePath", str(m.root)).parquet(*files)
+        # every cross partner lives in a scanned file by construction
+        payload = payload.unionByName(idx.drop(*keys, "pb"))
+        if max_bucket is not None:
+            cands = _capped_incremental_pairs(
+                d, idx.select(id_col, *keys), id_col, keys, max_bucket
+            )
+        else:
+            cross = (
+                F.broadcast(d)
+                .join(idx.select(F.col(id_col).alias("_idx_id"), *keys), keys)
+                .filter(F.col(id_col) != F.col("_idx_id"))
+                .select(
+                    F.least(F.col(id_col), F.col("_idx_id")).alias("id_a"),
+                    F.greatest(F.col(id_col), F.col("_idx_id")).alias("id_b"),
+                )
+            )
+            within = bucket_pairs(d, id_col, keys, None)
+            cands = cross.unionByName(within).distinct()
+    return m.meta, delta, cands, payload.dropDuplicates([id_col])
+
+
+def _commit_delta(path: str, delta: DataFrame, meta_update: dict | None = None) -> None:
+    """Append already-banded index rows: files land under ``_staging``
+    and move into the live pb dirs inside the locked commit, with the
+    exact list published — no tree re-list, nothing for a concurrent
+    writer to adopt."""
+    stage, _ = IndexManifest.stage_write(delta, path, "pb")
+    IndexManifest.commit_staged(path, "pb", stage, meta_update=meta_update)
+
+
+def _append_index(
+    fam: _IndexFamily, new: DataFrame, path: str, meta_update: dict | None = None
+) -> None:
+    m = _checked_index(fam, path)
+    _commit_delta(path, _index_rows(fam, m.meta, new), meta_update)
 
 
 def lsh_subparts_for(n_docs: int, rows_per_part: int = 100_000) -> int:
@@ -399,6 +520,24 @@ def lsh_subparts_for(n_docs: int, rows_per_part: int = 100_000) -> int:
     return max(16, min(4096, int(sub)))
 
 
+def _band_minhash_meta(docs: DataFrame, m: dict) -> DataFrame:
+    n_hashes = int(m["n_hashes"])
+    sigs = minhash_signatures(docs, m["text_col"], m["id_col"], n_hashes, int(m["k"]))
+    return banded_minhash(sigs, m["id_col"], n_hashes, int(m["n_bands"]))
+
+
+_MINHASH = _IndexFamily(
+    kind="minhash_banded",
+    desc="banded-minhash text",
+    label="LSH text",
+    build_fn="build_lsh_text_index",
+    meta_keys=("n_hashes", "n_bands", "k", "id_col", "text_col", "n_subparts"),
+    bucket_col="bh",
+    band=_band_minhash_meta,
+    n_bands=lambda m: int(m["n_bands"]),
+)
+
+
 def build_lsh_text_index(
     docs: DataFrame,
     path: str,
@@ -410,34 +549,21 @@ def build_lsh_text_index(
     n_subparts: int = 256,
 ) -> None:
     """Persist the banded MinHash signature table — the intermediate of
-    ``lsh_candidate_pairs`` — as a parquet table partitioned by
-    ``pb = band * n_subparts + (bh mod n_subparts)`` under an
-    ``IndexManifest`` (the ``build_ann_index`` pattern applied to TEXT
-    dedup).
+    ``lsh_candidate_pairs``, ``(id, band, bh)`` with ``bh`` the
+    bucket — as an incremental index (module docstring).
 
     Why: at 100 TB the dominant avoidable cost of running near-dup
     detection on a daily crawl delta is RE-SIGNING THE WHOLE CORPUS —
     shingle + md5 + minhash over every historical document, every day.
     With the banded table persisted, ``lsh_candidates_incremental``
-    signs only the delta and equi-joins it against the stored bands.
-    The ``pb`` sub-partitioning is what makes that join DELTA-
-    proportional rather than corpus-scan-proportional: a (band, bh)
-    bucket lives entirely inside one pb partition, so the incremental
-    query resolves the delta's pb values (at most ``|delta| x n_bands``
-    of the ``n_bands x n_subparts`` partitions) through ONE manifest
-    read and scans only those files — the index twin of the ANN
-    probe's manifest pruning. The band params (n_hashes/n_bands/k/
+    signs only the delta. The band params (n_hashes/n_bands/k/
     n_subparts) are pinned in the manifest so an append can never band
     with different hash functions than the build."""
-    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, k)
-    banded = banded_minhash(sigs, id_col, n_hashes, n_bands)
-    from .index_store import IndexManifest
-
-    IndexManifest.build(
-        _with_pb(banded, n_bands, n_subparts),
+    _build_index(
+        _MINHASH,
+        docs,
         path,
-        "pb",
-        meta={
+        {
             "n_hashes": n_hashes,
             "n_bands": n_bands,
             "k": k,
@@ -454,127 +580,25 @@ def lsh_candidates_incremental(
     path: str,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs INVOLVING the delta, against a persisted
-    ``build_lsh_text_index`` table: band only ``new_docs`` with the
-    manifest's pinned params, then
-
-    - delta x index: equi-join on (band, bh) against ONLY the index
-      partitions the delta hashes into — the delta's distinct ``pb``
-      values (bounded by ``|delta| x n_bands``, collected from the
-      already-checkpointed delta) resolve to a file list through one
-      manifest read, and the delta side is broadcast, so the index
-      side streams map-side with no shuffle and no full-index scan;
-    - delta x delta: the usual ``bucket_pairs`` self-join.
-
-    With ``max_bucket`` set, the whole candidate step instead routes
-    through ``_capped_incremental_pairs``: full membership of the
-    delta-hit buckets -> ONE ``bucket_pairs`` (combined
-    corpus+delta occupancy, combined star center) -> delta-touching
-    filter — the asymmetric join above cannot honor the cap (its
-    occupancy view is the delta alone, so one mega-bucket in the
-    index would explode), and capping either side separately would
-    diverge from the full rebuild.
-
-    Returns exactly the pairs a FULL rebuild over (corpus + delta)
-    would emit that touch at least one delta doc (parity-tested) —
-    corpus-internal pairs were already reported when the corpus was
-    indexed, so an incremental run never re-emits them. Delta ids must
-    be disjoint from indexed ids (same-id re-crawls are an upsert,
-    which a dedup INDEX doesn't model — delete + rebuild, or give the
-    new crawl a new id). Total cost ~ delta size: signing, banding,
-    the pb-pruned scan, and the broadcast all scale with the delta,
-    not the corpus (measured in ``BENCH/DEDUP_SCALE.md``).
-
-    Commit the delta afterwards with ``append_lsh_text_index`` so the
-    next increment sees it; the two-step (query, then append) keeps
-    this function read-only."""
-    m = _checked_lsh_manifest(path)
-    id_col = m.meta["id_col"]
-    n_bands, n_subparts = int(m.meta["n_bands"]), int(m.meta["n_subparts"])
-    sigs = minhash_signatures(
-        new_docs, m.meta["text_col"], id_col, int(m.meta["n_hashes"]), int(m.meta["k"])
-    )
-    # the delta banding feeds FOUR consumers (pb probe, index join,
-    # both sides of the delta self-join) — materialize once; deltas
-    # are small by the operator's whole premise
-    delta = _with_pb(
-        banded_minhash(sigs, id_col, int(m.meta["n_hashes"]), n_bands),
-        n_bands,
-        n_subparts,
-    ).localCheckpoint(eager=True)
-    probe_pbs = [r["pb"] for r in delta.select("pb").distinct().collect()]
-    files = m.files_for(probe_pbs)
-    if not files:  # a fresh index with no data: only delta-delta pairs
-        return bucket_pairs(delta, id_col, ["band", "bh"], max_bucket).distinct()
-    if max_bucket is not None:
-        # capped path: combined-occupancy capping through the one true
-        # bucket_pairs (see _capped_incremental_pairs — the asymmetric
-        # join below cannot honor the cap)
-        idx = (
-            spark.read.option("basePath", str(m.root))
-            .parquet(*files)
-            .select(F.col(id_col), "band", "bh")
-        )
-        return _capped_incremental_pairs(
-            delta, idx, id_col, ["band", "bh"], max_bucket
-        )
-    idx = (
-        spark.read.option("basePath", str(m.root))
-        .parquet(*files)
-        .select(F.col(id_col).alias("_idx_id"), "band", "bh")
-    )
-    cross = (
-        F.broadcast(delta.select(id_col, "band", "bh"))
-        .join(idx, ["band", "bh"])
-        .filter(F.col(id_col) != F.col("_idx_id"))
-        .select(
-            F.least(F.col(id_col), F.col("_idx_id")).alias("id_a"),
-            F.greatest(F.col(id_col), F.col("_idx_id")).alias("id_b"),
-        )
-    )
-    within = bucket_pairs(delta, id_col, ["band", "bh"], None)
-    return cross.unionByName(within).distinct()
+    """Candidate near-dup pairs ``(id_a, id_b)`` INVOLVING the delta,
+    against a ``build_lsh_text_index`` table: exactly the pairs a full
+    ``lsh_candidate_pairs`` over (corpus + delta), with the same
+    ``max_bucket``, emits that touch a delta doc. No verify step.
+    Commit the delta afterwards with ``append_lsh_text_index``; the
+    two-step (query, then append) keeps this function read-only."""
+    return _probe_index(spark, _MINHASH, new_docs, path, max_bucket)[2]
 
 
 def append_lsh_text_index(
     new_docs: DataFrame, path: str, meta_update: dict | None = None
 ) -> None:
-    """Commit a delta into the persisted banded-minhash index: band the
-    new docs with the manifest's PINNED params, append their files into
-    the existing pb partitions, publish a new manifest version (atomic
-    ``_HEAD`` swap — concurrent incremental queries see the old or the
-    new version, never a torn one). Cost is one scan + write of the
-    delta; the manifest re-list is write-time metadata work.
-
-    ``meta_update`` merges extra keys into the manifest meta in the
-    same atomic commit — the streaming layer stores its replay
-    watermark (``last_stream_epoch``) this way, making "delta is in
-    the index" and "epoch is done" one atomic fact (the build params
-    themselves stay pinned: updates may add keys, not reband)."""
-    m = _checked_lsh_manifest(path)
-    sigs = minhash_signatures(
-        new_docs,
-        m.meta["text_col"],
-        m.meta["id_col"],
-        int(m.meta["n_hashes"]),
-        int(m.meta["k"]),
-    )
-    banded = banded_minhash(
-        sigs, m.meta["id_col"], int(m.meta["n_hashes"]), int(m.meta["n_bands"])
-    )
-    from .index_store import IndexManifest
-
-    # staged append: files land under _staging and move into the live
-    # dirs inside the locked commit, with the exact list published —
-    # no tree re-list, nothing for a concurrent writer to adopt
-    stage, _ = IndexManifest.stage_write(
-        _with_pb(banded, int(m.meta["n_bands"]), int(m.meta["n_subparts"])),
-        path,
-        "pb",
-    )
-    IndexManifest.commit_staged(
-        path, "pb", stage, meta_update=meta_update
-    )
+    """Commit a delta into the banded-minhash index. ``meta_update``
+    merges extra keys into the manifest meta in the same atomic commit
+    — the streaming layer stores its replay watermark
+    (``last_stream_epoch``) this way, making "delta is in the index"
+    and "epoch is done" one atomic fact (the build params themselves
+    stay pinned: updates may add keys, not reband)."""
+    _append_index(_MINHASH, new_docs, path, meta_update)
 
 
 def simhash64(text_col, k_tokens_hash_bits: int = 60):
@@ -1321,21 +1345,21 @@ def _banded_wide_pairs(
         .select("id_a", "id_b", "hamming")
     )
 
-def _checked_simhash_manifest(path: str):
-    from .similarity import _checked_manifest
+def _band_simhash_meta(docs: DataFrame, m: dict) -> DataFrame:
+    sigs = simhash_signatures_wide(docs, m["text_col"], m["id_col"])
+    return simhash_wide_banded(sigs, m["id_col"], max_hamming=int(m["max_hamming"]))
 
-    return _checked_manifest(
-        path,
-        "pb",
-        ["kind", "max_hamming", "id_col", "text_col", "n_subparts"],
-        kind="simhash_wide",
-        desc="wide-simhash text",
-        missing_msg=(
-            f"no simhash index manifest at {path} — build with "
-            "build_simhash_index first (banding a delta against a bare "
-            "tree could silently use different band parameters)"
-        ),
-    )
+
+_SIMHASH = _IndexFamily(
+    kind="simhash_wide",
+    desc="wide-simhash text",
+    label="simhash",
+    build_fn="build_simhash_index",
+    meta_keys=("max_hamming", "id_col", "text_col", "n_subparts"),
+    bucket_col="chunk",
+    band=_band_simhash_meta,
+    n_bands=lambda m: int(m["max_hamming"]) + 1,
+)
 
 
 def build_simhash_index(
@@ -1347,34 +1371,19 @@ def build_simhash_index(
     n_subparts: int = 256,
 ) -> None:
     """Persist the banded 120-bit SimHash table — the intermediate of
-    ``simhash_wide_banded_pairs`` — as a ``pb``-partitioned parquet
-    table under an ``IndexManifest``: ``build_lsh_text_index``'s
-    pattern applied to the simhash family, closing the last text
-    near-dup pipeline that still re-signed the whole corpus on every
-    crawl delta.
-
-    Each row keeps the full ``(sim_hi, sim_lo)`` signature alongside
-    its ``(band, chunk)`` so an incremental probe can Hamming-verify
-    candidates without a second join back to the corpus. ``pb = band *
-    n_subparts + (chunk mod n_subparts)`` gives the same delta-
-    proportional pruning as the minhash index: a (band, chunk) bucket
-    lives entirely inside one pb partition, and a delta touches at
-    most ``|delta| x (max_hamming + 1)`` of them, resolved through ONE
-    manifest read. ``max_hamming`` is pinned in the manifest because
-    it determines the band boundaries — probing with a different
-    radius than the build banded with would silently miss pairs.
-    Size ``n_subparts`` with ``lsh_subparts_for`` at real corpus
-    scale."""
-    sigs = simhash_signatures_wide(docs, text_col, id_col)
-    banded = simhash_wide_banded(sigs, id_col, max_hamming=max_hamming)
-    from .index_store import IndexManifest
-
-    IndexManifest.build(
-        _with_pb(banded, max_hamming + 1, n_subparts, bucket_col="chunk"),
+    ``simhash_wide_banded_pairs``, ``(id, sim_hi, sim_lo, band,
+    chunk)`` with ``chunk`` the bucket — as an incremental index
+    (module docstring). Each row keeps the full signature, so the
+    probe's Hamming verify reads it from the scanned index rows, never
+    the corpus. ``max_hamming`` is pinned in the manifest because it
+    determines the band boundaries — probing with a different radius
+    than the build banded with would silently miss pairs. Size
+    ``n_subparts`` with ``lsh_subparts_for`` at real corpus scale."""
+    _build_index(
+        _SIMHASH,
+        docs,
         path,
-        "pb",
-        meta={
-            "kind": "simhash_wide",
+        {
             "max_hamming": max_hamming,
             "id_col": id_col,
             "text_col": text_col,
@@ -1388,98 +1397,36 @@ def simhash_candidates_incremental(
     new_docs: DataFrame,
     path: str,
 ) -> DataFrame:
-    """Hamming-ball near-dup pairs (<= the index's pinned
-    ``max_hamming``) INVOLVING the delta, against a persisted
-    ``build_simhash_index`` table — ``lsh_candidates_incremental``'s
-    contract for the simhash family: sign and band ONLY ``new_docs``,
-    then
+    """Hamming-ball near-dup pairs ``(id_a, id_b, hamming)`` (<= the
+    index's pinned ``max_hamming``) INVOLVING the delta, against a
+    ``build_simhash_index`` table: exactly the rows a full
+    ``simhash_wide_banded_pairs`` over (corpus + delta) emits that
+    touch a delta doc (the pigeonhole completeness guarantee holds
+    per pair, so restricting one side to the delta loses nothing).
+    Commit the delta afterwards with ``append_simhash_index``."""
+    meta, _, cands, sigs = _probe_index(spark, _SIMHASH, new_docs, path, None)
+    id_col = meta["id_col"]
 
-    - delta x index: equi-join on (band, chunk) against ONLY the index
-      partitions the delta hashes into (pb values collected from the
-      checkpointed delta -> one manifest read -> file list), delta side
-      broadcast so the index side streams map-side; Hamming verify uses
-      the signatures stored IN the index rows — no corpus join;
-    - delta x delta: the usual pigeonhole self-join over the same
-      checkpointed banding.
+    def side(s: str) -> DataFrame:
+        return sigs.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("sim_hi").alias(f"_h{s}"),
+            F.col("sim_lo").alias(f"_l{s}"),
+        )
 
-    Returns exactly the pairs a full ``simhash_wide_banded_pairs`` over
-    (corpus + delta) would emit that touch at least one delta doc
-    (parity-tested; the pigeonhole completeness guarantee holds
-    per-pair, so restricting one side to the delta loses nothing).
-    Delta ids must be disjoint from indexed ids. Commit the delta
-    afterwards with ``append_simhash_index``."""
-    m = _checked_simhash_manifest(path)
-    id_col = m.meta["id_col"]
-    mh = int(m.meta["max_hamming"])
-    n_subparts = int(m.meta["n_subparts"])
-    sigs = simhash_signatures_wide(new_docs, m.meta["text_col"], id_col)
-    # one banding feeds three consumers (pb probe, index join, both
-    # sides of the delta self-join) — materialize once; deltas are
-    # small by the operator's premise
-    delta = _with_pb(
-        simhash_wide_banded(sigs, id_col, max_hamming=mh),
-        mh + 1,
-        n_subparts,
-        bucket_col="chunk",
-    ).localCheckpoint(eager=True)
-    probe_pbs = [r["pb"] for r in delta.select("pb").distinct().collect()]
-    files = m.files_for(probe_pbs)
-    if files:
-        idx = (
-            spark.read.option("basePath", str(m.root))
-            .parquet(*files)
-            .select(
-                F.col(id_col).alias("_idx_id"),
-                F.col("sim_hi").alias("_idx_hi"),
-                F.col("sim_lo").alias("_idx_lo"),
-                "band",
-                "chunk",
-            )
-        )
-        ham = hamming64(F.col("sim_hi"), F.col("_idx_hi")) + hamming64(
-            F.col("sim_lo"), F.col("_idx_lo")
-        )
-        cross = (
-            F.broadcast(delta.select(id_col, "sim_hi", "sim_lo", "band", "chunk"))
-            .join(idx, ["band", "chunk"])
-            .filter(F.col(id_col) != F.col("_idx_id"))
-            .select(
-                F.least(F.col(id_col), F.col("_idx_id")).alias("id_a"),
-                F.greatest(F.col(id_col), F.col("_idx_id")).alias("id_b"),
-                ham.alias("hamming"),
-            )
-            .filter(F.col("hamming") <= mh)
-        )
-    else:  # a fresh index with no data at all: only delta-delta pairs
-        cross = None
-    within = _banded_wide_pairs(delta, id_col, max_hamming=mh)
-    pairs = within if cross is None else cross.unionByName(within)
-    return pairs.distinct()
+    ham = hamming64(F.col("_ha"), F.col("_hb")) + hamming64(F.col("_la"), F.col("_lb"))
+    return (
+        cands.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select("id_a", "id_b", ham.alias("hamming"))
+        .filter(F.col("hamming") <= int(meta["max_hamming"]))
+    )
 
 
 def append_simhash_index(new_docs: DataFrame, path: str) -> None:
-    """Commit a delta into the persisted simhash index: sign and band
-    the new docs with the manifest's PINNED ``max_hamming``, append
-    into the existing pb partitions, publish a new manifest version
-    (atomic ``_HEAD`` swap). Cost is one scan + write of the delta."""
-    m = _checked_simhash_manifest(path)
-    sigs = simhash_signatures_wide(new_docs, m.meta["text_col"], m.meta["id_col"])
-    banded = simhash_wide_banded(
-        sigs, m.meta["id_col"], max_hamming=int(m.meta["max_hamming"])
-    )
-    from .index_store import IndexManifest
-
-    stage, _ = IndexManifest.stage_write(
-        _with_pb(
-            banded,
-            int(m.meta["max_hamming"]) + 1,
-            int(m.meta["n_subparts"]),
-            bucket_col="chunk",
-        ),
-        path,
-        "pb",
-    )
-    IndexManifest.commit_staged(path, "pb", stage)
+    """Commit a delta into the wide-simhash index, banded with the
+    manifest's pinned ``max_hamming``."""
+    _append_index(_SIMHASH, new_docs, path)
 
 
 def semantic_dedup(

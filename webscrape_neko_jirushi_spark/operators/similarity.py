@@ -10,6 +10,11 @@
 - ``ivf_topk``: IVF-style coarse quantization with deterministic seed
   centroids: assign each vector to nearest of C seeds, probe the
   query's nprobe nearest cells.
+- ``build_emb_lsh_index`` / ``emb_near_dups_incremental`` /
+  ``append_emb_lsh_index``: the embedding family of the incremental
+  near-dup indexes, on the protocol ``dedup``'s module docstring
+  states (this module supplies the banding, ``emb_banded``, and the
+  cosine verify).
 """
 
 from __future__ import annotations
@@ -20,6 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import (
+    _append_index,
+    _build_index,
+    _checked_index,
+    _IndexFamily,
+    _probe_index,
+    bucket_pairs,
+    embedding_near_dups,
+)
 from .index_store import IndexManifest
 
 
@@ -499,8 +513,6 @@ def banded_lsh_candidates(
     shrink a quadratic pair list. Sign flips from floating-point
     summation order are pair-coherent for proportional vectors, so
     exact-direction duplicates are never lost."""
-    from .dedup import bucket_pairs
-
     banded = emb_banded(embeddings, dim, n_bands, bits_per_band, id_col, vec_col)
     return bucket_pairs(banded, id_col, ["band", "bucket"], max_bucket, materialize)
 
@@ -1011,20 +1023,28 @@ def ivf_topk_indexed(
     )
 
 
-def _checked_emb_lsh_manifest(path: str):
-    return _checked_manifest(
-        path,
-        "pb",
-        ["kind", "dim", "n_bands", "bits_per_band", "id_col", "vec_col",
-         "n_subparts"],
-        kind="emb_lsh_banded",
-        desc="banded embedding-LSH",
-        missing_msg=(
-            f"no embedding LSH index manifest at {path} — build with "
-            "build_emb_lsh_index first (banding a delta against a bare "
-            "tree could silently use different hyperplanes)"
-        ),
+def _band_emb_meta(embeddings: DataFrame, m: dict) -> DataFrame:
+    return emb_banded(
+        embeddings,
+        int(m["dim"]),
+        int(m["n_bands"]),
+        int(m["bits_per_band"]),
+        m["id_col"],
+        m["vec_col"],
+        keep_vec=True,
     )
+
+
+_EMB_LSH = _IndexFamily(
+    kind="emb_lsh_banded",
+    desc="banded embedding-LSH",
+    label="embedding LSH",
+    build_fn="build_emb_lsh_index",
+    meta_keys=("dim", "n_bands", "bits_per_band", "id_col", "vec_col", "n_subparts"),
+    bucket_col="bucket",
+    band=_band_emb_meta,
+    n_bands=lambda m: int(m["n_bands"]),
+)
 
 
 def build_emb_lsh_index(
@@ -1038,36 +1058,26 @@ def build_emb_lsh_index(
     n_subparts: int = 64,
 ) -> None:
     """Persist the banded hyperplane-LSH table — the intermediate of
-    ``banded_lsh_candidates`` — as a ``pb``-partitioned parquet table
-    under an ``IndexManifest``: the incremental-index pattern
-    (``build_lsh_text_index`` / ``build_simhash_index``) applied to
-    the EMBEDDING near-dup family, so a crawl delta's near-dups cost
-    one delta projection instead of re-bucketing the whole corpus.
+    ``banded_lsh_candidates``, ``(id, vec, band, bucket)`` — as an
+    incremental index (``dedup`` module docstring), so a crawl delta's
+    near-dups cost one delta projection instead of re-bucketing the
+    whole corpus.
 
-    Each band row stores the full vector alongside its
-    ``(band, bucket)`` — an ``n_bands``-fold storage multiplication,
-    deliberately: the incremental cosine verify then reads partner
-    vectors from the SAME pb-pruned files its band join touches,
-    never the corpus table (a join back to an id-keyed corpus would
-    re-introduce a corpus-proportional scan, the cost this index
-    exists to delete; n_bands=4 x an embedding column is the price).
-    ``pb = band * n_subparts + (bucket mod n_subparts)`` gives the
-    delta-proportional prune; the planes are pinned by
-    ``(dim, n_bands, bits_per_band)`` in the manifest — md5-derived,
-    so pinning the three ints pins the geometry. Size
-    ``bits_per_band`` with ``lsh_bits_for`` at build time and rebuild
-    when ``emb_lsh_index_needs_reindex`` fires."""
-    from .dedup import _with_pb
-
-    banded = emb_banded(
-        embeddings, dim, n_bands, bits_per_band, id_col, vec_col, keep_vec=True
-    )
-    IndexManifest.build(
-        _with_pb(banded, n_bands, n_subparts, bucket_col="bucket"),
+    Each band row stores the full vector — an ``n_bands``-fold storage
+    multiplication, deliberately: the incremental cosine verify then
+    reads partner vectors from the SAME pb-pruned files its band join
+    touches, never the corpus table (a join back to an id-keyed corpus
+    would re-introduce a corpus-proportional scan, the cost this index
+    exists to delete). The planes are pinned by ``(dim, n_bands,
+    bits_per_band)`` in the manifest — md5-derived, so pinning the
+    three ints pins the geometry. Size ``bits_per_band`` with
+    ``lsh_bits_for`` at build time and rebuild when
+    ``emb_lsh_index_needs_reindex`` fires."""
+    _build_index(
+        _EMB_LSH,
+        embeddings,
         path,
-        "pb",
-        meta={
-            "kind": "emb_lsh_banded",
+        {
             "dim": dim,
             "n_bands": n_bands,
             "bits_per_band": bits_per_band,
@@ -1085,127 +1095,26 @@ def emb_near_dups_incremental(
     tau: float = 0.95,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Cosine >= ``tau`` near-dup pairs INVOLVING the delta, against a
-    persisted ``build_emb_lsh_index`` table — the embedding member of
-    the incremental family (minhash: ``lsh_candidates_incremental``,
-    simhash: ``simhash_candidates_incremental``): project and band
-    ONLY ``new_embeddings`` with the manifest's pinned planes, then
-
-    - delta x index: equi-join on (band, bucket) against only the pb
-      partitions the delta hashes into (one manifest read -> file
-      list), delta side broadcast;
-    - delta x delta: ``bucket_pairs`` over the same checkpointed
-      banding.
-
-    Both candidate sets hydrate through ONE verify path —
-    ``dedup.embedding_near_dups(candidates=...)`` over the union of
-    the delta's vectors and the vectors stored in the scanned index
-    rows (every cross partner lives in a scanned file by
-    construction) — so incremental cosines are bit-identical to the
-    full pipeline's. Returns exactly the pairs
-    ``banded_lsh_candidates`` + ``embedding_near_dups`` over
-    (corpus + delta) would emit that touch at least one delta vector
-    (parity-tested). Delta ids must be disjoint from indexed ids.
-    Commit the delta afterwards with ``append_emb_lsh_index``."""
-    from .dedup import _with_pb, bucket_pairs, embedding_near_dups
-
-    m = _checked_emb_lsh_manifest(path)
-    id_col, vec_col = m.meta["id_col"], m.meta["vec_col"]
-    n_bands, n_subparts = int(m.meta["n_bands"]), int(m.meta["n_subparts"])
-    banded = emb_banded(
-        new_embeddings,
-        int(m.meta["dim"]),
-        n_bands,
-        int(m.meta["bits_per_band"]),
-        id_col,
-        vec_col,
-        keep_vec=True,
+    """Cosine >= ``tau`` near-dup pairs ``(id_a, id_b, cosine)``
+    INVOLVING the delta, against a ``build_emb_lsh_index`` table:
+    exactly the pairs ``banded_lsh_candidates`` (same ``max_bucket``)
+    + ``embedding_near_dups`` over (corpus + delta) emit that touch a
+    delta vector. The verify is ``dedup.embedding_near_dups(candidates=
+    ...)`` itself, so incremental cosines are bit-identical to the
+    full pipeline's. Commit the delta afterwards with
+    ``append_emb_lsh_index``."""
+    meta, _, cands, vectors = _probe_index(
+        spark, _EMB_LSH, new_embeddings, path, max_bucket
     )
-    # one banding feeds four consumers (pb probe, vector hydration,
-    # index join, delta self-join) — materialize once; deltas are
-    # small by the operator's premise
-    delta = _with_pb(banded, n_bands, n_subparts, bucket_col="bucket").localCheckpoint(
-        eager=True
+    return embedding_near_dups(
+        vectors, meta["id_col"], meta["vec_col"], tau, candidates=cands
     )
-    probe_pbs = [r["pb"] for r in delta.select("pb").distinct().collect()]
-    files = m.files_for(probe_pbs)
-    vectors = delta.select(id_col, vec_col).dropDuplicates([id_col])
-    if files:
-        idx = spark.read.option("basePath", str(m.root)).parquet(*files)
-        if max_bucket is not None:
-            # capped path: combined-occupancy capping through the one
-            # true bucket_pairs (dedup._capped_incremental_pairs — the
-            # asymmetric join below cannot honor the cap)
-            from .dedup import _capped_incremental_pairs
-
-            cands = _capped_incremental_pairs(
-                delta.select(id_col, "band", "bucket"),
-                idx.select(F.col(id_col), "band", "bucket"),
-                id_col,
-                ["band", "bucket"],
-                max_bucket,
-            )
-        else:
-            cross = (
-                F.broadcast(delta.select(id_col, "band", "bucket"))
-                .join(
-                    idx.select(F.col(id_col).alias("_idx_id"), "band", "bucket"),
-                    ["band", "bucket"],
-                )
-                .filter(F.col(id_col) != F.col("_idx_id"))
-                .select(
-                    F.least(F.col(id_col), F.col("_idx_id")).alias("id_a"),
-                    F.greatest(F.col(id_col), F.col("_idx_id")).alias("id_b"),
-                )
-            )
-            within = bucket_pairs(
-                delta.select(id_col, "band", "bucket"),
-                id_col,
-                ["band", "bucket"],
-                None,
-            )
-            cands = cross.unionByName(within).distinct()
-        vectors = vectors.unionByName(
-            idx.select(id_col, vec_col).dropDuplicates([id_col])
-        )
-    else:  # a fresh index with no data at all: only delta-delta pairs
-        cands = bucket_pairs(
-            delta.select(id_col, "band", "bucket"),
-            id_col,
-            ["band", "bucket"],
-            max_bucket,
-        )
-    return embedding_near_dups(vectors, id_col, vec_col, tau, candidates=cands)
 
 
 def append_emb_lsh_index(new_embeddings: DataFrame, path: str) -> None:
-    """Commit a delta into the persisted embedding-LSH index: band the
-    new vectors with the manifest's PINNED planes, append into the
-    existing pb partitions, publish a new manifest version (atomic
-    ``_HEAD`` swap). Cost is one scan + write of the delta."""
-    from .dedup import _with_pb
-
-    m = _checked_emb_lsh_manifest(path)
-    banded = emb_banded(
-        new_embeddings,
-        int(m.meta["dim"]),
-        int(m.meta["n_bands"]),
-        int(m.meta["bits_per_band"]),
-        m.meta["id_col"],
-        m.meta["vec_col"],
-        keep_vec=True,
-    )
-    stage, _ = IndexManifest.stage_write(
-        _with_pb(
-            banded,
-            int(m.meta["n_bands"]),
-            int(m.meta["n_subparts"]),
-            bucket_col="bucket",
-        ),
-        path,
-        "pb",
-    )
-    IndexManifest.commit_staged(path, "pb", stage)
+    """Commit a delta into the embedding-LSH index, banded with the
+    manifest's pinned planes."""
+    _append_index(_EMB_LSH, new_embeddings, path)
 
 
 def emb_lsh_index_needs_reindex(
@@ -1217,7 +1126,7 @@ def emb_lsh_index_needs_reindex(
     ``bits_per_band``, expected bucket occupancy — and with it the
     candidate count per delta row — has drifted >= 2x past target;
     rebuild with ``bits_per_band=lsh_bits_for(n_total)``."""
-    m = _checked_emb_lsh_manifest(path)
+    m = _checked_index(_EMB_LSH, path)
     return lsh_bits_for(n_vecs_total, target_occupancy) > int(m.meta["bits_per_band"])
 
 

@@ -4,8 +4,8 @@ Wires Structured Streaming to the persisted incremental LSH text
 index (``dedup.build_lsh_text_index`` family): each micro-batch of
 newly-crawled documents is signed + banded ONCE, its near-dup
 candidate pairs against everything already indexed (and within the
-batch) are emitted to a pairs sink, and the batch's bands are
-appended to the index — so the next batch sees it. Per-batch cost is
+batch) are emitted to a pairs sink, and the same checkpointed bands
+are appended to the index — so the next batch sees it. Per-batch cost is
 delta-proportional (the incremental query's whole contract,
 ``dedup.lsh_candidates_incremental``); the corpus is never re-signed.
 
@@ -61,17 +61,18 @@ def doc_batch_update_index(
     committed (replay detected) and nothing was done. Usable directly
     in batch code too — an orchestrated nightly delta is just an epoch
     with a hand-assigned id."""
-    spark = batch_df.sparkSession
-    m = dedup._checked_lsh_manifest(index_path)
+    m = dedup._checked_index(dedup._MINHASH, index_path)
     if int(m.meta.get("last_stream_epoch", -1)) >= int(epoch_id):
         return False
-    pairs = dedup.lsh_candidates_incremental(
-        spark, batch_df, index_path, max_bucket=max_bucket
+    # the probe's checkpointed banding is what the append commits: the
+    # batch is signed once
+    _, delta, pairs, _ = dedup._probe_index(
+        batch_df.sparkSession, dedup._MINHASH, batch_df, index_path, max_bucket
     )
     # per-epoch directory + overwrite = replay-idempotent sink
     pairs.write.mode("overwrite").parquet(f"{pairs_sink}/epoch={int(epoch_id)}")
-    dedup.append_lsh_text_index(
-        batch_df, index_path, meta_update={"last_stream_epoch": int(epoch_id)}
+    dedup._commit_delta(
+        index_path, delta, meta_update={"last_stream_epoch": int(epoch_id)}
     )
     return True
 
