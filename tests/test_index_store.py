@@ -493,6 +493,10 @@ def test_probe_rejects_wrong_index_kind(spark, tmp_path):
         similarity.ann_topk_indexed(spark, ivf, q, k=5)
     with pytest.raises(ValueError, match="not a 'bucket' index"):
         similarity.append_ann_index(e.limit(1), ivf)
+    with pytest.raises(ValueError):
+        similarity.pq_topk_indexed(spark, ann, q, k=5)
+    with pytest.raises(ValueError):
+        similarity.append_pq_index(e.limit(1), ann)
 
 
 def test_manifest_rejects_remote_uris(tmp_path):

@@ -179,6 +179,8 @@ def test_ivfpq_probe_is_jvm_side(spark, corpus):
 
 
 def test_ivfpq_validation_fails_loudly(spark, corpus, tmp_path):
+    from webscrape_neko_jirushi_spark.operators.index_store import IndexManifest
+
     vecs, e, cents, path = corpus
     qv = [float(x) for x in e.head()["embedding"]]
     with pytest.raises(ValueError, match="query dim"):
@@ -190,3 +192,11 @@ def test_ivfpq_validation_fails_loudly(spark, corpus, tmp_path):
         similarity.ivfpq_topk(spark, flat, qv, k=5)
     with pytest.raises(ValueError, match="no IVF-PQ manifest"):
         similarity.ivfpq_topk(spark, str(tmp_path / "nope"), qv, k=5)
+    # and an IVF-PQ index is not an IVF-flat one: same `cell` key, but
+    # the kind tag refuses the append before anything is committed
+    v0 = IndexManifest.load(path).version
+    with pytest.raises(ValueError):
+        similarity.append_ivf_index(e.limit(5), path)
+    assert IndexManifest.load(path).version == v0
+    with pytest.raises(ValueError):
+        similarity.ivf_topk_indexed(spark, path, qv)

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import connected_components
-from .index_store import IndexManifest
+from .index_store import IndexManifest, checked_manifest
 
 
 def _pb(tag: str, col, n: int):
@@ -62,18 +62,14 @@ def _projected(rows: DataFrame, n: int) -> DataFrame:
 
 
 def _checked_cc_manifest(path: str):
-    from .similarity import _checked_manifest
-
-    return _checked_manifest(
+    return checked_manifest(
         path,
         "pb",
-        ["kind", "n_subparts"],
-        kind="cc_labels",
-        desc="cluster-labels store",
-        missing_msg=(
-            f"no cluster-labels manifest at {path} — build with "
-            "build_cluster_labels first"
-        ),
+        "cc_labels",
+        ("n_subparts",),
+        "a cluster-labels store",
+        f"no cluster-labels manifest at {path} — build with "
+        "build_cluster_labels first",
     )
 
 

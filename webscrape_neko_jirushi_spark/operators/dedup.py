@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from .index_store import IndexManifest
+from .index_store import IndexManifest, checked_manifest
 
 
 def exact_dedup(
@@ -408,7 +408,7 @@ class _IndexFamily:
     the names its errors use."""
 
     kind: str
-    desc: str  # "index at ... is not a <desc> index"
+    desc: str  # "index at ... is not <desc> index"
     label: str  # "no <label> index manifest at ..."
     build_fn: str
     meta_keys: tuple[str, ...]
@@ -418,19 +418,15 @@ class _IndexFamily:
 
 
 def _checked_index(fam: _IndexFamily, path: str):
-    from .similarity import _checked_manifest
-
-    return _checked_manifest(
+    return checked_manifest(
         path,
         "pb",
-        ["kind", *fam.meta_keys],
-        kind=fam.kind,
-        desc=fam.desc,
-        missing_msg=(
-            f"no {fam.label} index manifest at {path} — build with "
-            f"{fam.build_fn} first (banding a delta against a bare tree "
-            "could silently use different band parameters)"
-        ),
+        fam.kind,
+        fam.meta_keys,
+        fam.desc,
+        f"no {fam.label} index manifest at {path} — build with "
+        f"{fam.build_fn} first (banding a delta against a bare tree "
+        "could silently use different band parameters)",
     )
 
 
@@ -528,7 +524,7 @@ def _band_minhash_meta(docs: DataFrame, m: dict) -> DataFrame:
 
 _MINHASH = _IndexFamily(
     kind="minhash_banded",
-    desc="banded-minhash text",
+    desc="a banded-minhash text",
     label="LSH text",
     build_fn="build_lsh_text_index",
     meta_keys=("n_hashes", "n_bands", "k", "id_col", "text_col", "n_subparts"),
@@ -1352,7 +1348,7 @@ def _band_simhash_meta(docs: DataFrame, m: dict) -> DataFrame:
 
 _SIMHASH = _IndexFamily(
     kind="simhash_wide",
-    desc="wide-simhash text",
+    desc="a wide-simhash text",
     label="simhash",
     build_fn="build_simhash_index",
     meta_keys=("max_hamming", "id_col", "text_col", "n_subparts"),

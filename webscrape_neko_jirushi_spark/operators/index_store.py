@@ -1,6 +1,8 @@
 """Manifest-pointer layer for partition-keyed parquet indexes
 (SURVEY.md §2.11 X9/X10 scale path; the ``crawl/snapshots.py`` HEAD
-pattern applied to the persisted ANN/IVF indexes).
+pattern applied to every persisted index: the LSH-ANN, IVF, PQ and
+IVF-PQ top-k indexes, the banded minhash / simhash / embedding-LSH
+near-dup indexes and the cluster-labels store).
 
 Why: a ``bucket``-partitioned index probed through Catalyst partition
 pruning still pays an O(total-partitions) *directory listing* before
@@ -26,8 +28,16 @@ read and hands Spark an explicit file list — zero directory listing,
 O(probed-partitions) metadata instead of O(all-partitions). On a
 cluster this class is swapped for Iceberg table metadata; the
 operators only use ``load``/``build``/``stage_write``/
-``commit_staged``/``files_for``, so the swap is a constructor change. Every index has a manifest: a path without one
-is not an index, and every probe and append raises on it.
+``commit_staged``/``files_for``, so the swap is a constructor change.
+
+Every index has a manifest. The top-k (``similarity``), near-dup
+(``dedup``) and cluster-label (``cluster_store``) families write a
+``kind`` tag into its meta, and ``checked_manifest`` is the one
+validator their probes and appends run first: a path without a
+manifest is not an index, and a manifest with another partition key,
+another ``kind`` or missing pinned meta is another family's index.
+Both raise ``ValueError``, so an operator never maps its probe values
+onto the wrong partitions.
 
 Write-side cost: ``commit`` re-enumerates the partition tree once per
 build/append. That is the Iceberg trade — metadata work happens at
@@ -574,6 +584,33 @@ class IndexManifest:
             if not any(d.iterdir()):
                 d.rmdir()
         return deleted
+
+
+def checked_manifest(
+    path: str,
+    key: str,
+    kind: str,
+    meta_keys: tuple[str, ...],
+    desc: str,
+    missing_msg: str,
+) -> IndexManifest:
+    """The committed manifest at ``path``, checked to be a ``kind``
+    index partitioned by ``key`` with every pinned ``meta_keys`` entry.
+    ``missing_msg`` is the family's build hint for a path with no
+    manifest; ``desc`` names the family, with its article, in the
+    mismatch error ("index at ... is not a 'cell' index")."""
+    m = IndexManifest.load(path)
+    if m is None:
+        raise ValueError(missing_msg)
+    missing = [k for k in meta_keys if k not in m.meta]
+    if m.key != key or m.meta.get("kind") != kind or missing:
+        raise ValueError(
+            f"index at {path} is not {desc} index (manifest key={m.key!r}, "
+            f"kind={m.meta.get('kind')!r}, missing meta {missing}) — probe "
+            "it with the operator matching its build"
+        )
+    return m
+
 
 def compact_index(spark, path: str | Path, max_files: int = 1) -> int:
     """Copy-on-write file compaction — the Iceberg ``rewrite_data_files``

@@ -10,16 +10,51 @@
 - ``ivf_topk``: IVF-style coarse quantization with deterministic seed
   centroids: assign each vector to nearest of C seeds, probe the
   query's nprobe nearest cells.
+- ``pq_train`` / ``pq_encode`` / ``pq_topk``: product quantization,
+  ranked by asymmetric distance over one-byte codes.
 - ``build_emb_lsh_index`` / ``emb_near_dups_incremental`` /
   ``append_emb_lsh_index``: the embedding family of the incremental
   near-dup indexes, on the protocol ``dedup``'s module docstring
   states (this module supplies the banding, ``emb_banded``, and the
   cosine verify).
+
+Persisted top-k indexes: LSH-ANN (``build_ann_index``, partition key
+``bucket``), IVF (``build_ivf_index``, ``cell``), PQ
+(``build_pq_index``, ``shard``) and IVF-PQ (``build_ivfpq_index``,
+``cell``) share one build / append / probe core (``_build_topk`` /
+``_append_topk`` / ``_probe_topk``). A family supplies a
+``_TopkFamily``: its key and ``kind``, the meta keys it pins, how a
+row is assigned its partition, which partitions a query probes, and
+its scorer.
+
+- build: assign every row its partition value and write through
+  ``IndexManifest.build``. The meta pins ``kind``, ``dim`` and the
+  family's geometry (plane bits and seed, centroids, codebooks), so
+  no append or probe can use other parameters than the build.
+- append: check the manifest, assign only the new rows with the
+  pinned meta, then ``stage_write`` + ``commit_staged`` (an atomic
+  ``_HEAD`` swap: a concurrent probe sees the old version or the new
+  one, never a torn one). Cost is one scan and write of the delta.
+- probe: check the manifest and the query's dimension, compute the
+  probed partitions from the query and the pinned meta (PQ probes
+  every shard), resolve their files with ONE manifest read (no
+  partition-tree listing) and score only those rows. If no probed
+  partition holds a row, the result is empty, typed from the index's
+  own parquet footer.
+
+Each check raises ``ValueError``: a path with no manifest, another
+family's index (``index_store.checked_manifest``: key or ``kind``
+differs), or a query of another dimension. A probe returns the rows
+of its non-persisted twin over the same corpus (``ann_topk_lsh``,
+``ivf_topk``, ``pq_topk``; test-proven). An index is derived data:
+rebuild it when its parameters drift.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,7 +69,7 @@ from .dedup import (
     bucket_pairs,
     embedding_near_dups,
 )
-from .index_store import IndexManifest
+from .index_store import IndexManifest, checked_manifest
 
 
 def _dot(a, b):
@@ -219,6 +254,14 @@ def multiprobe_sequence(
     return [qbits] + [b for _, b in cands[: n_probes - 1]]
 
 
+def _lsh_probe(
+    query: list[float], planes, multiprobe_hamming: int, n_probes: int | None
+) -> list[int]:
+    if n_probes is not None:
+        return multiprobe_sequence(query, planes, n_probes)
+    return _probe_buckets(query, planes, multiprobe_hamming)
+
+
 def ann_topk_lsh(
     embeddings: DataFrame,
     query: list[float],
@@ -237,217 +280,11 @@ def ann_topk_lsh(
     cost fixed instead of C(bits, h)). With the bucket column
     persisted (``build_ann_index``), the probe becomes a
     partition-pruned scan — use ``ann_topk_indexed`` at scale."""
-    dim = len(query)
-    planes = _hyperplanes(dim, bits, seed)
-    if n_probes is not None:
-        probe = multiprobe_sequence(query, planes, n_probes)
-    else:
-        probe = _probe_buckets(query, planes, multiprobe_hamming)
+    planes = _hyperplanes(len(query), bits, seed)
+    probe = _lsh_probe(query, planes, multiprobe_hamming, n_probes)
     bucketed = embeddings.withColumn("bucket", lsh_bucket_col(F.col(vec_col), planes))
-    pruned = bucketed.filter(F.col("bucket").isin(probe))
-    return (
-        pruned.select(
-            F.col(id_col),
-            F.round(cosine_col(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def build_ann_index(
-    embeddings: DataFrame,
-    path: str,
-    dim: int,
-    bits: int = 8,
-    seed: int = 7,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the LSH index as a ``bucket``-partitioned parquet
-    table: one directory per bucket (2^bits dirs). Probing then reads
-    only the probed directories — at 100 TB with bits=8 and
-    multiprobe_hamming=1, 9/256 of the corpus instead of all of it.
-    Bucket computation is one scan, write is one job; append new
-    vectors with ``append_ann_index`` and rebuild when
-    ``ann_index_needs_reindex`` fires (the index is derived data).
-
-    The build commits an ``IndexManifest`` pinning per-bucket file
-    lists + the build params (dim/bits/seed): a probe then resolves
-    its files from ONE manifest read instead of listing the whole
-    partition tree — the listing was the entire residual 100x probe
-    growth in ``BENCH/DEDUP_SCALE.md``."""
-    IndexManifest.build(
-        lsh_buckets(embeddings, dim, bits=bits, seed=seed, vec_col=vec_col),
-        path,
-        "bucket",
-        meta={"dim": dim, "bits": bits, "seed": seed},
-    )
-
-
-def append_ann_index(
-    embeddings: DataFrame, path: str, vec_col: str = "embedding"
-) -> None:
-    """Incremental index maintenance: bucket only the NEW vectors with
-    the index's recorded (dim, bits, seed) and append their files into
-    the existing bucket partitions, then publish a new manifest
-    version (atomic ``_HEAD`` swap — a concurrent probe sees the old
-    or the new version, never a torn one). Cost is one scan + write of
-    the DELTA only; the manifest re-list is write-time metadata work.
-
-    The build params come from the manifest, not arguments — an append
-    bucketed with different planes would silently corrupt the index.
-    Occupancy drift: appends grow expected bucket occupancy linearly
-    while ``bits`` stays fixed; check ``ann_index_needs_reindex``
-    after large appends and rebuild at the new size when it fires."""
-    m = _checked_manifest(
-        path,
-        "bucket",
-        ["bits", "seed", "dim"],
-        missing_msg=(
-            f"append_ann_index: no manifest at {path} — build with "
-            "build_ann_index first"
-        ),
-    )
-    planes = _hyperplanes(int(m.meta["dim"]), int(m.meta["bits"]), int(m.meta["seed"]))
-    stage, _ = IndexManifest.stage_write(
-        embeddings.withColumn("bucket", lsh_bucket_col(F.col(vec_col), planes)),
-        path,
-        "bucket",
-    )
-    IndexManifest.commit_staged(path, "bucket", stage)
-
-
-def ann_index_needs_reindex(
-    path: str, n_vecs_total: int, target_occupancy: int = 8
-) -> bool:
-    """Re-index trigger for an appended index: the build sized its
-    band bits for the THEN corpus via ``lsh_bits_for``; once the total
-    corpus would size to MORE bits, expected occupancy has drifted
-    >=2x past target and in-bucket probe/pair work grows with n again
-    — rebuild with ``build_ann_index(bits=lsh_bits_for(n_total))``.
-    The caller supplies the total count (it knows its append sizes;
-    counting here would burn a job per check)."""
-    m = _checked_manifest(
-        path,
-        "bucket",
-        ["bits"],
-        missing_msg=f"ann_index_needs_reindex: no manifest at {path}",
-    )
-    return lsh_bits_for(n_vecs_total, target_occupancy) > int(m.meta["bits"])
-
-
-def _checked_manifest(
-    path: str,
-    expected_key: str,
-    required_meta: list[str],
-    kind: str | None = None,
-    desc: str | None = None,
-    *,
-    missing_msg: str,
-):
-    """Load and VALIDATE the index manifest: probing an ANN index with
-    the IVF operator (or vice versa) would silently map probe values
-    onto the wrong partition kind and return a confidently wrong
-    top-k — fail loudly instead, like the pre-manifest column-mismatch
-    AnalysisException did.
-
-    The ONE validator for every index family (ANN/IVF/PQ probes plus
-    the banded minhash/simhash/emb-LSH and cluster-label stores —
-    five hand-rolled copies drifted before this): ``kind`` pins the
-    ``meta['kind']`` tag where a family writes one, ``desc`` names
-    the family in the mismatch error, and ``missing_msg`` is the
-    family's build-hint error for a path with no manifest (every
-    index has one, so a bare path is never probed)."""
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(missing_msg)
-    missing = [k for k in required_meta if k not in m.meta]
-    bad_kind = kind is not None and m.meta.get("kind") != kind
-    if m.key != expected_key or missing or bad_kind:
-        label = desc if desc is not None else repr(expected_key)
-        raise ValueError(
-            f"index at {path} is not a {label} index "
-            f"(manifest key={m.key!r}"
-            + (f", kind={m.meta.get('kind')!r}" if kind is not None else "")
-            + f", missing meta {missing}) — probe it "
-            "with the operator matching its build"
-        )
-    return m
-
-
-def _empty_probe_result(spark, m, id_col: str):
-    """Empty top-k with the id type taken from the INDEX's own parquet
-    footer — a hardcoded long would diverge from non-empty probes on
-    string/int32-id indexes and break unionByName across queries."""
-    for files in m.partitions.values():
-        if files:
-            id_type = (
-                spark.read.parquet(str(m.root / files[0])).schema[id_col].dataType
-            )
-            break
-    else:  # index with no data files at all: type unknowable
-        id_type = T.LongType()
-    return spark.createDataFrame(
-        [],
-        T.StructType(
-            [T.StructField(id_col, id_type), T.StructField("cosine", T.DoubleType())]
-        ),
-    )
-
-
-def ann_topk_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_hamming: int = 1,
-    n_probes: int | None = None,
-) -> DataFrame:
-    """ANN top-k over a persisted ``build_ann_index`` table. Returns
-    the same rows as ``ann_topk_lsh`` over the same corpus
-    (test-proven).
-
-    The probed buckets' files come from ONE manifest read and Spark is
-    handed the explicit file list — O(probed-partitions) metadata,
-    zero directory listing — and (bits, seed) are taken from the
-    manifest so the probe can never use different planes than the
-    build."""
-    m = _checked_manifest(
-        path,
-        "bucket",
-        ["bits", "seed", "dim"],
-        missing_msg=(
-            f"ann_topk_indexed: no manifest at {path} — build with "
-            "build_ann_index first"
-        ),
-    )
-    if len(query) != int(m.meta["dim"]):
-        # a wrong-dimension query would build DIFFERENT hyperplanes
-        # than the index was bucketed with and silently probe wrong
-        # buckets — fail loudly, same rationale as _checked_manifest
-        raise ValueError(
-            f"query dim {len(query)} != index dim {m.meta['dim']} at {path}"
-        )
-    planes = _hyperplanes(len(query), int(m.meta["bits"]), int(m.meta["seed"]))
-    if n_probes is not None:
-        probe = multiprobe_sequence(query, planes, n_probes)
-    else:
-        probe = _probe_buckets(query, planes, multiprobe_hamming)
-    files = m.files_for(probe)
-    if not files:
-        # every probed bucket is empty: no directory was ever
-        # written for them, so there is nothing to scan at all
-        return _empty_probe_result(spark, m, id_col)
-    pruned = spark.read.parquet(*files)
-    return (
-        pruned.select(
-            F.col(id_col),
-            F.round(cosine_col(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return cosine_topk(
+        bucketed.filter(F.col("bucket").isin(probe)), query, k, id_col, vec_col
     )
 
 
@@ -712,14 +549,7 @@ def ivf_topk(
     probe = _probe_cells(query, centroids, nprobe)
     assigned = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col)
     pruned = assigned.filter(F.col("cell").isin([int(p) for p in probe]))
-    return (
-        pruned.select(
-            F.col(id_col),
-            F.round(cosine_col(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(pruned, query, k, id_col, vec_col)
 
 
 def _sample_for_init(
@@ -931,98 +761,6 @@ def ivf_train_centroids(
     return centroids
 
 
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF assignment as a ``cell``-partitioned parquet
-    table — the IVF twin of ``build_ann_index``. Probing reads only the
-    ``nprobe`` probed cell directories. One scan + one write; rebuild
-    on corpus or centroid change (the index is derived data).
-
-    The build commits an ``IndexManifest`` so probes resolve their
-    cell files from one manifest read (no partition-tree listing)."""
-    # centroids pinned in the manifest (tiny: C x dim floats) so
-    # appends can never assign with different cells than the build
-    IndexManifest.build(
-        ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col),
-        path,
-        "cell",
-        meta={"centroids": [[float(x) for x in c] for c in centroids]},
-    )
-
-
-def append_ivf_index(
-    embeddings: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> None:
-    """Incremental IVF maintenance, the cell twin of
-    ``append_ann_index``: assign only the NEW vectors against the
-    manifest's pinned centroids, append their files into the existing
-    cell partitions, publish a new manifest version atomically.
-    Centroids are derived data too — when the corpus drifts enough
-    that assignments would change materially, rebuild with fresh
-    centroids (an IVF re-cluster is a full rebuild by definition)."""
-    m = _checked_manifest(
-        path,
-        "cell",
-        ["centroids"],
-        missing_msg=(
-            f"append_ivf_index: no centroid-bearing manifest at {path} — "
-            "build with build_ivf_index first"
-        ),
-    )
-    stage, _ = IndexManifest.stage_write(
-        ivf_assign(
-            embeddings, m.meta["centroids"], id_col=id_col, vec_col=vec_col
-        ),
-        path,
-        "cell",
-    )
-    IndexManifest.commit_staged(path, "cell", stage)
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k over a persisted ``build_ivf_index`` table: the probed
-    cells are computed driver-side over the manifest's pinned
-    centroids (the ones the data was assigned with), and their files
-    come from ONE manifest read — no partition-tree listing. Returns
-    the same rows as ``ivf_topk`` over the same corpus and centroids
-    (test-proven)."""
-    m = _checked_manifest(
-        path,
-        "cell",
-        ["centroids"],
-        missing_msg=(
-            f"ivf_topk_indexed: no manifest at {path} — build with "
-            "build_ivf_index first"
-        ),
-    )
-    probe = _probe_cells(query, m.meta["centroids"], nprobe)
-    files = m.files_for([int(p) for p in probe])
-    if not files:
-        return _empty_probe_result(spark, m, id_col)
-    pruned = spark.read.parquet(*files)
-    return (
-        pruned.select(
-            F.col(id_col),
-            F.round(cosine_col(F.col(vec_col), query), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def _band_emb_meta(embeddings: DataFrame, m: dict) -> DataFrame:
     return emb_banded(
         embeddings,
@@ -1037,7 +775,7 @@ def _band_emb_meta(embeddings: DataFrame, m: dict) -> DataFrame:
 
 _EMB_LSH = _IndexFamily(
     kind="emb_lsh_banded",
-    desc="banded embedding-LSH",
+    desc="a banded embedding-LSH",
     label="embedding LSH",
     build_fn="build_emb_lsh_index",
     meta_keys=("dim", "n_bands", "bits_per_band", "id_col", "vec_col", "n_subparts"),
@@ -1330,18 +1068,38 @@ def pq_distance_col(
         )
     qn = math.sqrt(sum(x * x for x in query)) or 1.0
     q = [x / qn for x in query]
-    flat: list[float] = []
-    for j in range(mlen):
-        sub = q[j * dsub : (j + 1) * dsub]
-        for c in codebooks[j]:
-            flat.append(sum((a - b) ** 2 for a, b in zip(sub, c)))
-    table = F.array(*[F.lit(float(x)) for x in flat])
+    return _adc_dist(code_col, _adc_table(codebooks, q), mlen, ksub)
+
+
+def _adc_table(codebooks: list[list[list[float]]], q: list[float]):
+    """The flattened ``m x ksub`` table of squared L2 between ``q``'s
+    subvectors and every center, as one literal array."""
+    dsub = len(codebooks[0][0])
+    flat = [
+        sum((a - b) ** 2 for a, b in zip(q[j * dsub : (j + 1) * dsub], c))
+        for j, book in enumerate(codebooks)
+        for c in book
+    ]
+    return F.array(*[F.lit(float(x)) for x in flat])
+
+
+def _adc_dist(code_col, table, mlen: int, ksub: int):
+    """Per-row ADC distance: an m-term ``zip_with`` lookup into
+    ``table`` + ``aggregate`` sum, in subspace order."""
     terms = F.zip_with(
         code_col,
         F.sequence(F.lit(0), F.lit(mlen - 1)),
         lambda c, j: F.element_at(table, (j * ksub + c.cast("int") + 1)),
     )
     return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _pq_ranked(codes: DataFrame, dist, k: int, id_col: str) -> DataFrame:
+    return (
+        codes.select(F.col(id_col), dist.alias("pq_dist"))
+        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def pq_topk(
@@ -1355,113 +1113,9 @@ def pq_topk(
     table: ascending distance (equivalent to descending cosine for
     the unit-normalized corpus), ties by id, TakeOrderedAndProject —
     the ``cosine_topk`` shape at ~1/32nd the bytes scanned."""
-    return (
-        codes.select(
-            id_col,
-            pq_distance_col(F.col("code"), codebooks, query).alias("pq_dist"),
-        )
-        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return _pq_ranked(
+        codes, pq_distance_col(F.col("code"), codebooks, query), k, id_col
     )
-
-
-def build_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    codebooks: list[list[list[float]]],
-    n_shards: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the PQ codes as a shard-partitioned parquet table
-    under an ``IndexManifest`` with the codebooks pinned in the
-    manifest meta — the ``build_ivf_index`` contract: an append can
-    never encode with different codebooks than the build, and a probe
-    resolves every shard file from ONE manifest read. Shards exist
-    for append/manifest mechanics and write parallelism, not pruning:
-    a PQ probe scans ALL codes by design (that is what the 25-100x
-    compression buys)."""
-    IndexManifest.build(
-        pq_encode(embeddings, codebooks, id_col, vec_col).withColumn(
-            "shard",
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)).cast(
-                "int"
-            ),
-        ),
-        path,
-        "shard",
-        meta={
-            "codebooks": [
-                [[float(x) for x in c] for c in book] for book in codebooks
-            ],
-            "n_shards": int(n_shards),
-        },
-    )
-
-
-def append_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental PQ maintenance: encode only the NEW vectors with
-    the manifest's pinned codebooks, append into the existing shard
-    partitions, publish a new manifest version atomically. Codebooks
-    are distribution statistics — after heavy corpus drift, retrain
-    and rebuild (the index is derived data)."""
-    m = _checked_manifest(
-        path,
-        "shard",
-        ["codebooks", "n_shards"],
-        missing_msg=(
-            f"append_pq_index: no codebook-bearing manifest at {path} — "
-            "build with build_pq_index first"
-        ),
-    )
-    stage, _ = IndexManifest.stage_write(
-        pq_encode(embeddings, m.meta["codebooks"], id_col, vec_col).withColumn(
-            "shard",
-            F.pmod(
-                F.xxhash64(F.col(id_col).cast("string")),
-                F.lit(int(m.meta["n_shards"])),
-            ).cast("int"),
-        ),
-        path,
-        "shard",
-    )
-    IndexManifest.commit_staged(path, "shard", stage)
-
-
-def pq_topk_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """PQ top-k over a persisted ``build_pq_index`` table: codebooks
-    AND the full shard file list come from one manifest read (no
-    partition-tree listing), then the probe is the same
-    TakeOrderedAndProject over the code column as ``pq_topk``."""
-    m = _checked_manifest(
-        path,
-        "shard",
-        ["codebooks", "n_shards"],
-        missing_msg=f"pq_topk_indexed: no manifest at {path}",
-    )
-    if len(query) != len(m.meta["codebooks"]) * len(m.meta["codebooks"][0][0]):
-        raise ValueError(
-            f"pq_topk_indexed: query dim {len(query)} does not match the "
-            "index codebook geometry — probing would rank garbage"
-        )
-    files = m.files_for(m.partitions.keys())
-    if not files:
-        return _empty_probe_result(spark, m, id_col).select(
-            id_col, F.lit(0.0).alias("pq_dist")
-        ).limit(0)
-    codes = spark.read.parquet(*files)
-    return pq_topk(codes, m.meta["codebooks"], query, k, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1496,6 +1150,292 @@ def _residual_col(vec_col, cell_col, centroids: list[list[float]]):
     return F.zip_with(_normalized_vec(vec_col), cent, lambda x, y: x - y)
 
 
+# ---------------------------------------------------------------------------
+# Persisted top-k indexes (module docstring): one _TopkFamily per
+# family over one build / append / probe core.
+# ---------------------------------------------------------------------------
+
+
+def _cosine_score(rows, query, meta, parts, k, id_col, vec_col) -> DataFrame:
+    return cosine_topk(rows, query, k, id_col, vec_col)
+
+
+@dataclass(frozen=True)
+class _TopkFamily:
+    """What one persisted top-k family gives the shared core: its
+    partition key and ``kind``, the meta keys it pins, the names its
+    errors use, and three functions of the pinned meta — ``assign``
+    (rows in index layout), ``parts`` (the partition values a query
+    probes) and ``score`` (the top-k over the probed rows, in
+    ``score_col``)."""
+
+    kind: str
+    key: str
+    desc: str  # "index at ... is not <desc> index"
+    build_fn: str
+    meta_keys: tuple[str, ...]
+    assign: Callable[[DataFrame, dict, str, str], DataFrame]
+    parts: Callable[..., list[int]]
+    score: Callable[..., DataFrame] = _cosine_score
+    score_col: str = "cosine"
+    label: str = ""  # "<fn>: no <label>manifest at ..."
+
+
+def _checked_topk(fam: _TopkFamily, path: str, fn: str):
+    missing = f"{fn}: no {fam.label}manifest at {path} — run {fam.build_fn} first"
+    return checked_manifest(path, fam.key, fam.kind, fam.meta_keys, fam.desc, missing)
+
+
+def _build_topk(
+    fam: _TopkFamily, df: DataFrame, path: str, meta: dict, id_col: str, vec_col: str
+) -> None:
+    meta = {"kind": fam.kind, **meta}
+    IndexManifest.build(fam.assign(df, meta, id_col, vec_col), path, fam.key, meta)
+
+
+def _append_topk(
+    fam: _TopkFamily, fn: str, df: DataFrame, path: str, id_col: str, vec_col: str
+) -> None:
+    m = _checked_topk(fam, path, fn)
+    rows = fam.assign(df, m.meta, id_col, vec_col)
+    stage, _ = IndexManifest.stage_write(rows, path, fam.key)
+    IndexManifest.commit_staged(path, fam.key, stage)
+
+
+def _probe_topk(
+    spark, fam: _TopkFamily, fn: str, path: str, query: list[float], k: int,
+    id_col: str, vec_col: str = "embedding", **opts,
+) -> DataFrame:
+    m = _checked_topk(fam, path, fn)
+    if len(query) != int(m.meta["dim"]):
+        # another dimension builds other planes, or scores against
+        # centroids and codebooks the query does not fit
+        raise ValueError(
+            f"{fn}: query dim {len(query)} != index dim {m.meta['dim']} at "
+            f"{path} — probing another geometry would rank garbage"
+        )
+    parts = fam.parts(query, m.meta, **opts)
+    files = m.files_for(parts)
+    if not files:
+        # no probed partition holds a row; the id type comes from the
+        # index's own footer, so the result unions with non-empty ones
+        data = [str(m.root / fs[0]) for fs in m.partitions.values() if fs]
+        ids = T.LongType()  # an index with no data at all
+        if data:
+            ids = spark.read.parquet(data[0]).schema[id_col].dataType
+        schema = f"`{id_col}` {ids.simpleString()}, `{fam.score_col}` double"
+        return spark.createDataFrame([], schema)
+    rows = spark.read.option("basePath", str(m.root)).parquet(*files)
+    return fam.score(rows, query, m.meta, parts, k, id_col, vec_col)
+
+
+def _pq_rows(df: DataFrame, meta: dict, id_col: str, vec_col: str) -> DataFrame:
+    shard = F.pmod(
+        F.xxhash64(F.col(id_col).cast("string")), F.lit(int(meta["n_shards"]))
+    )
+    return pq_encode(df, meta["codebooks"], id_col, vec_col).withColumn(
+        "shard", shard.cast("int")
+    )
+
+
+def _ivfpq_residuals(
+    df: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str
+) -> DataFrame:
+    return ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col).select(
+        F.col(id_col),
+        F.col("cell"),
+        _residual_col(F.col(vec_col), F.col("cell"), centroids).alias("_res"),
+    )
+
+
+def _ivfpq_rows(df: DataFrame, meta: dict, id_col: str, vec_col: str) -> DataFrame:
+    res = _ivfpq_residuals(df, meta["centroids"], id_col, vec_col)
+    return pq_encode(
+        res, meta["codebooks"], id_col, "_res", normalize=False, carry_cols=("cell",)
+    )
+
+
+def _ivfpq_score(codes, query, meta, cells, k, id_col, vec_col) -> DataFrame:
+    """Asymmetric distance with a PER-CELL lookup table: probed cell
+    ``c``'s table is built from ``q_n - centroid[c]`` against the
+    residual codebooks, all tables enter the plan as one literal map
+    keyed by cell, and each row looks up its own cell's table."""
+    cents, books = meta["centroids"], meta["codebooks"]
+    qn = math.sqrt(sum(x * x for x in query)) or 1.0
+    q = [x / qn for x in query]
+    tables = []
+    for c in cells:
+        qr = [a - b for a, b in zip(q, cents[c])]
+        tables += [F.lit(int(c)), _adc_table(books, qr)]
+    table = F.create_map(*tables)[F.col("cell").cast("int")]
+    dist = _adc_dist(F.col("code"), table, len(books), len(books[0]))
+    return _pq_ranked(codes, dist, k, id_col)
+
+
+_ANN = _TopkFamily(
+    kind="ann_lsh",
+    key="bucket",
+    desc="a 'bucket'",
+    build_fn="build_ann_index",
+    meta_keys=("dim", "bits", "seed"),
+    assign=lambda df, meta, id_col, vec_col: lsh_buckets(
+        df, int(meta["dim"]), int(meta["bits"]), int(meta["seed"]), vec_col
+    ),
+    parts=lambda query, meta, multiprobe_hamming, n_probes: _lsh_probe(
+        query,
+        _hyperplanes(int(meta["dim"]), int(meta["bits"]), int(meta["seed"])),
+        multiprobe_hamming,
+        n_probes,
+    ),
+)
+_IVF = _TopkFamily(
+    kind="ivf",
+    key="cell",
+    desc="a 'cell'",
+    build_fn="build_ivf_index",
+    meta_keys=("dim", "centroids"),
+    assign=lambda df, meta, id_col, vec_col: ivf_assign(
+        df, meta["centroids"], id_col=id_col, vec_col=vec_col
+    ),
+    parts=lambda query, meta, nprobe: _probe_cells(query, meta["centroids"], nprobe),
+)
+_PQ = _TopkFamily(
+    kind="pq",
+    key="shard",
+    desc="a 'shard'",
+    build_fn="build_pq_index",
+    meta_keys=("dim", "codebooks", "n_shards"),
+    assign=_pq_rows,
+    parts=lambda query, meta: list(range(int(meta["n_shards"]))),  # every shard
+    score=lambda codes, query, meta, parts, k, id_col, vec_col: pq_topk(
+        codes, meta["codebooks"], query, k, id_col
+    ),
+    score_col="pq_dist",
+)
+_IVFPQ = _TopkFamily(
+    kind="ivfpq",
+    key="cell",
+    desc="an IVF-PQ",
+    build_fn="build_ivfpq_index",
+    meta_keys=("dim", "centroids", "codebooks"),
+    assign=_ivfpq_rows,
+    parts=_IVF.parts,
+    score=_ivfpq_score,
+    score_col="pq_dist",
+    label="IVF-PQ ",
+)
+
+
+def build_ann_index(
+    embeddings: DataFrame, path: str, dim: int, bits: int = 8, seed: int = 7,
+    vec_col: str = "embedding",
+) -> None:
+    """Persist the LSH buckets as a ``bucket``-partitioned index, one
+    directory per bucket (2^bits dirs), with (dim, bits, seed) pinned:
+    at 100 TB with bits=8 and multiprobe_hamming=1 a probe reads 9/256
+    of the corpus. Rebuild when ``ann_index_needs_reindex`` fires."""
+    meta = {"dim": dim, "bits": bits, "seed": seed}
+    _build_topk(_ANN, embeddings, path, meta, "vec_id", vec_col)
+
+
+def append_ann_index(
+    embeddings: DataFrame, path: str, vec_col: str = "embedding"
+) -> None:
+    """Bucket the new vectors with the pinned planes and append them.
+    Appends grow bucket occupancy while ``bits`` stays fixed; check
+    ``ann_index_needs_reindex`` after large appends."""
+    _append_topk(_ANN, "append_ann_index", embeddings, path, "vec_id", vec_col)
+
+
+def ann_index_needs_reindex(
+    path: str, n_vecs_total: int, target_occupancy: int = 8
+) -> bool:
+    """Re-index trigger for an appended index: the build sized its
+    band bits for the THEN corpus via ``lsh_bits_for``; once the total
+    corpus would size to MORE bits, expected occupancy has drifted
+    >=2x past target and in-bucket probe/pair work grows with n again
+    — rebuild with ``build_ann_index(bits=lsh_bits_for(n_total))``.
+    The caller supplies the total count (it knows its append sizes;
+    counting here would burn a job per check)."""
+    m = _checked_topk(_ANN, path, "ann_index_needs_reindex")
+    return lsh_bits_for(n_vecs_total, target_occupancy) > int(m.meta["bits"])
+
+
+def ann_topk_indexed(
+    spark, path: str, query: list[float], k: int = 10, id_col: str = "vec_id",
+    vec_col: str = "embedding", multiprobe_hamming: int = 1,
+    n_probes: int | None = None,
+) -> DataFrame:
+    """``ann_topk_lsh`` over a ``build_ann_index`` table: the same
+    probed buckets (Hamming ball, or ``n_probes`` of the margin-ranked
+    sequence), planes from the manifest."""
+    return _probe_topk(
+        spark, _ANN, "ann_topk_indexed", path, query, k, id_col, vec_col,
+        multiprobe_hamming=multiprobe_hamming, n_probes=n_probes,
+    )
+
+
+def build_ivf_index(
+    embeddings: DataFrame, path: str, centroids: list[list[float]],
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> None:
+    """Persist the IVF assignment as a ``cell``-partitioned index with
+    the centroids pinned (tiny: C x dim floats). Rebuild with fresh
+    centroids when the corpus drifts: an IVF re-cluster is a full
+    rebuild by definition."""
+    cents = [[float(x) for x in c] for c in centroids]
+    meta = {"dim": len(cents[0]), "centroids": cents}
+    _build_topk(_IVF, embeddings, path, meta, id_col, vec_col)
+
+
+def append_ivf_index(
+    embeddings: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> None:
+    """Assign the new vectors to the pinned centroids and append them."""
+    _append_topk(_IVF, "append_ivf_index", embeddings, path, id_col, vec_col)
+
+
+def ivf_topk_indexed(
+    spark, path: str, query: list[float], k: int = 10, nprobe: int = 2,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """``ivf_topk`` over a ``build_ivf_index`` table: the ``nprobe``
+    cells nearest the query under the pinned centroids."""
+    return _probe_topk(
+        spark, _IVF, "ivf_topk_indexed", path, query, k, id_col, vec_col,
+        nprobe=nprobe,
+    )
+
+
+def build_pq_index(
+    embeddings: DataFrame, path: str, codebooks: list[list[list[float]]],
+    n_shards: int = 16, id_col: str = "vec_id", vec_col: str = "embedding",
+) -> None:
+    """Persist the PQ codes as a ``shard``-partitioned index with the
+    codebooks pinned. Shards exist for append mechanics and write
+    parallelism, not pruning: a PQ probe scans ALL codes by design
+    (that is what the 25-100x compression buys). Retrain and rebuild
+    after heavy corpus drift."""
+    books = [[[float(x) for x in c] for c in book] for book in codebooks]
+    dim = len(books) * len(books[0][0])
+    meta = {"dim": dim, "codebooks": books, "n_shards": int(n_shards)}
+    _build_topk(_PQ, embeddings, path, meta, id_col, vec_col)
+
+
+def append_pq_index(
+    embeddings: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> None:
+    """Encode the new vectors with the pinned codebooks and append them."""
+    _append_topk(_PQ, "append_pq_index", embeddings, path, id_col, vec_col)
+
+
+def pq_topk_indexed(
+    spark, path: str, query: list[float], k: int = 10, id_col: str = "vec_id"
+) -> DataFrame:
+    """``pq_topk`` over every shard of a ``build_pq_index`` table."""
+    return _probe_topk(spark, _PQ, "pq_topk_indexed", path, query, k, id_col)
+
+
 def build_ivfpq_index(
     embeddings: DataFrame,
     path: str,
@@ -1511,170 +1451,42 @@ def build_ivfpq_index(
     vec_col: str = "embedding",
 ) -> None:
     """Build the IVF-PQ index: assign each vector to its nearest
-    centroid (``ivf_assign`` — same contract as IVF-flat), train PQ
-    codebooks on the RESIDUALS ``v_n - c[cell]`` (``pq_train`` with
-    ``normalize=False`` — residuals are already in metric space; the
-    probe's distance tables assume ``v_n = c + r`` exactly), encode
-    every residual distributedly (Arrow ``pq_encode``, the ``cell``
-    carried through so nothing re-joins), and persist
-    ``(id, code)`` partitioned by ``cell`` with centroids + codebooks
-    + geometry pinned in the manifest — an append can never assign or
-    encode differently than the build, and a probe resolves its
-    nprobe cells' files from ONE manifest read.
-
-    One file per cell dir, like every ``IndexManifest.build``: a
-    probe pays one file-open per file in each probed cell."""
-    assigned = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col)
-    res = assigned.select(
-        F.col(id_col),
-        F.col("cell"),
-        _residual_col(F.col(vec_col), F.col("cell"), centroids).alias("_res"),
-    )
+    centroid (``ivf_assign``, as IVF-flat), train PQ codebooks on the
+    RESIDUALS ``v_n - c[cell]`` (``pq_train`` with ``normalize=False``
+    — residuals are already in metric space; the probe's distance
+    tables assume ``v_n = c + r`` exactly), then persist the residual
+    codes ``(id, code)`` partitioned by ``cell`` with centroids and
+    codebooks pinned."""
     books = pq_train(
-        res,
-        dim,
-        m=m,
-        ksub=ksub,
-        n_iters=n_iters,
-        seed=seed,
-        train_sample=train_sample,
-        n_vecs=n_vecs,
-        id_col=id_col,
-        vec_col="_res",
-        normalize=False,
+        _ivfpq_residuals(embeddings, centroids, id_col, vec_col), dim,
+        m=m, ksub=ksub, n_iters=n_iters, seed=seed, train_sample=train_sample,
+        n_vecs=n_vecs, id_col=id_col, vec_col="_res", normalize=False,
     )
-    IndexManifest.build(
-        pq_encode(res, books, id_col, "_res", normalize=False, carry_cols=("cell",)),
-        path,
-        "cell",
-        meta={
-            "kind": "ivfpq",
-            "dim": dim,
-            "m": m,
-            "ksub": ksub,
-            "centroids": [[float(x) for x in c] for c in centroids],
-            "codebooks": books,
-        },
-    )
-
-
-def _checked_ivfpq_manifest(path: str):
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(
-            f"no IVF-PQ manifest at {path} — build with build_ivfpq_index "
-            "first (probing a bare tree could use different centroids or "
-            "codebooks than the data was encoded with)"
-        )
-    missing = [
-        k
-        for k in ("kind", "dim", "m", "ksub", "centroids", "codebooks")
-        if k not in m.meta
-    ]
-    if m.key != "cell" or missing or m.meta.get("kind") != "ivfpq":
-        raise ValueError(
-            f"index at {path} is not an IVF-PQ index (manifest "
-            f"key={m.key!r}, kind={m.meta.get('kind')!r}, missing {missing})"
-        )
-    return m
+    cents = [[float(x) for x in c] for c in centroids]
+    meta = {"dim": dim, "m": m, "ksub": ksub, "centroids": cents, "codebooks": books}
+    _build_topk(_IVFPQ, embeddings, path, meta, id_col, vec_col)
 
 
 def append_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> None:
-    """Incremental IVF-PQ maintenance: assign + residual-encode only
-    the NEW vectors with the manifest's pinned centroids AND
-    codebooks, append into the existing cell partitions, publish a
-    new manifest version atomically (the ``append_ivf_index`` /
-    ``append_pq_index`` contract in one)."""
-    m = _checked_ivfpq_manifest(path)
-    cents = m.meta["centroids"]
-    assigned = ivf_assign(embeddings, cents, id_col=id_col, vec_col=vec_col)
-    res = assigned.select(
-        F.col(id_col),
-        F.col("cell"),
-        _residual_col(F.col(vec_col), F.col("cell"), cents).alias("_res"),
-    )
-    stage, _ = IndexManifest.stage_write(
-        pq_encode(
-            res, m.meta["codebooks"], id_col, "_res", normalize=False,
-            carry_cols=("cell",),
-        ),
-        path,
-        "cell",
-    )
-    IndexManifest.commit_staged(path, "cell", stage)
+    """Assign and residual-encode the new vectors with the pinned
+    centroids AND codebooks, and append them."""
+    _append_topk(_IVFPQ, "append_ivfpq_index", embeddings, path, id_col, vec_col)
 
 
 def ivfpq_topk(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 2,
+    spark, path: str, query: list[float], k: int = 10, nprobe: int = 2,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k over a persisted IVF-PQ index: the query's
-    ``nprobe`` nearest cells come from the pinned centroids
-    (``_probe_cells`` — identical tie-break to every other IVF probe),
-    their code files from one manifest read, and the ranking is
-    asymmetric distance with a PER-CELL lookup table: for probed cell
-    ``c`` the driver precomputes the ``m x ksub`` squared-L2 table
-    between ``(q_n - centroid[c])``'s subvectors and the residual
-    codebooks, all tables enter the plan as one literal map keyed by
-    cell, and the per-row distance is the same ``zip_with`` lookup +
-    ``aggregate`` fold as ``pq_distance_col`` — pure codegen over
-    ``nprobe`` partitions of smallint codes. Ascending distance
-    (``v_n = c + r`` makes it rank like cosine), ties by id."""
-    m = _checked_ivfpq_manifest(path)
-    if len(query) != int(m.meta["dim"]):
-        raise ValueError(
-            f"ivfpq_topk: query dim {len(query)} != index dim "
-            f"{m.meta['dim']} at {path}"
-        )
-    cents = m.meta["centroids"]
-    books = m.meta["codebooks"]
-    mlen, ksub = int(m.meta["m"]), int(m.meta["ksub"])
-    dsub = len(books[0][0])
-    qn = math.sqrt(sum(x * x for x in query)) or 1.0
-    q = [x / qn for x in query]
-    probe = _probe_cells(query, cents, nprobe)
-
-    files = m.files_for(probe)
-    if not files:
-        return (
-            _empty_probe_result(spark, m, id_col)
-            .select(id_col, F.lit(0.0).alias("pq_dist"))
-            .limit(0)
-        )
-
-    map_args = []
-    for cell in probe:
-        qr = [a - b for a, b in zip(q, cents[cell])]
-        flat = []
-        for j in range(mlen):
-            sub = qr[j * dsub : (j + 1) * dsub]
-            for c in books[j]:
-                flat.append(sum((a - b) ** 2 for a, b in zip(sub, c)))
-        map_args.append(F.lit(int(cell)))
-        map_args.append(F.array(*[F.lit(float(x)) for x in flat]))
-    tables = F.create_map(*map_args)
-
-    codes = spark.read.option("basePath", str(m.root)).parquet(*files)
-    table = tables[F.col("cell").cast("int")]
-    terms = F.zip_with(
-        F.col("code"),
-        F.sequence(F.lit(0), F.lit(mlen - 1)),
-        lambda c, j: F.element_at(table, (j * ksub + c.cast("int") + 1)),
-    )
-    dist = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        codes.select(F.col(id_col), dist.alias("pq_dist"))
-        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    ``nprobe`` nearest cells (``_probe_cells``, the tie-break of every
+    IVF probe), ranked by the per-cell asymmetric distance
+    (``_ivfpq_score``) — pure codegen over ``nprobe`` partitions of
+    smallint codes. Ascending distance (``v_n = c + r`` makes it rank
+    like cosine), ties by id."""
+    return _probe_topk(
+        spark, _IVFPQ, "ivfpq_topk", path, query, k, id_col, nprobe=nprobe
     )
 
 

@@ -155,19 +155,6 @@ def chunk_spans(
     )
 
 
-def doc_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per doc: tokens, chars, lang, quality, fingerprint."""
-    t = F.col(text_col)
-    return documents.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        F.length(t).alias("n_chars_computed"),
-        lang_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fp"),
-    )
-
-
 def wilson_lower_bound(k: Column, n: Column, z: float = 1.96) -> Column:
     """Wilson score interval lower bound for a binomial proportion —
     the small-sample-safe quality rate (a 3/4 domain doesn't outrank
