@@ -5,15 +5,26 @@
 - per-document span-sequence equality end-to-end through the engine
 - politeness: per-(host, epoch) count <= budget, schedule spacing >= min_delay
 - kill-at-epoch-k resume equals the uninterrupted run (snapshot atomicity)
+- the URL-seen filter restores from its committed deltas, and nothing
+  after an epoch's commit runs a Spark job
 """
 
 from __future__ import annotations
 
+import shutil
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from webscrape_neko_jirushi_spark import schemas
-from webscrape_neko_jirushi_spark.crawl.engine import CrawlEngine, MirrorFetcher
+from webscrape_neko_jirushi_spark.crawl.bloom import BloomShards
+from webscrape_neko_jirushi_spark.crawl.engine import (
+    BLOOM_KEYS_PER_SHARD,
+    BLOOM_SHARDS,
+    CrawlEngine,
+    MirrorFetcher,
+)
 from webscrape_neko_jirushi_spark.crawl.oracle import OracleCrawler
 from webscrape_neko_jirushi_spark.crawl.snapshots import SnapshotStore
 from webscrape_neko_jirushi_spark.fixtures import mirror as M
@@ -274,3 +285,118 @@ def test_malformed_urls_crawl_like_oracle(spark, tmp_path):
     docs = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in eng.documents().collect()}
     assert docs == want.documents
     assert len(docs) == 6
+
+
+def _same_bits(got, want) -> bool:
+    return set(got.bits) == set(want.bits) and all(
+        np.array_equal(got.bits[s], want.bits[s]) for s in want.bits
+    )
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(key, None)
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """``fn()`` under Spark job group ``group``; returns (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        _clear_job_group(sc)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _full_build(df):
+    return BloomShards.build(
+        df.select("url_hash"), n_shards=BLOOM_SHARDS, expected_per_shard=BLOOM_KEYS_PER_SHARD
+    )
+
+
+def test_bloom_restored_from_committed_deltas(spark, mirror, engine_done, tmp_path):
+    """A fresh engine restores the filter from the committed bloom
+    deltas alone, bit for bit what a full build over url_seen makes,
+    after 1, 2 and 3 epochs, without a Spark job. Each restore is the
+    store as a kill between the commit and the driver's merge leaves
+    it. An orphan bloom dir from a torn commit is ignored."""
+    eng, stats = engine_done
+    assert len(stats) >= 3
+    # the running engine merged every epoch's delta after its commit
+    assert _same_bits(eng._bloom, _full_build(eng.url_seen()))
+    by_epoch = {v["epoch"]: v["version"] for v in eng.store.versions()}
+    for e in (1, 2, 3):
+        root = tmp_path / f"at{e}"
+        shutil.copytree(eng.store.root, root)
+        (root / "HEAD").write_text(f"v{by_epoch[e]:06d}.json")
+        # torn commit: a delta setting every bit of shard 0, never published
+        orphan = root / "data" / "bloom-999999-deadbeef"
+        spark.createDataFrame(
+            [(0, i, 255, BLOOM_SHARDS, 8, 1) for i in range(4)],
+            "shard int, byte_idx long, byte short, n_shards int, n_bits long, k int",
+        ).write.parquet(str(orphan))
+        fresh = CrawlEngine(spark, SnapshotStore(root, spark), None, None, M.BASE_URL)
+        assert fresh.store.epoch() == e
+        filt, jobs = _jobs_in_group(spark, f"restore_e{e}", fresh._ensure_bloom)
+        assert jobs == 0, e
+        assert _same_bits(filt, _full_build(fresh.url_seen())), e
+
+
+def test_epoch_stats_match_committed_frontier(engine_done):
+    """pending_after and discoveries, observed on the frontier write,
+    equal the committed frontier's size and its rows of that epoch."""
+    eng, stats = engine_done
+    by_epoch = {v["epoch"]: v["version"] for v in eng.store.versions()}
+    for s in stats:
+        frontier = eng.store.read_at("frontier", schemas.FRONTIER, by_epoch[s.epoch])
+        assert s.pending_after == frontier.count(), s
+        assert s.discoveries == frontier.filter(F.col("epoch") == s.epoch).count(), s
+
+
+def test_epoch_tail_runs_no_job(spark, mirror, tmp_path, monkeypatch):
+    """Nothing after an epoch's commit runs a Spark job: the bloom delta
+    is ORed in from its committed dir and the counters were observed on
+    the frontier write. A kill between the commit and that merge loses
+    nothing: a fresh engine restores the same filter."""
+    eng = _make_engine(spark, mirror, tmp_path, fetch_images=False)
+    eng.seed([M.listing_url(1)])
+    commit = eng.store.commit
+
+    def commit_then_tail(*args, **kwargs):
+        version = commit(*args, **kwargs)
+        spark.sparkContext.setJobGroup("tail", "after the epoch commit")
+        return version
+
+    monkeypatch.setattr(eng.store, "commit", commit_then_tail)
+    try:
+        s = eng.run_epoch()
+    finally:
+        _clear_job_group(spark.sparkContext)
+    assert s.selected > 0 and s.discoveries > 0
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup("tail") == []
+    want = _full_build(eng.url_seen())
+    assert _same_bits(eng._bloom, want)
+
+    def killed(self, paths):
+        raise RuntimeError("killed after the commit")
+
+    monkeypatch.setattr(BloomShards, "read_delta", killed)
+    with pytest.raises(RuntimeError, match="killed after the commit"):
+        eng.run_epoch()
+    monkeypatch.undo()
+    assert eng.store.epoch() == 2
+    fresh = _make_engine(spark, mirror, tmp_path)
+    assert _same_bits(fresh._ensure_bloom(), _full_build(fresh.url_seen()))
+
+
+def test_bloom_restore_refuses_a_store_without_deltas(spark, tmp_path):
+    """A store that commits url_seen but no bloom dir raises instead of
+    scanning url_seen."""
+    store = SnapshotStore(tmp_path / "nodelta", spark)
+    store.commit(
+        1, appends={"url_seen": spark.createDataFrame([(7, 7)], schemas.URL_SEEN)}
+    )
+    eng = CrawlEngine(spark, store, None, None, M.BASE_URL)
+    with pytest.raises(ValueError, match="no bloom deltas"):
+        eng._ensure_bloom()

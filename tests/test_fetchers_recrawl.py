@@ -3,11 +3,18 @@ recrawl/TTL path, which leaves the URL-seen bloom filter untouched."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from webscrape_neko_jirushi_spark import schemas
-from webscrape_neko_jirushi_spark.crawl.engine import CrawlEngine, MirrorFetcher
+from webscrape_neko_jirushi_spark.crawl.bloom import BloomShards
+from webscrape_neko_jirushi_spark.crawl.engine import (
+    BLOOM_KEYS_PER_SHARD,
+    BLOOM_SHARDS,
+    CrawlEngine,
+    MirrorFetcher,
+)
 from webscrape_neko_jirushi_spark.crawl.fetchers import HttpFetcher, PandasMirrorFetcher
 from webscrape_neko_jirushi_spark.crawl.recrawl import recrawl_expired
 from webscrape_neko_jirushi_spark.crawl.snapshots import SnapshotStore
@@ -80,8 +87,16 @@ def test_recrawl_keeps_bloom_and_refetches_once(spark, tmp_path):
     """Expiry leaves the engine's bloom filter as it is (no rebuild):
     the exact anti-join behind it re-checks the stale bits, so every
     expired URL is fetched again exactly once and the seen set
-    converges. Also exercises idempotence: a second recrawl call while
-    the re-queue is pending adds nothing."""
+    converges. A fresh engine restores the same filter from the
+    committed deltas, before and after the re-fetch. Also exercises
+    idempotence: a second recrawl call while the re-queue is pending
+    adds nothing."""
+
+    def assert_restores(want: BloomShards) -> None:
+        got = CrawlEngine(spark, eng.store, None, None, M.BASE_URL)._ensure_bloom()
+        assert set(got.bits) == set(want.bits)
+        assert all(np.array_equal(got.bits[s], want.bits[s]) for s in want.bits)
+
     mirror = M.build_mirror(seed=42, n_pages=1, cats_per_page=8, fail_rate=0.0)
     pages = spark.createDataFrame(mirror.rows(), schemas.PAGES)
     budget = spark.createDataFrame(
@@ -105,6 +120,8 @@ def test_recrawl_keeps_bloom_and_refetches_once(spark, tmp_path):
     assert recrawl_expired(eng, ttl_epochs=total_epochs - 1) == 0
     requeued = {r["url_hash"] for r in eng.frontier().collect()}
     assert len(requeued) == n
+    # the expired hashes leave url_seen but stay in the filter
+    assert_restores(filt)
 
     eng.run(max_epochs=20)
     assert eng._bloom is filt  # noqa: SLF001
@@ -115,6 +132,11 @@ def test_recrawl_keeps_bloom_and_refetches_once(spark, tmp_path):
     assert {fetches[h] for h in requeued} == {2}
     assert {r["url_hash"] for r in eng.url_seen().collect()} == seen_before
     assert eng.frontier().count() == 0
+    assert_restores(
+        BloomShards.build(
+            eng.url_seen(), n_shards=BLOOM_SHARDS, expected_per_shard=BLOOM_KEYS_PER_SHARD
+        )
+    )
 
 
 def test_pandas_fetcher_enforces_wall_clock_schedule(spark):

@@ -350,3 +350,20 @@ def test_scalar_matches_duckdb(results, name):
         if not ok:
             bad.append((i, repr(rows[i])[:80], a, b))
     assert not bad, f"{name}: {len(bad)} divergences, first 5: {bad[:5]}"
+
+
+def test_contains_any_empty_patterns(spark):
+    """No patterns match nothing: false for every non-NULL value, NULL
+    for NULL — the three-valued answer of a non-empty list that misses."""
+    df = spark.createDataFrame([(0, "logo.png"), (1, ""), (2, None)], "i int, s string")
+    got = [
+        (r["none"], r["miss"])
+        for r in df.select(
+            "i",
+            ftext._contains_any(F.col("s"), []).alias("none"),
+            ftext._contains_any(F.col("s"), ["zzz"]).alias("miss"),
+        )
+        .orderBy("i")
+        .collect()
+    ]
+    assert got == [(False, False), (False, False), (None, None)]

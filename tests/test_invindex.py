@@ -104,3 +104,8 @@ def test_indexed_probe_prunes_and_matches(spark, docs, tmp_path):
 
     # absent term -> empty result, no error
     assert IX.phrase_match_indexed(spark, path, ["zzz", "qqq"]).count() == 0
+
+
+def test_indexed_probe_refuses_another_index_kind(spark, ann_index):
+    with pytest.raises(ValueError, match="is not an inverted index"):
+        IX.phrase_match_indexed(spark, ann_index, ["quick", "fox"])

@@ -179,3 +179,8 @@ def test_range_layout_prune_and_parity(spark, tmp_path):
     assert sorted(miss.columns) == sorted(out.columns)
     with pytest.raises(ValueError, match="k must be"):
         L.equi_depth_bins(df, "v", 1)
+
+
+def test_range_scan_refuses_another_index_kind(spark, ann_index):
+    with pytest.raises(ValueError, match="is not a range-layout index"):
+        layout.range_scan(spark, ann_index, 0, 10)

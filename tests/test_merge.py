@@ -133,3 +133,11 @@ def test_scd2_lifecycle(spark):
     a = {tuple(r) for r in h1.collect()}
     b = {tuple(r) for r in h2.collect()}
     assert a == b
+
+
+def test_merge_table_readers_refuse_another_index_kind(spark, ann_index):
+    ups = spark.createDataFrame([(1, "x")], "k int, val string")
+    with pytest.raises(ValueError, match="is not a merge-table index"):
+        M.read_merge_table(spark, ann_index)
+    with pytest.raises(ValueError, match="is not a merge-table index"):
+        M.merge_into(spark, ann_index, ups)

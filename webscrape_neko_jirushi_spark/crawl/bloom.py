@@ -17,11 +17,23 @@ membership is a two-stage check:
    positives never drop a URL, so the seen-set stays EXACT (the
    equality gate vs the oracle covers this path).
 
+The filter is committed state. Each epoch's commit appends a ``bloom``
+dir beside ``url_seen``, published by the same manifest swap: the sparse
+delta ``(shard, byte_idx, byte)`` of the non-zero bytes the epoch's
+hashes set (``delta_rows``: one ``mapInPandas``, no shuffle), with the
+geometry ``(n_shards, n_bits, k)`` pinned on every row. The driver ORs
+committed dirs into its shards with pyarrow (``read_delta`` +
+``merge_delta``): after its own commit, and on resume over every
+committed dir, so neither runs a Spark job or scans ``url_seen``.
+
 The filter never deletes. ``recrawl_expired`` removes expired hashes
 from ``url_seen`` only: a hash left in the filter makes the URL a
 positive, and a positive is always re-checked by the exact anti-join, so
 a stale bit costs one re-check and can never drop a URL. The filter
-therefore only grows, by ``build_delta`` + ``merge_delta`` per epoch.
+therefore only grows, by one committed delta per epoch. ``build`` (a
+full distributed build, used by ``operators/bloomjoin``) and
+``build_delta`` (the same into a driver-side delta) remain for callers
+outside the engine's commit.
 """
 
 from __future__ import annotations
@@ -30,6 +42,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,6 +93,15 @@ def _shard_bits(df: DataFrame, n_shards: int, n_bits: int, k: int) -> dict[int, 
     return {r["shard"]: np.frombuffer(r["bits"], dtype=np.uint8) for r in rows}
 
 
+_DELTA_SCHEMA = T.StructType(
+    [
+        T.StructField("shard", T.IntegerType()),
+        T.StructField("byte_idx", T.LongType()),
+        T.StructField("byte", T.ShortType()),
+    ]
+)
+
+
 class BloomShards:
     """n_shards independent bloom bitsets keyed by pmod(url_hash, n_shards)."""
 
@@ -111,6 +133,72 @@ class BloomShards:
         bounded n_shards * n_bits/8 bytes instead of every row."""
         return _shard_bits(df, self.n_shards, self.n_bits, self.k)
 
+    def delta_rows(self, df: DataFrame) -> DataFrame:
+        """The sparse delta of ``df``'s ``url_hash`` with THIS filter's
+        geometry, as rows to commit: ``(shard, byte_idx, byte)`` for
+        every byte the hashes set (the bits of one byte ORed within an
+        Arrow batch; batches may repeat a byte, which the OR on read
+        absorbs), plus the pinned ``n_shards, n_bits, k``. One
+        ``mapInPandas`` over ``df``'s own partitions: no shuffle, and a
+        small epoch writes kilobytes instead of the whole bitset."""
+        n_shards, n_bits, k = self.n_shards, self.n_bits, self.k
+        n_bytes = np.uint64(n_bits // 8)
+
+        def _delta(batches):
+            for pdf in batches:
+                h = pdf["url_hash"].to_numpy()
+                shard = h.astype(np.uint64) % np.uint64(n_shards)
+                pos = _bit_positions(h, n_bits, k)
+                cell = (shard[:, None] * n_bytes + (pos >> np.uint64(3))).ravel()
+                bit = (1 << (pos & np.uint64(7))).astype(np.uint8).ravel()
+                cells, inv = np.unique(cell, return_inverse=True)
+                byte = np.zeros(len(cells), dtype=np.uint8)
+                np.bitwise_or.at(byte, inv, bit)
+                yield pd.DataFrame(
+                    {
+                        "shard": (cells // n_bytes).astype(np.int32),
+                        "byte_idx": (cells % n_bytes).astype(np.int64),
+                        "byte": byte.astype(np.int16),
+                    }
+                )
+
+        return df.select("url_hash").mapInPandas(_delta, schema=_DELTA_SCHEMA).select(
+            "*",
+            F.lit(n_shards).alias("n_shards"),
+            F.lit(n_bits).cast("long").alias("n_bits"),
+            F.lit(k).alias("k"),
+        )
+
+    def read_delta(self, paths: list[str]) -> dict[int, np.ndarray]:
+        """The committed ``delta_rows`` dirs at ``paths``, read with
+        pyarrow on the driver (no Spark job) and folded into packed
+        per-shard bitsets for ``merge_delta``. Raises if a dir pins
+        another geometry: ORed into this layout, its bytes would leave
+        seen URLs' bits unset, and a URL the filter misses skips the
+        exact check."""
+        geometry = {"n_shards": self.n_shards, "n_bits": self.n_bits, "k": self.k}
+        out: dict[int, np.ndarray] = {}
+        for path in paths:
+            t = pq.read_table(path)
+            if not t.num_rows:
+                continue
+            for name, want in geometry.items():
+                got = set(t[name].unique().to_pylist())
+                if got != {want}:
+                    raise ValueError(
+                        f"bloom delta at {path} pins {name}={sorted(got)}, but the "
+                        f"filter has {name}={want}: rebuild the filter or keep "
+                        "its geometry"
+                    )
+            shard = t["shard"].to_numpy()
+            idx = t["byte_idx"].to_numpy()
+            byte = t["byte"].to_numpy().astype(np.uint8)
+            for s in np.unique(shard):
+                arr = out.setdefault(int(s), np.zeros(self.n_bits // 8, dtype=np.uint8))
+                m = shard == s
+                np.bitwise_or.at(arr, idx[m], byte[m])
+        return out
+
     def _snapshot(self) -> "BloomShards":
         """State-only clone for broadcasting (no broadcast handle)."""
         return BloomShards(self.n_shards, self.n_bits, self.k, dict(self.bits))
@@ -119,7 +207,8 @@ class BloomShards:
         return not self.bits
 
     def merge_delta(self, delta: dict[int, np.ndarray]) -> None:
-        """OR a ``build_delta`` result into the held shards."""
+        """OR a ``build_delta`` or ``read_delta`` result into the held
+        shards."""
         self._invalidate_bc()
         for s, arr in delta.items():
             cur = self.bits.get(s)

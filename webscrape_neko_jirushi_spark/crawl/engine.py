@@ -10,7 +10,8 @@ Each epoch is one batch DataFrame pipeline committed atomically:
          bloom-prefiltered exact anti-join vs url_seen,
          anti-join vs pending                                    (U1, J3, J1)
       -> single snapshot commit: documents/url_seen/fetch_log/
-         lineage appends + frontier replace                      (T2)
+         lineage/bloom appends + frontier replace                (T2)
+      -> driver ORs the committed bloom delta in (pyarrow, no job)
 
 Seeds, ID-range probes, stream batches and discoveries all enter the
 frontier through ``_enqueue``, so the frontier holds no seen URL and no
@@ -18,6 +19,15 @@ duplicate ``url_hash``, and the epoch runs no seen check on pending
 rows. ``recrawl_expired`` bypasses ``_enqueue`` but keeps the invariant:
 it drops its URLs from url_seen in the same commit that re-queues them,
 and its rows are distinct and anti-joined against the frontier.
+
+The bloom filter is committed state, not a cache to rebuild: each
+epoch's commit appends the sparse delta its hashes set
+(``BloomShards.delta_rows``), and ``_ensure_bloom`` ORs every committed
+``bloom`` dir it has not merged yet into the driver's shards with
+pyarrow, after the engine's own commit and on resume alike. Neither
+runs a Spark job or scans ``url_seen``. ``EpochStats.pending_after`` and
+``discoveries`` are observed on the frontier write itself
+(``DataFrame.observe``), so nothing after the commit runs a job.
 
 Also covers: S1 (paginated listing scan: ``next_pages``), S5 (outlink
 scan via span children), S7 (API seed source: ``seed``), S11 (state
@@ -42,7 +52,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -60,6 +70,9 @@ from .snapshots import SnapshotStore
 # columns, so the encoding only needs to be locally monotone.
 FANOUT = 4096
 SEEN_SHARDS = 64
+# the URL-seen filter's geometry; every committed bloom delta pins it
+BLOOM_SHARDS = 16
+BLOOM_KEYS_PER_SHARD = 1 << 19
 _COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
@@ -151,11 +164,13 @@ class MirrorFetcher:
 
 @dataclass
 class EpochStats:
-    """One epoch's counters, each read from an aggregate the epoch
-    already runs: ``documents`` is the profile pages fetched with
-    status 200 (``extract_spans`` makes one document per such page),
-    ``discoveries`` the URLs ``_enqueue`` let into the frontier, and
-    ``pending_after`` the committed frontier's size."""
+    """One epoch's counters, each read from work the epoch does anyway:
+    ``selected``, ``fetched_ok``, ``failed`` and ``documents`` (the
+    profile pages fetched with status 200; ``extract_spans`` makes one
+    document per such page) from the pre-commit count aggregate,
+    ``discoveries`` (the URLs ``_enqueue`` let into the frontier) and
+    ``pending_after`` (the committed frontier's size) from metrics
+    observed on the frontier write."""
 
     epoch: int
     selected: int
@@ -198,11 +213,12 @@ class CrawlEngine:
         self._robots_bc = (
             spark.sparkContext.broadcast(robots_map) if robots_map else None
         )
-        # driver-held bloom over url_seen, probed by _enqueue; built
-        # from the committed seen table on resume and extended per
-        # epoch after that. It is never shrunk: recrawl expiry leaves
-        # stale bits, which the exact anti-join behind it re-checks.
+        # driver-held bloom over url_seen, probed by _enqueue: the OR
+        # of the committed bloom dirs merged so far (their paths in
+        # _bloom_dirs). It is never shrunk: recrawl expiry leaves stale
+        # bits, which the exact anti-join behind it re-checks.
         self._bloom: BloomShards | None = None
+        self._bloom_dirs: set[str] = set()
 
     def _robots_filter(self, df: DataFrame) -> DataFrame:
         """Drop robots-disallowed rows (never fetched, never re-queued:
@@ -329,18 +345,29 @@ class CrawlEngine:
         return new, cached
 
     def _ensure_bloom(self) -> BloomShards:
-        """The engine's one URL-seen filter, made on first use: a
-        distributed per-shard build over ``url_seen`` on resume, or an
-        empty filter for a store whose manifest holds no ``url_seen``
-        dir (a fresh crawl: ``seed`` commits only the frontier), which
-        spares a build over an empty table."""
+        """The engine's one URL-seen filter, brought up to HEAD: every
+        committed ``bloom`` dir not merged yet is ORed in with pyarrow
+        (``BloomShards.read_delta``), so a resumed engine restores the
+        filter, and a running one adds its epoch's delta after the
+        commit, without a Spark job or a ``url_seen`` scan. A fresh
+        crawl starts empty (``seed`` commits only the frontier); a
+        store that lists ``url_seen`` but no ``bloom`` dir raises, as
+        does a delta of another geometry, instead of scanning the
+        seen table."""
         if self._bloom is None:
-            if self.store.has_data("url_seen"):
-                self._bloom = BloomShards.build(
-                    self.url_seen(), n_shards=16, expected_per_shard=1 << 19
+            if self.store.has_data("url_seen") and not self.store.has_data("bloom"):
+                raise ValueError(
+                    f"store at {self.store.root} commits url_seen but no bloom "
+                    "deltas: it was written without the committed filter; "
+                    "re-crawl into a fresh store"
                 )
-            else:
-                self._bloom = BloomShards.empty(n_shards=16, expected_per_shard=1 << 19)
+            self._bloom = BloomShards.empty(
+                n_shards=BLOOM_SHARDS, expected_per_shard=BLOOM_KEYS_PER_SHARD
+            )
+        new = [p for p in self.store.paths("bloom") if p not in self._bloom_dirs]
+        if new:
+            self._bloom.merge_delta(self._bloom.read_delta(new))
+            self._bloom_dirs.update(new)
         return self._bloom
 
     # -- one epoch ------------------------------------------------------------
@@ -455,12 +482,20 @@ class CrawlEngine:
             epoch,
             annotated,
         )
-        # _disc tells discoveries from deferred rows for the stats
-        # aggregate; the commit drops it
-        new_frontier = _persist_coalesced(
+        # the frontier write is its only reader, so it is not cached;
+        # its size and discovery count are observed on that write
+        # (_disc tells discoveries from deferred rows; dropped after)
+        observed = Observation()
+        new_frontier = (
             deferred.select([f.name for f in schemas.FRONTIER.fields])
             .withColumn("_disc", F.lit(False))
             .unionByName(discoveries.withColumn("_disc", F.lit(True)))
+            .observe(
+                observed,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("_disc").cast("long")).alias("disc"),
+            )
+            .drop("_disc")
         )
 
         # commit ----------------------------------------------------------
@@ -505,6 +540,8 @@ class CrawlEngine:
             "fetch_log": fetch_log_append,
             "documents": docs,
             "lineage": lineage_append,
+            # the filter delta commits with the hashes it covers
+            "bloom": self._ensure_bloom().delta_rows(fetched),
         }
         if self.fetch_images:
             # S8: downloaded media as binary rows in the same atomic
@@ -528,26 +565,16 @@ class CrawlEngine:
                 F.to_binary(F.md5(F.col("url")), F.lit("hex")).alias("content"),
                 F.lit(epoch).alias("epoch"),
             )
-        self.store.commit(
-            epoch,
-            appends=appends,
-            replaces={"frontier": new_frontier.drop("_disc")},
-        )
-        # post-commit bookkeeping: one aggregate over the cached
-        # frontier + the distributed filter delta: executors fold the
-        # epoch's hashes into packed per-shard state and only those
-        # bounded bytes reach the driver (never the row stream — at
-        # 10^8 rows/epoch a toPandas() here would be the driver
-        # bottleneck).
-        pending = new_frontier.agg(
-            F.count("*").alias("n"), F.sum(F.col("_disc").cast("long")).alias("disc")
-        ).collect()[0]
-        self._bloom.merge_delta(self._bloom.build_delta(fetched.select("url_hash")))
+        self.store.commit(epoch, appends=appends, replaces={"frontier": new_frontier})
+        # the tail runs no Spark job: the delta just committed is ORed
+        # in from its dir, and the frontier counters were observed on
+        # the frontier write
+        self._ensure_bloom()
+        pending = observed.get
         fetched.unpersist()
         docs_with_meta.unpersist()
         annotated.unpersist()
         disc_cached.unpersist()
-        new_frontier.unpersist()
         return EpochStats(
             epoch=epoch,
             selected=n_selected,
@@ -555,7 +582,7 @@ class CrawlEngine:
             failed=n_selected - n_ok,
             documents=int(counts["docs"] or 0),
             discoveries=int(pending["disc"] or 0),
-            pending_after=pending["n"],
+            pending_after=int(pending["n"]),
         )
 
     def run(

@@ -74,14 +74,17 @@ class SnapshotStore:
         manifest, without a Spark job."""
         return bool(self._dirs(table))
 
+    def paths(self, table: str) -> list[str]:
+        """The data dirs HEAD lists for ``table``, oldest first: read
+        from the manifest, without a Spark job."""
+        return [str(self.root / "data" / d) for d in self._dirs(table)]
+
     def read(self, table: str, schema: T.StructType) -> DataFrame:
         """Committed contents of ``table`` (empty DF if never written)."""
-        dirs = self._dirs(table)
-        if not dirs:
+        paths = self.paths(table)
+        if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(
-            *[str(self.root / "data" / d) for d in dirs]
-        )
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # -- write side ----------------------------------------------------------
     def commit(

@@ -213,7 +213,7 @@ def build_range_layout(
         binned,
         path,
         "_bin",
-        meta={"col": col, "k": k, "sub_bits": sub_bits, "splits": split_vals},
+        meta={"kind": "range", "col": col, "k": k, "sub_bits": sub_bits, "splits": split_vals},
     )
 
 
@@ -223,11 +223,12 @@ def range_scan(spark, path, lo: int, hi: int) -> DataFrame:
     X9 probe discipline), then the exact predicate re-filters (bin
     membership is a superset: split estimates are bucket LOWER
     bounds)."""
-    from .index_store import IndexManifest
+    from .index_store import checked_manifest
 
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(f"range_scan: no manifest at {path}")
+    m = checked_manifest(
+        path, "_bin", "range", ("col", "splits"), "a range-layout",
+        f"range_scan: no manifest at {path}",
+    )
     splits = list(m.meta["splits"])
     col = m.meta["col"]
 

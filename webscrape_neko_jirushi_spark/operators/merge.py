@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from .index_store import IndexManifest
+from .index_store import IndexManifest, checked_manifest
 
 BUCKET_COL = "mb"
 
@@ -104,7 +104,13 @@ def build_merge_table(
         _with_bucket(df, key, n_buckets),
         path,
         BUCKET_COL,
-        meta={"key": key, "n_buckets": n_buckets, "hash": "portable60/mrg"},
+        meta={"kind": "merge", "key": key, "n_buckets": n_buckets, "hash": "portable60/mrg"},
+    )
+
+
+def _checked_merge_table(path: str | Path, missing_msg: str) -> IndexManifest:
+    return checked_manifest(
+        path, BUCKET_COL, "merge", ("key", "n_buckets"), "a merge-table", missing_msg
     )
 
 
@@ -114,9 +120,7 @@ def read_merge_table(
     """Committed rows; restricted to bucket ``values`` when given —
     resolves files from ONE manifest read (O(probed buckets) metadata,
     the property `merge_into` relies on)."""
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(f"read_merge_table: no manifest at {path}")
+    m = _checked_merge_table(path, f"read_merge_table: no manifest at {path}")
     files = m.files_for(
         values if values is not None else sorted(m.partitions, key=int)
     )
@@ -150,9 +154,7 @@ def merge_into(
 
     Returns ``{"version", "touched", "total_buckets", "rows_written"}``.
     """
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(f"merge_into: no manifest at {path}")
+    m = _checked_merge_table(path, f"merge_into: no manifest at {path}")
     key = m.meta["key"]
     n_buckets = int(m.meta["n_buckets"])
 

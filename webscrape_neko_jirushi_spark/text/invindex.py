@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from ..operators.index_store import IndexManifest
+from ..operators.index_store import IndexManifest, checked_manifest
 
 TERM_BUCKET_COL = "tb"
 
@@ -146,7 +146,7 @@ def build_inverted_index(
         post,
         path,
         TERM_BUCKET_COL,
-        meta={"n_buckets": n_buckets, "hash": "portable60/inv"},
+        meta={"kind": "invindex", "n_buckets": n_buckets, "hash": "portable60/inv"},
     )
 
 
@@ -164,9 +164,10 @@ def phrase_match_indexed(
     terms' buckets from one manifest read — O(phrase terms) metadata
     regardless of index size (driver-side md5 mirrors the bucket rule
     bit-exactly; pytest pins it against the Spark column)."""
-    m = IndexManifest.load(path)
-    if m is None:
-        raise ValueError(f"phrase_match_indexed: no manifest at {path}")
+    m = checked_manifest(
+        path, TERM_BUCKET_COL, "invindex", ("n_buckets",), "an inverted",
+        f"phrase_match_indexed: no manifest at {path}",
+    )
     n_buckets = int(m.meta["n_buckets"])
     terms = [t.lower() for t in phrase if t.strip()]
     buckets = sorted({_bucket_of(t, n_buckets) for t in terms})
