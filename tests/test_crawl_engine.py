@@ -326,15 +326,17 @@ def test_bloom_restored_from_committed_deltas(spark, mirror, engine_done, tmp_pa
     # the running engine merged every epoch's delta after its commit
     assert _same_bits(eng._bloom, _full_build(eng.url_seen()))
     by_epoch = {v["epoch"]: v["version"] for v in eng.store.versions()}
+    geo = BloomShards.empty(BLOOM_SHARDS, BLOOM_KEYS_PER_SHARD)
     for e in (1, 2, 3):
         root = tmp_path / f"at{e}"
         shutil.copytree(eng.store.root, root)
         (root / "HEAD").write_text(f"v{by_epoch[e]:06d}.json")
-        # torn commit: a delta setting every bit of shard 0, never published
+        # torn commit: a delta of the engine's geometry setting every
+        # bit of shard 0, never published
         orphan = root / "data" / "bloom-999999-deadbeef"
         spark.createDataFrame(
-            [(0, i, 255, BLOOM_SHARDS, 8, 1) for i in range(4)],
-            "shard int, byte_idx long, byte short, n_shards int, n_bits long, k int",
+            [(0, b"\xff" * (geo.n_bits // 8), BLOOM_SHARDS, geo.n_bits, geo.k)],
+            "shard int, bits binary, n_shards int, n_bits long, k int",
         ).write.parquet(str(orphan))
         fresh = CrawlEngine(spark, SnapshotStore(root, spark), None, None, M.BASE_URL)
         assert fresh.store.epoch() == e
@@ -382,8 +384,11 @@ def test_epoch_tail_runs_no_job(spark, mirror, tmp_path, monkeypatch):
         raise RuntimeError("killed after the commit")
 
     monkeypatch.setattr(BloomShards, "read_delta", killed)
-    with pytest.raises(RuntimeError, match="killed after the commit"):
-        eng.run_epoch()
+    try:
+        with pytest.raises(RuntimeError, match="killed after the commit"):
+            eng.run_epoch()
+    finally:
+        _clear_job_group(spark.sparkContext)
     monkeypatch.undo()
     assert eng.store.epoch() == 2
     fresh = _make_engine(spark, mirror, tmp_path)

@@ -18,11 +18,12 @@ membership is a two-stage check:
    equality gate vs the oracle covers this path).
 
 The filter is committed state. Each epoch's commit appends a ``bloom``
-dir beside ``url_seen``, published by the same manifest swap: the sparse
-delta ``(shard, byte_idx, byte)`` of the non-zero bytes the epoch's
-hashes set (``delta_rows``: one ``mapInPandas``, no shuffle), with the
-geometry ``(n_shards, n_bits, k)`` pinned on every row. The driver ORs
-committed dirs into its shards with pyarrow (``read_delta`` +
+dir beside ``url_seen``, published by the same manifest swap: the
+packed bitsets of the shards the epoch's hashes fall in (``delta_rows``:
+``build``'s per-shard ``applyInPandas``, written instead of collected),
+with the geometry ``(n_shards, n_bits, k)`` pinned on every row. A delta
+is at most the whole filter's size whatever the epoch size. The driver
+ORs committed dirs into its shards with pyarrow (``read_delta`` +
 ``merge_delta``): after its own commit, and on resume over every
 committed dir, so neither runs a Spark job or scans ``url_seen``.
 
@@ -31,9 +32,9 @@ from ``url_seen`` only: a hash left in the filter makes the URL a
 positive, and a positive is always re-checked by the exact anti-join, so
 a stale bit costs one re-check and can never drop a URL. The filter
 therefore only grows, by one committed delta per epoch. ``build`` (a
-full distributed build, used by ``operators/bloomjoin``) and
-``build_delta`` (the same into a driver-side delta) remain for callers
-outside the engine's commit.
+full distributed build) stays for ``operators/bloomjoin``. ``build_delta``
+(the same into a driver-side delta) has no caller in the package; it
+stays only while the benchmark's crawl workload wraps it by name.
 """
 
 from __future__ import annotations
@@ -67,11 +68,10 @@ _SHARD_BITS_SCHEMA = T.StructType(
 )
 
 
-def _shard_bits(df: DataFrame, n_shards: int, n_bits: int, k: int) -> dict[int, np.ndarray]:
-    """Distributed per-shard bitset build: one packed bitset per
-    pmod(hash, n_shards) group via applyInPandas; only the packed bits
-    (n_bits/8 bytes per shard, CONSTANT regardless of row count) travel
-    to the driver."""
+def _shard_bits(df: DataFrame, n_shards: int, n_bits: int, k: int) -> DataFrame:
+    """Distributed per-shard bitset build: one ``(shard, bits)`` row per
+    pmod(hash, n_shards) group via applyInPandas, ``bits`` the packed
+    bitset (n_bits/8 bytes, CONSTANT regardless of row count)."""
 
     def _build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros(n_bits // 8, dtype=np.uint8)
@@ -81,25 +81,19 @@ def _shard_bits(df: DataFrame, n_shards: int, n_bits: int, k: int) -> dict[int, 
             np.bitwise_or.at(arr, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
         return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "bits": [arr.tobytes()]})
 
-    rows = (
+    return (
         df.select(
             "url_hash",
             F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard"),
         )
         .groupBy("shard")
         .applyInPandas(_build_shard, schema=_SHARD_BITS_SCHEMA)
-        .collect()
     )
-    return {r["shard"]: np.frombuffer(r["bits"], dtype=np.uint8) for r in rows}
 
 
-_DELTA_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("byte_idx", T.LongType()),
-        T.StructField("byte", T.ShortType()),
-    ]
-)
+def _collect_bits(rows: DataFrame) -> dict[int, np.ndarray]:
+    """A ``_shard_bits`` frame on the driver: only the packed bits travel."""
+    return {r["shard"]: np.frombuffer(r["bits"], dtype=np.uint8) for r in rows.collect()}
 
 
 class BloomShards:
@@ -123,7 +117,7 @@ class BloomShards:
         """Distributed build: one bitset per shard via applyInPandas
         (UDAF build phase), collected packed (n_bits/8 bytes each)."""
         filt = cls.empty(n_shards, expected_per_shard, fpr)
-        filt.bits = _shard_bits(seen, n_shards, filt.n_bits, filt.k)
+        filt.bits = _collect_bits(_shard_bits(seen, n_shards, filt.n_bits, filt.k))
         return filt
 
     def build_delta(self, df: DataFrame) -> dict[int, np.ndarray]:
@@ -131,49 +125,28 @@ class BloomShards:
         epoch-append path. The executors fold an arbitrarily large
         hash delta into n_shards packed bitsets; the driver receives a
         bounded n_shards * n_bits/8 bytes instead of every row."""
-        return _shard_bits(df, self.n_shards, self.n_bits, self.k)
+        return _collect_bits(_shard_bits(df, self.n_shards, self.n_bits, self.k))
 
     def delta_rows(self, df: DataFrame) -> DataFrame:
-        """The sparse delta of ``df``'s ``url_hash`` with THIS filter's
-        geometry, as rows to commit: ``(shard, byte_idx, byte)`` for
-        every byte the hashes set (the bits of one byte ORed within an
-        Arrow batch; batches may repeat a byte, which the OR on read
-        absorbs), plus the pinned ``n_shards, n_bits, k``. One
-        ``mapInPandas`` over ``df``'s own partitions: no shuffle, and a
-        small epoch writes kilobytes instead of the whole bitset."""
-        n_shards, n_bits, k = self.n_shards, self.n_bits, self.k
-        n_bytes = np.uint64(n_bits // 8)
-
-        def _delta(batches):
-            for pdf in batches:
-                h = pdf["url_hash"].to_numpy()
-                shard = h.astype(np.uint64) % np.uint64(n_shards)
-                pos = _bit_positions(h, n_bits, k)
-                cell = (shard[:, None] * n_bytes + (pos >> np.uint64(3))).ravel()
-                bit = (1 << (pos & np.uint64(7))).astype(np.uint8).ravel()
-                cells, inv = np.unique(cell, return_inverse=True)
-                byte = np.zeros(len(cells), dtype=np.uint8)
-                np.bitwise_or.at(byte, inv, bit)
-                yield pd.DataFrame(
-                    {
-                        "shard": (cells // n_bytes).astype(np.int32),
-                        "byte_idx": (cells % n_bytes).astype(np.int64),
-                        "byte": byte.astype(np.int16),
-                    }
-                )
-
-        return df.select("url_hash").mapInPandas(_delta, schema=_DELTA_SCHEMA).select(
+        """The delta of ``df``'s ``url_hash`` with THIS filter's
+        geometry, as rows to commit: the ``(shard, bits)`` packed
+        bitsets of the shards the hashes fall in (``build``'s own
+        per-shard build, not collected), plus the pinned ``n_shards,
+        n_bits, k``. A delta is at most ``n_shards * n_bits / 8`` bytes
+        whatever the epoch size; a small epoch's mostly-zero bitsets
+        compress to a fraction of that."""
+        return _shard_bits(df, self.n_shards, self.n_bits, self.k).select(
             "*",
-            F.lit(n_shards).alias("n_shards"),
-            F.lit(n_bits).cast("long").alias("n_bits"),
-            F.lit(k).alias("k"),
+            F.lit(self.n_shards).alias("n_shards"),
+            F.lit(self.n_bits).cast("long").alias("n_bits"),
+            F.lit(self.k).alias("k"),
         )
 
     def read_delta(self, paths: list[str]) -> dict[int, np.ndarray]:
         """The committed ``delta_rows`` dirs at ``paths``, read with
-        pyarrow on the driver (no Spark job) and folded into packed
+        pyarrow on the driver (no Spark job) and ORed into packed
         per-shard bitsets for ``merge_delta``. Raises if a dir pins
-        another geometry: ORed into this layout, its bytes would leave
+        another geometry: ORed into this layout, its bits would leave
         seen URLs' bits unset, and a URL the filter misses skips the
         exact check."""
         geometry = {"n_shards": self.n_shards, "n_bits": self.n_bits, "k": self.k}
@@ -190,13 +163,9 @@ class BloomShards:
                         f"filter has {name}={want}: rebuild the filter or keep "
                         "its geometry"
                     )
-            shard = t["shard"].to_numpy()
-            idx = t["byte_idx"].to_numpy()
-            byte = t["byte"].to_numpy().astype(np.uint8)
-            for s in np.unique(shard):
-                arr = out.setdefault(int(s), np.zeros(self.n_bits // 8, dtype=np.uint8))
-                m = shard == s
-                np.bitwise_or.at(arr, idx[m], byte[m])
+            for shard, bits in zip(t["shard"].to_pylist(), t["bits"].to_pylist()):
+                arr = np.frombuffer(bits, dtype=np.uint8)
+                out[shard] = out[shard] | arr if shard in out else arr
         return out
 
     def _snapshot(self) -> "BloomShards":

@@ -21,11 +21,12 @@ it drops its URLs from url_seen in the same commit that re-queues them,
 and its rows are distinct and anti-joined against the frontier.
 
 The bloom filter is committed state, not a cache to rebuild: each
-epoch's commit appends the sparse delta its hashes set
-(``BloomShards.delta_rows``), and ``_ensure_bloom`` ORs every committed
-``bloom`` dir it has not merged yet into the driver's shards with
-pyarrow, after the engine's own commit and on resume alike. Neither
-runs a Spark job or scans ``url_seen``. ``EpochStats.pending_after`` and
+epoch's commit appends the filter bits its hashes set
+(``BloomShards.delta_rows``: packed per-shard bitsets), and
+``_ensure_bloom`` ORs every committed ``bloom`` dir it has not merged
+yet into the driver's shards with pyarrow, after the engine's own
+commit and on resume alike. Neither runs a Spark job or scans
+``url_seen``. ``EpochStats.pending_after`` and
 ``discoveries`` are observed on the frontier write itself
 (``DataFrame.observe``), so nothing after the commit runs a job.
 
