@@ -1924,10 +1924,7 @@ def q_lsh_candidate_pairs(spark, sf_dir):
     sigs = dedup.minhash_signatures(
         _corpus(spark, sf_dir), "text", "doc_id", _N_MINHASH, _K_SHINGLE
     )
-    # materialize: the sf corpora are deep inside the broadcast regime,
-    # where the checkpoint+hint combination measured ~33% faster with
-    # the upstream executed once (bucket_pairs docstring, r5 A/B)
-    return dedup.lsh_candidate_pairs(sigs, "doc_id", _N_MINHASH, 4, materialize=True)
+    return dedup.lsh_candidate_pairs(sigs, "doc_id", _N_MINHASH, 4)
 
 
 _NGRAM_PAIRS_SQL = f"""
@@ -1968,22 +1965,15 @@ def _ngram_pairs(spark, sf_dir):
     # the per-doc arrays per candidate pair (codegen array_intersect)
     # instead of re-exploding shingle rows through a distinct + two
     # joins — 5 exchanges -> 2 on the verify side, identical values
-    # (see ngram_jaccard_from_sets). broadcast_sets: the sf corpora
-    # are the known-small regime (same opt-in contract as
-    # materialize=True). Measured r6: 10.2 s -> ~3 s end to end.
+    # (see ngram_jaccard_from_sets). Measured r6: 10.2 s -> ~3 s end
+    # to end.
     c = _corpus(spark, sf_dir)
     sets = dedup.shingle_sets(c, "text", "doc_id", _K_SHINGLE).localCheckpoint(
         eager=True
     )
     sigs = dedup.minhash_signatures_from_shingles(sets, "doc_id", _N_MINHASH)
-    # materialize: sf corpora are in the broadcast regime (r5 A/B —
-    # banded upstream executes once, join strategy unchanged)
-    cands = dedup.lsh_candidate_pairs(
-        sigs, "doc_id", _N_MINHASH, 4, materialize=True
-    )
-    return dedup.ngram_jaccard_from_sets(
-        sets, cands, "doc_id", 0.5, broadcast_sets=True
-    )
+    cands = dedup.lsh_candidate_pairs(sigs, "doc_id", _N_MINHASH, 4)
+    return dedup.ngram_jaccard_from_sets(sets, cands, "doc_id", 0.5)
 
 
 @q("ngram_jaccard_pairs", _NGRAM_PAIRS_SQL)
@@ -2145,11 +2135,8 @@ def q_simhash_near_dups(spark, sf_dir):
     as the brute-force join the oracle runs, with no cartesian product
     in the physical plan."""
     c = dedup.simhash_signatures(_corpus(spark, sf_dir), "text", "doc_id")
-    # materialize: the 61-aggregate signature pass otherwise executes
-    # once per self-join side (0 ReusedExchange), and the hamming
-    # verify now runs inside the band join (r6: 6.1 s -> ~2.4 s)
     return dedup.simhash_banded_pairs(
-        c, "doc_id", "simhash", max_hamming=6, n_bits=60, materialize=True
+        c, "doc_id", "simhash", max_hamming=6, n_bits=60
     )
 
 
@@ -2312,8 +2299,6 @@ def q_embedding_near_dup_pairs(spark, sf_dir):
         dim=64,
         n_bands=_EMB_LSH_BANDS,
         bits_per_band=_EMB_LSH_BITS,
-        # broadcast-regime corpus: checkpoint+hint, upstream runs once
-        materialize=True,
     )
     pairs = dedup.embedding_near_dups(corpus, tau=0.99, candidates=cands)
     return pairs.withColumn("cosine", F.round("cosine", 4))
@@ -5920,10 +5905,7 @@ def q_interleaved_near_dups(spark, sf_dir):
     # pinning also skips the auto-gate's count probe (no construction
     # job in a driver query)
     return il_mod.interleaved_near_dups(
-        docs, max_hamming=6, min_media_jaccard=0.5, wide=False,
-        # r6: checkpoint the signature table — the span-linearization +
-        # signature pipeline otherwise executes once per self-join side
-        materialize=True,
+        docs, max_hamming=6, min_media_jaccard=0.5, wide=False
     )
 
 

@@ -66,8 +66,8 @@ def run_query(spark, fn, sf_dir: str) -> float:
     df.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
     # Release per-query session state OUTSIDE the timed window: the
-    # materialize=True queries eagerly localCheckpoint their banded
-    # tables and broadcast-hint whole sides; those storage blocks and
+    # near-dup queries eagerly localCheckpoint their banded tables and
+    # broadcast whole sides; those storage blocks and
     # broadcast variables are only reclaimed by the ContextCleaner
     # after the py4j proxies are garbage-collected, which Python does
     # lazily — left alone they shrink executor execution memory and

@@ -16,6 +16,26 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def built_queries(spark):
+    """``built_queries(sf_dir)`` -> every registered query built once
+    per sf dir, ``{name: df}``, for the sweeps that read only a plan or
+    a schema: building is the sweeps' cost (construction-time
+    checkpoints and probes), so they share one build."""
+    import __spark_entry__ as entry
+
+    built: dict[str, dict] = {}
+
+    def build(sf_dir: str) -> dict:
+        if sf_dir not in built:
+            built[sf_dir] = {
+                name: fn(spark, sf_dir) for name, fn in entry.queries().items()
+            }
+        return built[sf_dir]
+
+    return build
+
+
 @pytest.fixture
 def ann_index(spark, tmp_path):
     """A committed LSH-ANN index (another family's manifest) for the

@@ -133,20 +133,26 @@ def test_vocab_hint_skips_probe_and_matches(spark, docs):
         lm.perplexity(docs, model, add_k=0.0)
 
 
-def test_broadcast_plan_gate(spark, docs):
+def test_broadcast_plan_gate(spark, docs, monkeypatch):
     """Below the vocab threshold both model joins carry the explicit
     broadcast hint (zero corpus shuffle on the scoring side) and the
-    hot path stays Python-free. broadcast_lm=False only removes the
-    FORCED hint — Catalyst/AQE may still pick broadcast for a small
-    model (fine; the flag exists so a huge model can't be pinned into
-    executor memory) — so the un-hinted path is checked for result
-    parity, not plan shape."""
+    hot path stays Python-free. Above it the hint is dropped —
+    Catalyst/AQE may still pick broadcast for a small model (fine; the
+    gate exists so a huge model can't be pinned into executor memory)
+    — so the un-hinted path is checked for result parity, not plan
+    shape."""
     model = lm.train_bigram_lm(docs).localCheckpoint(eager=True)
     bcast = lm.perplexity(docs, model)
     plan = bcast._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2
     assert "Python" not in plan  # pure-Column pipeline
-    shuf = lm.perplexity(docs, model, broadcast_lm=False)
+    monkeypatch.setattr(lm, "BROADCAST_VOCAB_THRESHOLD", 0)
+    shuf = lm.perplexity(docs, model)
+    hints = [
+        df._jdf.queryExecution().analyzed().toString().count("ResolvedHint")
+        for df in (bcast, shuf)
+    ]
+    assert hints[0] >= 2 and hints[1] == 0, hints
     assert sorted(map(tuple, bcast.collect())) == sorted(
         map(tuple, shuf.collect())
     )

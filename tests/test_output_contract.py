@@ -10,10 +10,10 @@ composite value must be serialized (``F.to_json``) at the query
 boundary, on both the Spark and the oracle side.
 
 Near-schema-only: the sweep never executes the result DataFrames, but
-building a few of them is not free — operators with an auto-select
-size probe (ngram_jaccard_pairs' LIMIT-bounded count, renumber_groups'
-gate) run one small bounded job at construction time. Still seconds at
-sf0.001, not minutes.
+building them is not free — construction-time checkpoints and
+auto-select size probes (ngram_jaccard_pairs' LIMIT-bounded count,
+renumber_groups' gate) run small jobs. The build is shared with
+test_plans' cartesian sweep through conftest's ``built_queries``.
 """
 
 from __future__ import annotations
@@ -25,10 +25,9 @@ import __spark_entry__ as entry
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_every_query_output_is_scalar_only(spark):
+def test_every_query_output_is_scalar_only(built_queries):
     bad: dict[str, list[str]] = {}
-    for name, fn in entry.queries().items():
-        df = fn(spark, SF_DIR)
+    for name, df in built_queries(SF_DIR).items():
         complex_fields = [
             f.name
             for f in df.schema.fields

@@ -140,14 +140,12 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
     assert q.count() == li.filter(F.col("shard") == 3).count()
 
 
-def test_no_cartesian_product_in_any_query_plan(spark):
+def test_no_cartesian_product_in_any_query_plan(built_queries):
     """Every registered query must avoid a non-broadcast cartesian
     product. (BroadcastNestedLoopJoin against a 1-row aggregate is the
     intended shape for scalar-join queries and is allowed.)"""
-    import __spark_entry__ as entry
-
-    for name, fn in entry.queries().items():
-        plan = P.physical_plan(fn(spark, SF))
+    for name, df in built_queries(SF).items():
+        plan = P.physical_plan(df)
         assert "CartesianProduct" not in plan, name
 
 
@@ -318,3 +316,55 @@ def test_x90_x92_plans(spark):
     for name in ("takedown_audit", "takedown_survivors",
                  "semantic_decontamination"):
         assert P.has_broadcast_join(qs[name](spark, SF)), name
+
+
+def test_lsh_candidate_pairs_joins_by_checkpoint_statistics(spark):
+    """The banded near-dup joins carry no join hint: the banded table
+    is checkpointed, and the checkpoint scan's size statistics let
+    Catalyst broadcast it while it fits under
+    autoBroadcastJoinThreshold and sort-merge it above."""
+    from webscrape_neko_jirushi_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
+    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
+    assert "ResolvedHint" not in pairs._jdf.queryExecution().analyzed().toString()
+    plan = P.physical_plan(pairs)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "ExistingRDD" in plan and "Scan parquet" not in plan, plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = P.physical_plan(dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4))
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+
+
+def test_generate_filter_inference_is_excluded(spark):
+    """session.py excludes InferFiltersFromGenerate: the rule would
+    clone the whole shingle expression into a ``size(...) > 0`` filter
+    below the explode and evaluate it a second time per row. The
+    optimized plan of shingles -> explode must hold no such filter;
+    with the exclusion unset, the same plan gets one."""
+    from webscrape_neko_jirushi_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def size_filters():
+        q = dedup.with_shingles(docs, "text", "doc_id").select(
+            "doc_id", F.explode("sh").alias("s")
+        )
+        plan = q._jdf.queryExecution().optimizedPlan().toString()
+        return [l for l in plan.splitlines() if "Filter" in l and "size(" in l]
+
+    assert size_filters() == []
+    key = "spark.sql.optimizer.excludedRules"
+    old = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        inferred = size_filters()
+    finally:
+        spark.conf.set(key, old)
+    assert inferred, "InferFiltersFromGenerate no longer adds a size filter"

@@ -8,8 +8,8 @@ bit-identical output; each claim gets a structural test here:
 - ngram_jaccard_from_sets (array_intersect verify) == the explode/
   self-join verify, given the same candidates;
 - minhash_signatures_from_shingles over distinct sets == the text form;
-- simhash_banded_pairs(materialize=True) == the lazy form, and the
-  materialized plan actually broadcasts;
+- simhash_banded_pairs checkpoints its signature table and, with no
+  hint, its plan still broadcasts (the checkpoint's statistics decide);
 - the cleaning cascades' standalone boolean `keep` == reason.isNull()
   including NULL-input rows;
 - fan_out partition arithmetic (no-op at scale, spread when
@@ -67,15 +67,12 @@ def test_ngram_from_sets_matches_explode_form(spark):
         restrict_candidates=False,
     )
     sets = dedup.shingle_sets(corpus, "text", "doc_id", 5)
-    for bc in (False, True):
-        new = dedup.ngram_jaccard_from_sets(
-            sets, cands, "doc_id", 0.5, broadcast_sets=bc
-        )
-        assert new.columns == old.columns
-        assert [f.dataType for f in new.schema.fields] == [
-            f.dataType for f in old.schema.fields
-        ]
-        assert _rows(new) == _rows(old), f"broadcast_sets={bc}"
+    new = dedup.ngram_jaccard_from_sets(sets, cands, "doc_id", 0.5)
+    assert new.columns == old.columns
+    assert [f.dataType for f in new.schema.fields] == [
+        f.dataType for f in old.schema.fields
+    ]
+    assert _rows(new) == _rows(old)
 
 
 def test_minhash_from_shingles_matches_text_form(spark):
@@ -87,19 +84,20 @@ def test_minhash_from_shingles_matches_text_form(spark):
     assert _rows(new) == _rows(old)
 
 
-def test_simhash_materialize_matches_lazy_and_broadcasts(spark):
+def test_simhash_banded_pairs_checkpoints_and_broadcasts(spark):
+    """The pair set is pinned against brute force in test_plans; this
+    pins the physical path: both join sides read the checkpointed
+    signature table, and its statistics keep the broadcast."""
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     near = d.limit(30).select(
         (F.col("doc_id") + 500000).alias("doc_id"),
         F.concat("text", F.lit(" x")).alias("text"),
     )
     sigs = dedup.simhash_signatures(d.unionByName(near), "text", "doc_id")
-    lazy = dedup.simhash_banded_pairs(sigs, "doc_id", "simhash", 6, 60)
-    mat = dedup.simhash_banded_pairs(
-        sigs, "doc_id", "simhash", 6, 60, materialize=True
-    )
-    assert _rows(mat) == _rows(lazy)
-    assert P.has_broadcast_join(mat)
+    pairs = dedup.simhash_banded_pairs(sigs, "doc_id", "simhash", 6, 60)
+    plan = P.physical_plan(pairs)
+    assert P.has_broadcast_join(pairs), plan
+    assert "ExistingRDD" in plan and "Scan parquet" not in plan, plan
 
 
 def test_cascade_keep_equals_reason_null_with_nulls(spark):

@@ -207,7 +207,6 @@ def bucket_pairs(
     id_col: str,
     bucket_cols: list[str],
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b) from a banded/bucketed table via a
     pure equi-join on ``bucket_cols``. With ``max_bucket`` set, buckets
@@ -235,42 +234,26 @@ def bucket_pairs(
     shuffles on the same key as the join, so no extra exchange shape
     is introduced.
 
-    Known double-compute, measured and kept: the self-join consumes
-    ``banded`` twice and Catalyst broadcasts one side, so the upstream
-    pipeline (scan -> signatures -> banding) executes per side (0
-    ReusedExchange in the executed plan). A localCheckpoint of the
-    banded table removes the duplication but replaces the broadcast
-    join with a sort-merge join over the statistics-less RDD scan —
-    measured NET SLOWER at sf0.1 (8.3-10.5 s vs 5.3-8.4 s): two
-    shuffles + sorts cost more than recomputing the cheap-per-row
-    upstream. Callers whose upstream is genuinely expensive can
-    checkpoint before calling (``connected_components`` does exactly
-    this with its edge list).
-
-    ``materialize=True`` is the CONTROLLED combination the r4 A/B left
-    untested: localCheckpoint the banded table AND keep the broadcast
-    join via an explicit ``F.broadcast()`` hint on the build side — the
-    upstream executes once and the join strategy is unchanged (the r4
-    measurement conflated the two by letting Catalyst fall back to a
-    sort-merge join over the statistics-less RDD scan). Measured
-    (``BENCH/ab_bucket_pairs.py``, 5 alternating warm reps, loadavg<2,
-    local[32], minhash->banding->self-join pipeline, r5):
-
-        corpus          lazy median   mat+hint median
-        7.5k docs       1.80 s        1.21 s   (every paired rep faster)
-        600k docs       17.8 s        17.6 s   (statistical tie)
-
-    i.e. the combination never loses and wins ~33% where the banded
-    build is a meaningful fraction of the query — so the driver's
-    known-small LSH queries enable it. It stays OPT-IN here because
-    (a) the eager checkpoint is a construction-time job (plan-only
-    consumers would pay it), and (b) the hint broadcasts the WHOLE
-    banded table, which is only safe while (n_rows x n_bands) rows fit
-    the executors — the same regime where Catalyst auto-broadcasts
-    today; forcing it on a 10^9-row banded table would OOM where the
-    lazy form degrades gracefully to a sort-merge join."""
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
+    One physical path: a plain equi-join whose strategy Catalyst
+    picks. The self-join reads ``banded`` twice and nothing reuses the
+    exchange (0 ReusedExchange), so a lazy upstream (scan ->
+    signatures -> banding) runs once per side. The banding entry
+    points (``lsh_candidate_pairs``,
+    ``similarity.banded_lsh_candidates``) therefore checkpoint the
+    banded table before calling this; the index probes pass a
+    checkpointed or delta-bounded frame. A checkpoint scan keeps its
+    size statistics (Spark 4.1), so ``autoBroadcastJoinThreshold`` is
+    the size rule: broadcast while the banded table fits under it,
+    sort-merge above it, and no hint can pin a 10^9-row table into
+    executor memory. Measured (r5, minhash -> banding -> self-join,
+    5 alternating warm reps, local[32]): checkpoint + broadcast
+    1.21 s against 1.80 s lazy at 7.5k docs (every paired rep
+    faster), a tie (17.6 s against 17.8 s) at 600k docs. The r4 loss,
+    checkpoint + sort-merge against a lazy broadcast at sf0.1
+    (8.3-10.5 s against 5.3-8.4 s), came from a checkpoint scan that
+    then had no statistics. Above the threshold both forms
+    sort-merge, and there the checkpoint is slower: 9.1 s against
+    8.2 s lazy at 60k docs (local[4], median of 3 alternating reps)."""
     if max_bucket is None:
         small, big = banded, None  # no occupancy window on the uncapped path
     else:
@@ -286,10 +269,6 @@ def bucket_pairs(
         )
     a = small.select(id_col, *bucket_cols).alias("a")
     b = small.select(id_col, *bucket_cols).alias("b")
-    if materialize:
-        # explicit build-side hint: the checkpointed RDD scan has no
-        # statistics, so without it Catalyst would sort-merge-join
-        b = F.broadcast(b)
     pairs = a.join(
         b,
         [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols]
@@ -372,15 +351,17 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     n_bands: int = 4,
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Band the signature, bucket-join on (band, band_hash): docs
     agreeing on ALL rows of any band become candidate pairs (a < b).
-    ``max_bucket`` caps hot buckets via star expansion;
-    ``materialize`` checkpoints the banded table and keeps the
-    broadcast join via an explicit hint (see ``bucket_pairs``)."""
+    ``max_bucket`` caps hot buckets via star expansion. The banded
+    table is checkpointed (one eager job): the self-join reads it
+    twice, and the checkpoint's statistics choose the join (see
+    ``bucket_pairs``)."""
     banded = banded_minhash(signatures, id_col, n_hashes, n_bands)
-    return bucket_pairs(banded, id_col, ["band", "bh"], max_bucket, materialize)
+    return bucket_pairs(
+        banded.localCheckpoint(eager=True), id_col, ["band", "bh"], max_bucket
+    )
 
 
 def _with_pb(
@@ -806,7 +787,6 @@ def ngram_jaccard_from_sets(
     candidates: DataFrame,
     id_col: str,
     min_jaccard: float = 0.5,
-    broadcast_sets: bool = False,
 ) -> DataFrame:
     """Candidate-pair exact Jaccard verify over pre-built DISTINCT
     shingle sets (:func:`shingle_sets`): hydrate each candidate pair
@@ -827,10 +807,11 @@ def ngram_jaccard_from_sets(
     The explode form remains the right shape WITHOUT candidates
     (its shingle equi-join discovers pairs; arrays cannot).
 
-    ``broadcast_sets=True`` hints both hydration joins to broadcast
-    the set table — for the known-small regime (sets fit executors),
-    same opt-in contract as ``bucket_pairs(materialize=True)``; the
-    default shuffles candidates by id, which scales with the corpus."""
+    No join hint: pass ``sets`` checkpointed (the driver query does,
+    since the signatures read it too) and its statistics choose each
+    hydration join — a broadcast of the set table while it fits
+    under ``autoBroadcastJoinThreshold`` (0.85 MB at sf0.1), a
+    shuffle of the candidates by id above it."""
     sa = sets.select(
         F.col(id_col).alias("id_a"),
         F.col("shs").alias("_sh_a"),
@@ -841,8 +822,6 @@ def ngram_jaccard_from_sets(
         F.col("shs").alias("_sh_b"),
         F.col("n_sh").alias("_n_b"),
     )
-    if broadcast_sets:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
     return (
         candidates.select("id_a", "id_b")
         .join(sa, "id_a")
@@ -1120,14 +1099,13 @@ def simhash_banded_pairs(
     sim_col: str = "simhash",
     max_hamming: int = 6,
     n_bits: int = 60,
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact Hamming-ball pair search WITHOUT a cartesian product.
 
     Pigeonhole: split the ``n_bits`` signature into ``max_hamming + 1``
     contiguous bands — any pair within ``max_hamming`` bit flips agrees
     exactly on at least one band. Explode (band, chunk), equi-join on it
-    (shuffle-hash/sort-merge, AQE-skew-safe), with the
+    (AQE-skew-safe), with the
     ``bit_count(xor) <= max_hamming`` verify evaluated INSIDE the join
     as a residual condition: a band bucket of B mutually-similar docs
     emits B(B-1)/2 collision probes, and filtering them during the
@@ -1138,20 +1116,18 @@ def simhash_banded_pairs(
     filter-then-distinct == distinct-then-filter). The result set is
     provably identical to the brute-force a x b join.
 
-    ``materialize=True`` is the same controlled combination as
-    ``bucket_pairs``: localCheckpoint the signature table (the
-    upstream signature aggregation otherwise executes once per join
-    side — 0 ReusedExchange), broadcast-hint the build side, and
-    re-spread the probe side over the session parallelism keyed on
-    the join columns (a checkpointed aggregate output is AQE-coalesced
-    to ~1 partition, which would serialize the probe). Opt-in for the
-    same reason as ``bucket_pairs``: safe while the banded table fits
-    the executors — the regime every sf corpus is in; the lazy form
-    degrades gracefully at 10^9 rows."""
+    One physical path, the one ``bucket_pairs`` takes: the signature
+    table is checkpointed (one eager job), because the upstream
+    signature aggregation otherwise executes once per join side (0
+    ReusedExchange; r6: ``simhash_near_dups`` 6.1 s -> ~2.4 s with
+    the in-join verify). The checkpoint's statistics choose broadcast
+    or sort-merge under ``autoBroadcastJoinThreshold``. The probe side
+    is re-spread over the session parallelism keyed on the join
+    columns: a checkpointed aggregate output is AQE-coalesced to ~1
+    partition, which would serialize the probe."""
     n_bands = max_hamming + 1
     widths = _band_widths(n_bits, n_bands)
-    if materialize:
-        df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=True)
     chunks = []
     off = 0
     for i, w in enumerate(widths):
@@ -1161,13 +1137,10 @@ def simhash_banded_pairs(
     banded = df.select(
         F.col(id_col), F.col(sim_col), F.explode(F.array(*chunks)).alias("bc")
     ).select(id_col, sim_col, "bc.band", "bc.chunk")
-    a = banded.alias("a")
+    a = banded.repartition(
+        banded.sparkSession.sparkContext.defaultParallelism, "band", "chunk"
+    ).alias("a")
     b = banded.alias("b")
-    if materialize:
-        a = banded.repartition(
-            banded.sparkSession.sparkContext.defaultParallelism, "band", "chunk"
-        ).alias("a")
-        b = F.broadcast(b)
     hamming = F.bit_count(
         F.col(f"a.{sim_col}").bitwiseXOR(F.col(f"b.{sim_col}"))
     )

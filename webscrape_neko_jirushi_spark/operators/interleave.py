@@ -431,7 +431,6 @@ def interleaved_near_dups(
     n_docs: int | None = None,
     wide: bool | None = None,
     wide_threshold: int = 150_000,
-    materialize: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, hamming, media_jaccard): pairs of interleaved
     documents that are near-duplicates in BOTH modalities — text
@@ -456,11 +455,10 @@ def interleaved_near_dups(
     different signatures, so their pair sets differ at the margin;
     the pigeonhole completeness guarantee holds for both.
 
-    ``materialize=True`` (60-bit path) checkpoints the signature table
-    inside ``simhash_banded_pairs`` — the linearized-text + signature
-    pipeline above it is NOT exchange-reused across the self-join
-    sides, so lazily it executes twice; same known-small opt-in
-    contract as ``bucket_pairs`` (r6)."""
+    The 60-bit path's ``simhash_banded_pairs`` checkpoints the
+    signature table: the linearized-text + signature pipeline above
+    it is not exchange-reused across the self-join sides, so lazily
+    it would execute twice (r6)."""
     from . import dedup
 
     texts = joined_text(docs, id_col, spans_col)
@@ -478,8 +476,7 @@ def interleaved_near_dups(
     else:
         sigs = dedup.simhash_signatures(texts, "text", id_col)
         text_pairs = dedup.simhash_banded_pairs(
-            sigs, id_col, "simhash", max_hamming=max_hamming, n_bits=60,
-            materialize=materialize,
+            sigs, id_col, "simhash", max_hamming=max_hamming, n_bits=60
         )
     with_media = media_pair_jaccard(text_pairs, docs, id_col, spans_col)
     return with_media.filter(

@@ -334,7 +334,6 @@ def banded_lsh_candidates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded random-hyperplane LSH
     (OR over bands, AND within a band): two vectors are candidates iff
@@ -349,9 +348,14 @@ def banded_lsh_candidates(
     star expansion (see ``dedup.bucket_pairs``) — skew split cannot
     shrink a quadratic pair list. Sign flips from floating-point
     summation order are pair-coherent for proportional vectors, so
-    exact-direction duplicates are never lost."""
+    exact-direction duplicates are never lost. The banded table is
+    checkpointed (one eager job): the self-join reads it twice, and
+    the checkpoint's statistics choose the join (see
+    ``dedup.bucket_pairs``)."""
     banded = emb_banded(embeddings, dim, n_bands, bits_per_band, id_col, vec_col)
-    return bucket_pairs(banded, id_col, ["band", "bucket"], max_bucket, materialize)
+    return bucket_pairs(
+        banded.localCheckpoint(eager=True), id_col, ["band", "bucket"], max_bucket
+    )
 
 
 def emb_banded(

@@ -150,7 +150,6 @@ def perplexity(
     text_col: str = "text",
     id_col: str = "doc_id",
     carry_cols: tuple[str, ...] = (),
-    broadcast_lm: bool | None = None,
 ) -> DataFrame:
     """Per-document LM score: ``(id, *carry, n_tokens, nll, ppl)``
     where ``nll = round(avg(-ln P), 6)`` and ``ppl = round(exp(nll_raw),
@@ -160,18 +159,16 @@ def perplexity(
     ``vocab_size`` is the lazy-hint discipline (``ngram_jaccard``'s
     ``n_docs``): pass it and construction runs ZERO jobs; omit it and
     V is probed from the model (one small-table count).
-    ``broadcast_lm=None`` auto-gates the EXPLICIT hint on V vs
-    ``BROADCAST_VOCAB_THRESHOLD``; ``False`` removes the forced hint
-    (Catalyst/AQE may still choose broadcast for a small model — the
-    flag exists so a vocabulary bigger than executor memory can never
-    be pinned broadcast)."""
+    The one join rule: at ``V <= BROADCAST_VOCAB_THRESHOLD`` both
+    model joins carry a broadcast hint (no corpus shuffle on the
+    scoring side); above it there is no hint and Catalyst/AQE choose,
+    so a vocabulary bigger than executor memory is never pinned
+    broadcast."""
     if add_k <= 0:
         raise ValueError(f"perplexity: add_k must be > 0, got {add_k}")
     v = int(vocab_size) if vocab_size is not None else lm_vocab_size(lm)
-    if broadcast_lm is None:
-        broadcast_lm = v <= BROADCAST_VOCAB_THRESHOLD
     ctx = context_counts(lm)
-    if broadcast_lm:
+    if v <= BROADCAST_VOCAB_THRESHOLD:
         lm, ctx = F.broadcast(lm), F.broadcast(ctx)
 
     big = _bigram_stream(documents, text_col, id_col, carry_cols)
