@@ -246,29 +246,18 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
     def ngram_jaccard():
         sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
         cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-        # restrict_candidates: this corpus has realistic (10%) dup
-        # density, the regime the below-explode restriction targets —
-        # see ngram_jaccard_pairs' docstring for the measured trade
-        return dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", 5, 0.5, cands, restrict_candidates=True
-        )
+        return dedup.ngram_jaccard_pairs(docs, "text", "doc_id", 5, 0.5, cands)
 
     def containment_cands():
         # X44: containment verify DRIVEN by the LSH candidate pairs
-        # (the planted 10% near-dups): same two candidate-keyed
-        # equi-joins as the jaccard verify, different final ratio —
+        # (the planted 10% near-dups): the same candidate verify over
+        # shingle sets as the jaccard leg, different final ratio —
         # measures the asymmetric verify's growth on the same pair
-        # stream. restrict_candidates mirrors the ngram_jaccard leg
-        # (same _candidate_restricted_base; before it, this leg grew
-        # 25-27x at 100x vs ngram's 8-14x on the SAME pair stream —
-        # the full-corpus explode+distinct was the whole gap. Controlled
-        # warm A/B at 100x, alternating, one session: restricted
-        # 29.7-31.8s vs 54-63s unrestricted; same-session ngram 34.9-36.4s)
+        # stream
         sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
         cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
         return dedup.containment_pairs(
-            docs, "text", "doc_id", 5, 0.8, candidates=cands,
-            restrict_candidates=True,
+            docs, "text", "doc_id", 5, 0.8, candidates=cands
         )
 
     def simhash_pairs():
@@ -286,9 +275,7 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
     def near_dup_clusters():
         sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
         cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-        pairs = dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", 5, 0.5, cands, restrict_candidates=True
-        )
+        pairs = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", 5, 0.5, cands)
         return dedup.connected_components(pairs)
 
     def embedding_near_dups():
@@ -665,9 +652,7 @@ def _queries(spark, paths: dict[str, str], n_docs: int, n_vecs: int):
         # clusters leg's growth (the pipeline dominates)
         sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
         cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-        pairs = dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", 5, 0.5, cands, restrict_candidates=True
-        )
+        pairs = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", 5, 0.5, cands)
         labels = dedup.connected_components(pairs)
         d = docs.withColumn("q", F.length("text"))
         return dedup.keep_canonical(d, labels, "q").agg(

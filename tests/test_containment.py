@@ -52,36 +52,39 @@ def test_threshold(docs):
 
 
 def test_candidate_driven_parity(spark, docs):
-    full = sorted(
-        tuple(r)
-        for r in dedup.containment_pairs(
-            docs, "text", "doc_id", k=5, min_containment=0.8
-        ).collect()
+    """The candidate verify (over shingle arrays) returns exactly the
+    self-join's rows restricted to the candidate pairs, with NULL,
+    empty and shorter-than-k text, a pair that shares no shingle, and
+    at threshold 0."""
+    odd = spark.createDataFrame(
+        [(5, None), (6, ""), (7, "two words")], "doc_id long, text string"
     )
+    corpus = docs.unionByName(odd)
+    # (1, 3) and (6, 7) share no shingle; (5, 6) share the one "" shingle
     cands = spark.createDataFrame(
-        [(1, 2), (1, 4), (2, 4), (1, 3)], "id_a long, id_b long"
+        [(1, 2), (1, 4), (2, 4), (1, 3), (5, 6), (6, 7)],
+        "id_a long, id_b long",
     )
-    driven = sorted(
-        tuple(r)
-        for r in dedup.containment_pairs(
-            docs, "text", "doc_id", k=5, min_containment=0.8,
-            candidates=cands,
-        ).collect()
-    )
-    # candidate superset of the true pairs -> identical verified output
-    assert driven == full
-    # below-the-explode restriction (shared _candidate_restricted_base):
-    # shrinking the base to candidate docs must not change a single
-    # verified value — shingle sets, hence n_a/n_b and both directed
-    # containments, stay intact for every retained doc
-    restricted = sorted(
-        tuple(r)
-        for r in dedup.containment_pairs(
-            docs, "text", "doc_id", k=5, min_containment=0.8,
-            candidates=cands, restrict_candidates=True,
-        ).collect()
-    )
-    assert restricted == full
+    for t in (0.8, 0.0):
+        full = dedup.containment_pairs(
+            corpus, "text", "doc_id", k=5, min_containment=t
+        )
+        want = sorted(
+            tuple(r)
+            for r in full.join(cands, ["id_a", "id_b"], "left_semi").collect()
+        )
+        driven = sorted(
+            tuple(r)
+            for r in dedup.containment_pairs(
+                corpus, "text", "doc_id", k=5, min_containment=t,
+                candidates=cands,
+            ).collect()
+        )
+        assert driven == want, t
+        if t == 0.8:
+            # the candidates cover every true pair, (5, 6) included
+            assert driven == sorted(tuple(r) for r in full.collect())
+            assert (5, 6, 1, 1, 1, 1.0, 1.0) in driven
 
 
 def test_duckdb_twin(spark, docs):

@@ -11,8 +11,8 @@ boundary, on both the Spark and the oracle side.
 
 Near-schema-only: the sweep never executes the result DataFrames, but
 building them is not free — construction-time checkpoints and
-auto-select size probes (ngram_jaccard_pairs' LIMIT-bounded count,
-renumber_groups' gate) run small jobs. The build is shared with
+auto-select size probes (renumber_groups' LIMIT-bounded count) run
+small jobs. The build is shared with
 test_plans' cartesian sweep through conftest's ``built_queries``.
 """
 

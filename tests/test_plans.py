@@ -228,49 +228,34 @@ def test_simhash_wide_halves_match_narrow_on_hi(spark):
     assert joined.count() == 0
 
 
-def test_ngram_restricted_semi_join_is_broadcast(spark):
-    """The restrict_candidates semi-join must plan as a broadcast
-    LeftSemi below the shingle explode — a sort-merge semi would
-    shuffle the full text-bearing base table by id, the exact shuffle
-    the restriction exists to avoid (AQE never converts it because the
-    build side hides behind an explode+distinct stage)."""
+def test_shingle_candidate_verify_builds_no_job(spark):
+    """Building the candidate verify of ngram_jaccard_pairs and
+    containment_pairs runs no Spark job (no size probe, no checkpoint),
+    and the plans explode no shingle rows: candidates are verified
+    over per-doc shingle arrays."""
     from webscrape_neko_jirushi_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
+    # built outside the group: lsh_candidate_pairs checkpoints its
+    # banded table while it is built
     cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-    q = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", 5, 0.5, cands, restrict_candidates=True
-    )
-    plan = P.physical_plan(q)
-    lines = plan.splitlines()
-    assert any("BroadcastHashJoin" in l and "LeftSemi" in l for l in lines)
-    assert not any(
-        "SortMergeJoin" in l and "LeftSemi" in l for l in lines
-    ), [l for l in lines if "LeftSemi" in l]
-
-
-def test_ngram_n_docs_hint_resolves_auto_gate(spark):
-    """The n_docs hint resolves restrict_candidates' auto gate with
-    zero construction jobs: above the threshold the restriction
-    semi-join appears in the plan, below it it doesn't."""
-    from webscrape_neko_jirushi_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
-    cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-    big = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", 5, 0.5, cands, n_docs=1_000_000
-    )
-    assert any(
-        "LeftSemi" in l for l in P.physical_plan(big).splitlines()
-    )
-    small = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", 5, 0.5, cands, n_docs=10
-    )
-    assert not any(
-        "LeftSemi" in l for l in P.physical_plan(small).splitlines()
-    )
+    sc = spark.sparkContext
+    sc.setJobGroup("verify_build", "build the candidate verify plans")
+    try:
+        built = [
+            dedup.ngram_jaccard_pairs(docs, "text", "doc_id", 5, 0.5, cands),
+            dedup.containment_pairs(
+                docs, "text", "doc_id", 5, 0.8, candidates=cands
+            ),
+        ]
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup("verify_build") == []
+    for q in built:
+        plan = P.physical_plan(q)
+        assert "Generate" not in plan, plan
 
 
 def test_round5_text_ops_python_free(spark):

@@ -5,8 +5,9 @@ bit-identical output; each claim gets a structural test here:
 
 - keep-first as argmin aggregate == keep-first as window (the declared
   query's new form vs the engine operator);
-- ngram_jaccard_from_sets (array_intersect verify) == the explode/
-  self-join verify, given the same candidates;
+- the candidate verify over shingle arrays (ngram_jaccard_from_sets,
+  ngram_jaccard_pairs with candidates) == the candidate-free explode/
+  self-join restricted to the candidates, odd inputs included;
 - minhash_signatures_from_shingles over distinct sets == the text form;
 - simhash_banded_pairs checkpoints its signature table and, with no
   hint, its plan still broadcasts (the checkpoint's statistics decide);
@@ -50,6 +51,12 @@ def test_keep_first_agg_matches_window(spark):
 
 
 def test_ngram_from_sets_matches_explode_form(spark):
+    """Both candidate verifies (``ngram_jaccard_from_sets`` over given
+    sets, ``ngram_jaccard_pairs`` with candidates) return exactly the
+    rows of the candidate-free shingle self-join restricted to the
+    candidate pairs — with NULL, empty and shorter-than-k text, pairs
+    that share no shingle, and at threshold 0, where only the shared-
+    shingle rule keeps those pairs out."""
     c = (
         spark.read.parquet(f"{SF}/documents.parquet")
         .select("doc_id", "text")
@@ -59,20 +66,48 @@ def test_ngram_from_sets_matches_explode_form(spark):
         (F.col("doc_id") + 500000).alias("doc_id"),
         F.concat("text", F.lit(" tail")).alias("text"),
     )
-    corpus = c.unionByName(near)
-    sigs = dedup.minhash_signatures(corpus, "text", "doc_id", 16, 5)
-    cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4).localCheckpoint()
-    old = dedup.ngram_jaccard_pairs(
-        corpus, "text", "doc_id", 5, 0.5, candidates=cands,
-        restrict_candidates=False,
+    base = c.unionByName(near)
+    odd = spark.createDataFrame(
+        [
+            (900001, None),
+            (900002, ""),
+            (900003, "two words"),
+            (900004, "six words that share no shingle"),
+        ],
+        "doc_id long, text string",
+    )
+    corpus = base.unionByName(odd)
+    sigs = dedup.minhash_signatures(base, "text", "doc_id", 16, 5)
+    # (NULL, empty) share the one shingle "" (Jaccard 1.0); the other
+    # two odd pairs share none
+    odd_pairs = spark.createDataFrame(
+        [(900001, 900002), (900002, 900003), (900003, 900004)],
+        "id_a long, id_b long",
+    )
+    cands = (
+        dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
+        .unionByName(odd_pairs)
+        .distinct()
+        .localCheckpoint()
     )
     sets = dedup.shingle_sets(corpus, "text", "doc_id", 5)
-    new = dedup.ngram_jaccard_from_sets(sets, cands, "doc_id", 0.5)
-    assert new.columns == old.columns
-    assert [f.dataType for f in new.schema.fields] == [
-        f.dataType for f in old.schema.fields
-    ]
-    assert _rows(new) == _rows(old)
+    for t in (0.5, 0.0):
+        ref = dedup.ngram_jaccard_pairs(corpus, "text", "doc_id", 5, t).join(
+            cands, ["id_a", "id_b"], "left_semi"
+        )
+        want = _rows(ref)
+        assert (900001, 900002, 1, 1.0) in want
+        for new in (
+            dedup.ngram_jaccard_from_sets(sets, cands, "doc_id", t),
+            dedup.ngram_jaccard_pairs(
+                corpus, "text", "doc_id", 5, t, candidates=cands
+            ),
+        ):
+            assert new.columns == ref.columns
+            assert [f.dataType for f in new.schema.fields] == [
+                f.dataType for f in ref.schema.fields
+            ]
+            assert _rows(new) == want, t
 
 
 def test_minhash_from_shingles_matches_text_form(spark):

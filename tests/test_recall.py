@@ -95,29 +95,6 @@ def test_candidate_output_grows_linearly_not_quadratically(spark):
     assert 2.5 <= ratio <= 7.0, f"pair growth {ratio:.1f}x on 4x data ({counts})"
 
 
-def test_ngram_restrict_candidates_is_pure_optimization(spark):
-    """restrict_candidates=True must return EXACTLY the rows of the
-    default lazy form — it is a shuffle-size optimization (semi-join
-    below the explode), never a semantics change."""
-    docs = synth_documents(spark, 1500, dup_frac=0.10).cache()
-    sigs = dedup.minhash_signatures(docs, "text", "doc_id", 16, 5)
-    cands = dedup.lsh_candidate_pairs(sigs, "doc_id", 16, 4)
-    plain = {
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", 5, 0.5, cands
-        ).collect()
-    }
-    restricted = {
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", 5, 0.5, cands, restrict_candidates=True
-        ).collect()
-    }
-    docs.unpersist()
-    assert plain == restricted and len(plain) > 50
-
-
 def _mean_assigned_cosine(spark, vecs, centroids) -> float:
     """The spherical k-means objective: mean cosine between each vector
     and its assigned (nearest) centroid — higher is a better cell

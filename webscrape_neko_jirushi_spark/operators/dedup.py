@@ -15,8 +15,10 @@ Here:
                            min (MinHash), all builtin HOFs — no Python
 - ``lsh_candidate_pairs``  band-bucket self-join -> candidate pairs
 - ``simhash64``            64-bit SimHash from token hashes
-- ``ngram_jaccard_pairs``  exact n-gram Jaccard via shingle explode +
-                           self-join (the verify stage after LSH)
+- ``ngram_jaccard_pairs``  exact n-gram Jaccard: LSH candidates verified
+                           over per-doc shingle arrays (the verify stage
+                           after LSH); without candidates the shingle
+                           explode + self-join finds the pairs
 - ``embedding_near_dups``  cosine >= tau pairs via normalized dot product
 
 Scale notes: shingle explode shuffles O(docs * shingles) rows but each
@@ -137,9 +139,11 @@ def shingle_sets(
     ``(id, shs array<string>, n_sh)``. The shared upstream of the exact
     verify family — one shingling pass feeds BOTH the MinHash
     signatures (min over distinct shingles == min over all shingles;
-    duplicates cannot change a min) and the array-intersect verify
-    (:func:`ngram_jaccard_from_sets`), where the row-explode form
-    computes shingles once per consumer."""
+    duplicates cannot change a min) and the array-intersect verify of
+    candidate pairs (:func:`ngram_jaccard_from_sets`,
+    :func:`ngram_jaccard_pairs` and :func:`containment_pairs` with
+    ``candidates``), where the row-explode form computes shingles once
+    per consumer."""
     return with_shingles(df, text_col, id_col, k).select(
         F.col(id_col), F.array_distinct(F.col("sh")).alias("shs")
     ).withColumn("n_sh", F.size("shs"))
@@ -642,50 +646,109 @@ def simhash_signatures(
     return counted.select(F.col(id_col), sim.alias("simhash"))
 
 
-def _candidate_restricted_base(
-    df: DataFrame,
-    id_col: str,
-    candidates: DataFrame | None,
-    restrict_candidates: bool | None,
-    auto_threshold: int,
-    n_docs: int | None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Shared below-the-explode candidate restriction for the exact
-    shingle-verify family (``ngram_jaccard_pairs``,
-    ``containment_pairs``): semi-join the BASE table to the candidate
-    id set so the shingle explode+distinct — the family's largest
-    shuffle — touches only candidate docs. Exactness untouched:
-    per-doc shingle SETS stay intact for every retained doc, and
-    non-candidate docs cannot survive the candidate-keyed verify
-    equi-joins anyway. ``restrict_candidates=None`` auto-selects via
-    ``n_docs`` (zero jobs) or a LIMIT-bounded count probe; see
-    ``ngram_jaccard_pairs``' docstring for the measured trade."""
-    if candidates is None:
-        return df, None
-    if restrict_candidates is None:
-        if n_docs is not None:
-            restrict_candidates = n_docs > auto_threshold
-        else:
-            restrict_candidates = (
-                df.select(id_col).limit(auto_threshold + 1).count() > auto_threshold
-            )
-    if not restrict_candidates:
-        return df, candidates
-    candidates = candidates.select("id_a", "id_b").localCheckpoint(eager=True)
-    # broadcast hint: the id set is 8 bytes/id (fits executor
-    # memory up to ~10^8-10^9 candidate docs — far beyond any
-    # corpus whose verify stage is tractable at all), and without
-    # it Catalyst sort-merge-joins the semi — i.e. shuffles the
-    # full base table WITH text by id, which is the exact shuffle
-    # this restriction exists to avoid (AQE does not convert here:
-    # the build side hides behind an explode+distinct stage whose
-    # size estimate never updates the join strategy in time).
-    cand_ids = F.broadcast(
-        candidates.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
+def _overlap_from_sets(
+    sets: DataFrame, candidates: DataFrame, id_col: str
+) -> DataFrame:
+    """Shingle overlap of candidate pairs over DISTINCT shingle sets
+    (:func:`shingle_sets`): ``(id_a, id_b, n_common, n_a, n_b)``.
+    Each pair is hydrated with its two shingle ARRAYS (two equi-joins
+    by id) and intersected per pair with the codegen builtin
+    ``array_intersect`` — whole-set overlap per record pair, the
+    LCJoin shape, instead of joining shingle rows. Pairs that share no
+    shingle are dropped, as the shingle equi-join of
+    :func:`_shingle_overlap` never produces them (this matters only at
+    a threshold of 0).
+
+    Per-pair cost is O(|A|+|B|) as in the row form, but each doc's set
+    moves once per side as one array cell: two exchanges instead of
+    the row form's five (explode -> distinct -> join by id -> join by
+    (id, shingle) -> count), and no shingle-row blowup between them.
+
+    No join hint: the statistics of ``sets`` choose each hydration
+    join — a broadcast of the set table while it fits under
+    ``autoBroadcastJoinThreshold`` (0.85 MB at sf0.1), a shuffle of
+    the candidates by id above it."""
+    sa = sets.select(
+        F.col(id_col).alias("id_a"),
+        F.col("shs").alias("_sh_a"),
+        F.col("n_sh").cast("long").alias("n_a"),
     )
-    return df.join(cand_ids, id_col, "left_semi"), candidates
+    sb = sets.select(
+        F.col(id_col).alias("id_b"),
+        F.col("shs").alias("_sh_b"),
+        F.col("n_sh").cast("long").alias("n_b"),
+    )
+    return (
+        candidates.select("id_a", "id_b")
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("_sh_a", "_sh_b"))
+            .cast("long")
+            .alias("n_common"),
+            "n_a",
+            "n_b",
+        )
+        .filter(F.col("n_common") > 0)
+    )
+
+
+def _shingle_overlap(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    candidates: DataFrame | None,
+) -> DataFrame:
+    """``(id_a, id_b, n_common, n_a, n_b)`` for the pairs that share at
+    least one distinct word k-shingle — the core of the exact verify
+    family (:func:`ngram_jaccard_pairs`, :func:`containment_pairs`).
+
+    With ``candidates`` the pairs are the candidate pairs, verified over
+    lazy :func:`shingle_sets` (:func:`_overlap_from_sets`). Without,
+    the distinct shingle rows are exploded and self-joined on the
+    shingle (``id_a < id_b``): that equi-join is what finds the pairs,
+    which arrays cannot."""
+    if candidates is not None:
+        return _overlap_from_sets(
+            shingle_sets(df, text_col, id_col, k), candidates, id_col
+        )
+    ex = (
+        with_shingles(df, text_col, id_col, k)
+        .select(F.col(id_col), F.explode("sh").alias("sh"))
+        .distinct()
+    )
+    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    a = ex.alias("a")
+    b = ex.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.sh") == F.col("b.sh"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .agg(F.count("*").alias("n_common"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def _jaccard_pairs(overlap: DataFrame, min_jaccard: float) -> DataFrame:
+    return (
+        overlap.withColumn(
+            "jaccard",
+            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("id_a", "id_b", "n_common", "jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -695,90 +758,17 @@ def ngram_jaccard_pairs(
     k: int = 5,
     min_jaccard: float = 0.5,
     candidates: DataFrame | None = None,
-    restrict_candidates: bool | None = None,
-    auto_threshold: int = 100_000,
-    n_docs: int | None = None,
 ) -> DataFrame:
-    """Exact shingle-set Jaccard: explode distinct shingles, self-join on
-    shingle, |A∩B| per pair, |A|+|B| from per-doc counts. ``candidates``
-    (from LSH) bounds the pair space at scale.
-
-    ``restrict_candidates=True`` additionally semi-joins the BASE table
-    to the candidate id set BELOW the explode, shrinking the shingle
-    explode+distinct — the family's largest shuffle — to the candidate
-    docs (exactness untouched: per-doc shingle SETS stay intact for
-    every retained doc, absent docs cannot survive the verify
-    equi-joins anyway). Measured on the 100x scale corpus: 21.6M ->
-    3.5M rows into the distinct (16.4% of docs are candidates), 100x
-    time growth 13.6x -> 8.2x. The trade: the candidate pairs must be
-    materialized first (one localCheckpoint, or the candidate pipeline
-    would execute twice for its two consumers), which SERIALIZES the
-    candidate stage against the shingle stage — an under-utilized
-    local cluster runs those independent stages CONCURRENTLY in the
-    lazy single-DAG form, so on dense corpora (candidate fraction near
-    1, e.g. the sf-table driver corpus with a planted dup per doc) the
-    restriction measures ~40% slower while doing no extra work. Enable
-    it when candidate density is low — the web-scale norm, where total
-    work shrinks by the candidate-doc fraction and a saturated cluster
-    gains nothing from stage concurrency; leave it off for dense or
-    interactively-sized corpora.
-
-    Default ``None`` AUTO-SELECTS with the same LIMIT-bounded probe as
-    ``reorganize.renumber_groups``: above ``auto_threshold`` base rows
-    (where the distinct's shuffle dwarfs any concurrency effect and
-    corpora are past interactive size) the restriction turns on; below
-    it the lazy single-DAG form wins. The probe is one column-pruned
-    count job over the base plan AT CONSTRUCTION TIME — plan-only
-    consumers pay it too, and above the threshold the restriction's
-    localCheckpoint additionally materializes the candidate pipeline
-    when the DataFrame is built. Callers whose base is an expensive
-    DAG, or who only want the plan, should pass the flag explicitly —
-    or supply ``n_docs`` (an upper-bound row-count hint): the auto
-    gate then resolves from the hint with ZERO construction-time jobs
-    (a caller loading a known table already has the count)."""
-    base, candidates = _candidate_restricted_base(
-        df, id_col, candidates, restrict_candidates, auto_threshold, n_docs
-    )
-    ex = (
-        with_shingles(base, text_col, id_col, k)
-        .select(F.col(id_col), F.explode("sh").alias("sh"))
-        .distinct()
-    )
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    if candidates is not None:
-        # Candidate-driven intersection: two equi-joins keyed by the
-        # candidate pair ids, so the shingle join touches ONLY candidate
-        # pairs — never the full O(n^2) shingle self-join. Catalyst
-        # cannot push a post-hoc semi-join below the self-join, so the
-        # restriction has to be structural.
-        ex_a = ex.select(F.col(id_col).alias("id_a"), "sh")
-        ex_b = ex.select(F.col(id_col).alias("id_b"), "sh")
-        inter = (
-            candidates.select("id_a", "id_b")
-            .join(ex_a, "id_a")
-            .join(ex_b, ["id_b", "sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-    else:
-        a = ex.alias("a")
-        b = ex.alias("b")
-        inter = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-            .agg(F.count("*").alias("n_common"))
-        )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "n_common", "jaccard")
+    """Exact word k-shingle Jaccard |A∩B| / (|A|+|B|-|A∩B|) over
+    distinct shingle sets: ``(id_a, id_b, n_common, jaccard)`` for the
+    pairs at or above ``min_jaccard``. ``candidates`` (``id_a, id_b``,
+    e.g. from LSH) bounds the pair space at scale and is verified over
+    per-doc shingle arrays; without it the shingle self-join finds the
+    pairs (``id_a < id_b``). See :func:`_shingle_overlap`. Builds a
+    plan only: no job runs until the result is executed. ``id_col``
+    must be unique."""
+    return _jaccard_pairs(
+        _shingle_overlap(df, text_col, id_col, k, candidates), min_jaccard
     )
 
 
@@ -789,53 +779,12 @@ def ngram_jaccard_from_sets(
     min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Candidate-pair exact Jaccard verify over pre-built DISTINCT
-    shingle sets (:func:`shingle_sets`): hydrate each candidate pair
-    with its two shingle ARRAYS (two equi-joins by id) and intersect
-    per pair with the codegen builtin ``array_intersect`` —
-    |A∩B| / (|A|+|B|-|A∩B|), identical values to the explode/self-join
-    form in :func:`ngram_jaccard_pairs` (``array_intersect``
-    deduplicates, the arrays already are distinct, and the division is
-    the same long/long -> double).
-
-    WHY this form for candidate-driven verifies: the explode form
-    shuffles every candidate doc's shingle ROWS once per join stage
-    (explode -> distinct -> join by id -> join by (id, shingle) ->
-    count), five exchanges deep; this form moves each doc's set ONCE
-    per side as a single array cell and does the intersection
-    in-task — per-pair cost O(|A|+|B|) either way, but with two
-    exchanges instead of five and no shingle-row blowup between them.
-    The explode form remains the right shape WITHOUT candidates
-    (its shingle equi-join discovers pairs; arrays cannot).
-
-    No join hint: pass ``sets`` checkpointed (the driver query does,
-    since the signatures read it too) and its statistics choose each
-    hydration join — a broadcast of the set table while it fits
-    under ``autoBroadcastJoinThreshold`` (0.85 MB at sf0.1), a
-    shuffle of the candidates by id above it."""
-    sa = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("shs").alias("_sh_a"),
-        F.col("n_sh").alias("_n_a"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("shs").alias("_sh_b"),
-        F.col("n_sh").alias("_n_b"),
-    )
-    return (
-        candidates.select("id_a", "id_b")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "n_common", F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("_n_a") + F.col("_n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "n_common", "jaccard")
-    )
+    shingle sets (:func:`shingle_sets`): the candidate path of
+    :func:`ngram_jaccard_pairs` for a caller that already holds the
+    sets — the driver query checkpoints them, since its MinHash
+    signatures read them too, and the checkpoint's statistics choose
+    each hydration join (:func:`_overlap_from_sets`)."""
+    return _jaccard_pairs(_overlap_from_sets(sets, candidates, id_col), min_jaccard)
 
 
 def containment_pairs(
@@ -845,9 +794,6 @@ def containment_pairs(
     k: int = 5,
     min_containment: float = 0.8,
     candidates: DataFrame | None = None,
-    restrict_candidates: bool | None = None,
-    auto_threshold: int = 100_000,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Asymmetric near-duplication: shingle-set CONTAINMENT
     ``c(A in B) = |A ∩ B| / |A|`` — the quote/superset detector
@@ -859,68 +805,24 @@ def containment_pairs(
     syndicated excerpts, quote farms, and documents subsumed by
     longer revisions.
 
-    Output: one row per unordered pair ``(id_a < id_b)`` with
-    ``n_common``, both set sizes, both directed containments, and the
-    pair kept when EITHER direction clears ``min_containment``.
+    Output: one row per pair with ``n_common``, both set sizes, both
+    directed containments, and the pair kept when EITHER direction
+    clears ``min_containment``. Same overlap core as
+    :func:`ngram_jaccard_pairs` (:func:`_shingle_overlap`); only the
+    final ratio differs. ``id_col`` must be unique.
 
-    Execution shape: identical skeleton to ``ngram_jaccard_pairs``
-    (ONE shingle explode+distinct, per-doc sizes re-aggregated from
-    the same exploded table, intersection via the shingle equi-join)
-    — only the final ratio differs, so every measured property of
-    that plan carries over, INCLUDING the below-the-explode candidate
-    restriction (``restrict_candidates`` / ``n_docs`` — same
-    ``_candidate_restricted_base`` helper, same auto gate; exact for
-    the same reason: restricting the base to candidate docs leaves
-    every retained doc's shingle set — hence ``n_a``/``n_b`` and both
-    containments — intact). ``candidates`` bounds the pair space at scale;
-    note the candidate SOURCE must be containment-aware — Jaccard-LSH
-    bands under-recall asymmetric pairs BY DESIGN, so feed pairs from
-    a shared-gram index (``substrings.duplicated_kgram_spans``), a
-    one-sided min-k gram sample of the smaller side, or a low-band
-    LSH; the exact verify here is agnostic to where pairs came from.
-    Without candidates the shingle self-join is exact and fine up to
-    ~10^5 docs (the ngram_jaccard contract)."""
-    base, candidates = _candidate_restricted_base(
-        df, id_col, candidates, restrict_candidates, auto_threshold, n_docs
-    )
-    ex = (
-        with_shingles(base, text_col, id_col, k)
-        .select(F.col(id_col), F.explode("sh").alias("sh"))
-        .distinct()
-    )
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    if candidates is not None:
-        ex_a = ex.select(F.col(id_col).alias("id_a"), "sh")
-        ex_b = ex.select(F.col(id_col).alias("id_b"), "sh")
-        inter = (
-            candidates.select("id_a", "id_b")
-            .join(ex_a, "id_a")
-            .join(ex_b, ["id_b", "sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-    else:
-        a = ex.alias("a")
-        b = ex.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.sh") == F.col("b.sh"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    ``candidates`` bounds the pair space at scale; note the candidate
+    SOURCE must be containment-aware — Jaccard-LSH bands under-recall
+    asymmetric pairs BY DESIGN, so feed pairs from a shared-gram index
+    (``substrings.duplicated_kgram_spans``), a one-sided min-k gram
+    sample of the smaller side, or a low-band LSH; the exact verify
+    here is agnostic to where pairs came from. Without candidates the
+    shingle self-join is exact and fine up to ~10^5 docs (the
+    ngram_jaccard contract)."""
     c_ab = F.col("n_common") / F.col("n_a")
     c_ba = F.col("n_common") / F.col("n_b")
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, k, candidates)
         .withColumn("containment_a_in_b", c_ab)
         .withColumn("containment_b_in_a", c_ba)
         .filter(

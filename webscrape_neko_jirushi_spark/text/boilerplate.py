@@ -78,25 +78,20 @@ def strip_boilerplate(
     keys: DataFrame,
     host_col: str = "host",
     text_col: str = "text",
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Remove spans whose (host, md5(text)) is flagged in ``keys``
     (the ``boilerplate_keys`` output). Left anti equi-join on the
     constant-size key pair. The flagged side is ~tens of rows per
     host (chrome is by definition few distinct spans), but it is
     aggregate-derived so Catalyst's size estimate won't pick the
-    broadcast on its own — hint it explicitly by default (no size
-    probe: the constructor stays a pure plan builder). Pass
-    ``broadcast_keys=False`` when the host population is large
-    enough that hosts × chrome spans exceeds executor memory
-    (~10⁷ hosts); the anti-join then shuffles on the same keys and
-    AQE handles the residual skew — span bodies never shuffle more
-    than once either way."""
-    flagged = keys.filter(F.col("is_boilerplate")).select(
-        F.col("host").alias("_bh"), F.col("span_md5").alias("_bk")
+    broadcast on its own — hence the explicit hint (no size probe: the
+    constructor stays a pure plan builder), so span bodies never
+    shuffle."""
+    flagged = F.broadcast(
+        keys.filter(F.col("is_boilerplate")).select(
+            F.col("host").alias("_bh"), F.col("span_md5").alias("_bk")
+        )
     )
-    if broadcast_keys:
-        flagged = F.broadcast(flagged)
     withkey = spans.withColumn("_k", F.md5(F.col(text_col)))
     return (
         withkey.join(

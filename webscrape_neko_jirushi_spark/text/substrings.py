@@ -424,7 +424,6 @@ def contamination_stats(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination — the eval-set twin of
     ``substr_dup_ratio``: per training document, how many of its
@@ -436,21 +435,16 @@ def contamination_stats(
     same k-gram inversion both dedup ops use).
 
     The benchmark side reduces to DISTINCT gram hashes and is
-    ``broadcast`` by default — eval sets are thousands of documents,
-    so the right plan is a map-side semi-join against the corpus scan
-    (no shuffle of the 100-TB side); pass
-    ``broadcast_benchmark=False`` if the "benchmark" is itself
-    corpus-sized (the plan degrades to a hash-keyed shuffle
-    semi-join, which is what that case needs). 60-bit collisions only
+    ``broadcast`` — eval sets are thousands of documents, so the right
+    plan is a map-side semi-join against the corpus scan (no shuffle
+    of the 100-TB side). 60-bit collisions only
     ever OVER-count contamination — the safe direction for a
     hygiene filter."""
     spans = kgram_spans(documents, k, text_col, id_col)
     bench = kgram_spans(benchmark, k, text_col, id_col).select(
         "gram_hash"
     ).distinct()
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    hits = spans.join(bench, "gram_hash", "left_semi")
+    hits = spans.join(F.broadcast(bench), "gram_hash", "left_semi")
     per_doc = spans.groupBy(id_col).agg(F.count("*").alias("n_grams"))
     hit_per_doc = hits.groupBy(id_col).agg(
         F.count("*").alias("n_contaminated")
